@@ -183,6 +183,18 @@ object Dedup {
       bCol: String): DataFrame =
     connectedComponents(pairs, aCol, bCol, maxIter = 64)
 
+  /** `df`'s rows behind a leaf plan (an existing-RDD scan). A frame that
+    * a plan references twice is printed, analyzed and planned twice, and a
+    * cached one carries its whole cached plan each time — so composing
+    * such plans (rounds of a loop, days of the incremental dedup)
+    * multiplies the plan tree and the explain string Spark renders for
+    * every action. The RDD DAG shares nodes (it is a DAG, not a tree) and
+    * recompute stops at persisted blocks, so this is purely a
+    * planner-cost reset: the data is not recomputed.
+    */
+  private def planLeaf(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.rdd, df.schema)
+
   /** [[connectedComponents]] plus (rounds used, converged) — the suite
     * pins the O(log diameter) bound through this.
     */
@@ -242,14 +254,11 @@ object Dedup {
       changed = proposed.filter(col("component") =!= col("old")).count()
       backing.unpersist(blocking = false) // proposed is materialized
       backing = proposed
-      // rebuild from the persisted RDD to RESET the Catalyst plan: the
-      // round's plan embeds the previous labels twice (directly and via
-      // msgs), so chaining DataFrames doubles the plan tree every round —
-      // analysis time goes exponential while the data stays tiny. The RDD
-      // DAG shares nodes (it's a DAG, not a tree) and recompute stops at
-      // the persisted blocks, so this is purely a planner-cost reset.
-      val slim = proposed.select("id", "component")
-      labels = proposed.sparkSession.createDataFrame(slim.rdd, slim.schema)
+      // the round's plan embeds the previous labels twice (directly and
+      // via msgs), so chaining DataFrames would double the plan tree every
+      // round — analysis time goes exponential while the data stays tiny;
+      // planLeaf resets it
+      labels = planLeaf(proposed.select("id", "component"))
       iter += 1
     }
     val converged = changed == 0
@@ -505,6 +514,11 @@ object Dedup {
       shingleSize: Int,
       threshold: Double): DataFrame = {
     import org.apache.spark.sql.graft.ShingleHashesFn.shingle_hashes
+    // the semi-join and the intersection below both read the pairs; read
+    // through the caller's cached lineage, day 2 of the incremental loop
+    // would nest day 1's survivors -> verified -> candidates chain twice
+    // over (see planLeaf)
+    val cands = planLeaf(pairs.select("doc_a", "doc_b"))
     // candidate-bounded index (r16): only docs that appear in a candidate
     // pair are re-tokenized and shingled — the semi-join keeps the
     // verification cost proportional to the candidate count (the contract
@@ -512,7 +526,7 @@ object Dedup {
     // corpus-linear no matter how few candidates banding proposed. At
     // 100 TB this is the difference between re-shingling the corpus and
     // touching only the near-dup neighborhoods.
-    val candIds = pairs
+    val candIds = cands
       .select(explode(array(col("doc_a"), col("doc_b"))).as(idCol))
       .distinct()
     val sh = df.join(candIds, Seq(idCol), "left_semi").select(
@@ -520,7 +534,7 @@ object Dedup {
       explode(shingle_hashes(tokens(col(textCol)), shingleSize)).as("s"))
     sh.persist()
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
-    val inter = pairs
+    val inter = cands
       .join(sh.as("va"), col("doc_a") === col("va.id"))
       .join(sh.as("vb"),
         col("doc_b") === col("vb.id") && col("va.s") === col("vb.s"))

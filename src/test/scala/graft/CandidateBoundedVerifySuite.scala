@@ -2,6 +2,10 @@ package graft
 
 import graft.pipeline.{Decontaminate, Dedup}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.execution.RDDScanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 /** Pins the r16 candidate-bounded verification: the exact-Jaccard verify
@@ -67,6 +71,19 @@ class CandidateBoundedVerifySuite extends SparkSpec {
     val plan = verified.queryExecution.executedPlan.toString
     assert(plan.contains("LeftSemi"),
       s"verify-side corpus scan is no longer candidate-pruned:\n$plan")
+    // and the semi-join's candidate side is the leaf the verify stage
+    // rebuilds the pairs as (an existing-RDD scan), not the cached
+    // candidate lineage, which would nest every earlier stage's plan
+    val semiJoins = PlanTrees.nodes(verified.queryExecution.executedPlan).collect {
+      case j: BaseJoinExec if j.joinType == LeftSemi => j
+    }.toList
+    assert(semiJoins.nonEmpty)
+    semiJoins.foreach { j =>
+      val candSide = PlanTrees.nodes(j.right).toList
+      assert(candSide.exists(_.isInstanceOf[RDDScanExec]) &&
+        !candSide.exists(_.isInstanceOf[InMemoryTableScanExec]),
+        s"semi-join candidate side is not the leaf pair scan:\n${j.right}")
+    }
     verified.unpersist(blocking = false)
   }
 

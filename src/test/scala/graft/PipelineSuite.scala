@@ -288,6 +288,41 @@ class PipelineSuite extends SparkSpec {
     assert(viaExtended === Set(5L, 6L, 7L, 8L, 9L))
   }
 
+  test("two-day incremental loop: day 2's plan nests no deeper than day 1's") {
+    // a cached frame's plan carries its whole cached plan, so a day that
+    // embeds the previous day's cached survivors -> verified -> candidates
+    // chain grows the plan (and the explain string Spark renders for every
+    // action) with each day the loop runs. Day 2 runs the same operators
+    // as day 1, so only an embedded earlier day can nest its caches deeper.
+    // The rendered plan string is capped for the test's length so that a
+    // nested plan fails the depth assertion instead of exhausting the heap.
+    val capKey = "spark.sql.maxPlanStringLength"
+    val cap = spark.conf.getOption(capKey)
+    spark.conf.set(capKey, "1m")
+    try {
+      val corpus0 = docs.filter(col("doc_id") >= 10 && col("doc_id") < 1000)
+      val batch1 = docs.filter(col("doc_id") < 5 || (col("doc_id") >= 1000 && col("doc_id") < 1005))
+      val batch2 = docs.filter((col("doc_id") >= 5 && col("doc_id") < 10) || col("doc_id") >= 1005)
+      val nh = 16
+      val nb = 4
+
+      val art0 = Dedup.bandedCorpusArtifact(corpus0, "doc_id", "text", nh, nb)
+      val surv1 = Dedup.incrementalDedupSurvivors(corpus0, batch1, "doc_id", "text",
+        numHashes = nh, bands = nb, corpusBanded = Some(art0))
+      val depth1 = PlanTrees.cacheDepth(surv1.queryExecution.withCachedData)
+      val surv1Ids = surv1.select("doc_id").collect().map(_.getLong(0))
+      val corpus1 = corpus0.unionByName(docs.filter(col("doc_id").isin(surv1Ids.toSeq: _*)))
+      val art1 = Dedup.extendCorpusArtifact(art0, surv1, "doc_id", "text", nh, nb)
+      val surv2 = Dedup.incrementalDedupSurvivors(corpus1, batch2, "doc_id", "text",
+        numHashes = nh, bands = nb, corpusBanded = Some(art1))
+      val depth2 = PlanTrees.cacheDepth(surv2.queryExecution.withCachedData)
+      surv2.unpersist(blocking = false)
+      surv1.unpersist(blocking = false)
+      assert(depth1 > 0)
+      assert(depth2 === depth1, "day 2's cached plan embeds an earlier day's")
+    } finally cap.fold(spark.conf.unset(capKey))(spark.conf.set(capKey, _))
+  }
+
   test("connectedComponentsAuto converges a diameter-2^7 chain within its cap") {
     val s = spark
     import s.implicits._
