@@ -13,10 +13,7 @@ import org.apache.spark.ml.param.shared.{
 }
 import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.json4s.DefaultFormats
 import org.json4s.JsonDSL._
 
@@ -42,9 +39,9 @@ private[graft] trait BoostingClassifierParams
 }
 
 /** SAMME / SAMME.R AdaBoost meta-classifier (reference:
-  * classification/BoostingClassifier.scala:135-282). Same DataFrame-native
-  * loop shape as BoostingRegressor: boost weights are a column, the
-  * per-iteration error is one partial-aggregated sum.
+  * classification/BoostingClassifier.scala:135-282). Same loop shape as
+  * BoostingRegressor over an [[AdaBoostLearner]]: the per-iteration error
+  * is one sum.
   */
 class BoostingClassifier(override val uid: String)
     extends ProbabilisticClassifier[Vector, BoostingClassifier, BoostingClassificationModel]
@@ -68,258 +65,68 @@ class BoostingClassifier(override val uid: String)
 
   private def trainImpl(dataset: Dataset[_], instr: Instrumentation): BoostingClassificationModel = {
     val numClasses = getNumClasses(dataset)
-    if ($(algorithm) == "real") {
+    val real = $(algorithm) == "real"
+    if (real) {
       require(
         $(baseLearner).isInstanceOf[ProbabilisticClassifier[_, _, _]],
         "SAMME.R requires a probabilistic base classifier")
     }
-    val instances = SubBagFit
-      .instances(
-        dataset, $(labelCol),
-        if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol))
-      .withColumn("__bw", col("weight"))
-    $(baseLearner) match {
+    val instances = SubBagFit.instances(
+      dataset, $(labelCol),
+      if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol))
+    val mispredicted = (p: Double, y: Double) => if (p != y) 1.0 else 0.0
+    val learner: AdaBoostLearner = $(baseLearner) match {
       case dt: org.apache.spark.ml.classification.DecisionTreeClassifier
           if $(nativeTreeFastPath) =>
-        return if ($(algorithm) == "discrete") trainNativeDT(instances, numClasses, dt)
-        else trainNativeSammeR(instances, numClasses, dt)
-      case _ => ()
+        val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
+        new BinnedAdaBoost(
+          instances, dt.getOldStrategy(categorical, numClasses), dt.getSeed,
+          $(checkpointInterval), mispredicted)
+      case base =>
+        new PredictorAdaBoost(
+          instances, base, $(checkpointInterval), mispredicted, withProbability = real)
     }
-    val loop = new IterLoopCache($(checkpointInterval))
-    var df = loop.next(instances)
-
     val models = ArrayBuffer.empty[EnsemblePredictionModelType]
     val modelWeights = ArrayBuffer.empty[Double]
+    def keep(model: EnsemblePredictionModelType, weight: Double): Unit = {
+      instr.logNamedValue("modelWeight", weight)
+      models += model
+      modelWeights += weight
+    }
     var i = 0
     var done = false
-    while (i < $(numBaseLearners) && !done) {
-      val sumW = df.agg(sum("__bw")).head().getDouble(0)
-      val weighted = df.withColumn("__bwn", col("__bw") / sumW)
-      val model = Learners.fit($(baseLearner), weighted, "label", "features", Some("__bwn"), weightRequired = true)
-      $(algorithm) match {
-        case "discrete" =>
-          val predicted = Learners.transform(model, weighted, "__pred")
-          predicted.persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            val err = predicted
-              .agg(sum(when(col("__pred") =!= col("label"), col("__bwn")).otherwise(0.0)))
-              .head().getDouble(0)
-            if (err <= 0.0) {
-              models += model
-              modelWeights += 1.0
-              done = true
-            } else if (err >= 1.0 - 1.0 / numClasses) {
-              // worse than random under the SAMME bound: keep only if first
-              if (models.isEmpty) { models += model; modelWeights += 1.0 }
-              done = true
-            } else {
-              val alpha = math.log((1.0 - err) / err) + math.log(numClasses - 1.0)
-              models += model
-              modelWeights += alpha
-              val updated = predicted
-                .withColumn(
-                  "__bw",
-                  when(col("__pred") =!= col("label"), col("__bw") * math.exp(alpha))
-                    .otherwise(col("__bw")))
-                .select("label", "weight", "features", "__bw")
-              df = loop.next(updated)
-            }
-          } finally predicted.unpersist()
-        case "real" =>
-          val prob = model.asInstanceOf[ProbabilisticClassificationModel[Vector, _]]
-          val pm = ParamMap(
-            prob.predictionCol.w("__pred"),
-            prob.rawPredictionCol.w("__raw"),
-            prob.probabilityCol.w("__prob"))
-          val predicted = prob.transform(weighted, pm)
-          predicted.persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            val k = numClasses
-            val factorUdf = udf { (label: Double, p: Vector) =>
-              // w *= exp(-(K-1)/K * sum_k code_k * log p_k),
-              // code = 1 at the true class, -1/(K-1) elsewhere
-              var s = 0.0
-              val li = label.toInt
-              var j = 0
-              while (j < k) {
-                val pj = math.max(p(j), EPSILON)
-                val code = if (j == li) 1.0 else -1.0 / (k - 1.0)
-                s += code * math.log(pj)
-                j += 1
-              }
-              math.exp(-(k - 1.0) / k * s)
-            }
-            models += model
-            modelWeights += 1.0
-            // reference stops once the round's classifier is perfect on the
-            // weighted sample (classification/BoostingClassifier.scala:203-212)
-            val err = predicted
-              .agg(sum(when(col("__pred") =!= col("label"), col("__bwn")).otherwise(0.0)))
-              .head().getDouble(0)
-            if (err <= 0.0) done = true
-            else {
-              val updated = predicted
-                .withColumn("__bw", col("__bw") * factorUdf(col("label"), col("__prob")))
-                .select("label", "weight", "features", "__bw")
-              df = loop.next(updated)
-            }
-          } finally predicted.unpersist()
+    try {
+      while (i < $(numBaseLearners) && !done) {
+        val model = learner.fit(i)
+        val err = learner.weightedError(identity)
+        instr.logNamedValue("estimatorError", err)
+        if (real) {
+          // SAMME.R: every model votes with weight 1; the reference stops
+          // once the round's classifier is perfect on the weighted sample
+          // (classification/BoostingClassifier.scala:203-212)
+          keep(model, 1.0)
+          if (err <= 0.0) done = true
+          else learner.reweightByProbability(BoostingClassifier.sammeRFactors(numClasses))
+        } else if (err <= 0.0) {
+          keep(model, 1.0)
+          done = true
+        } else if (err >= 1.0 - 1.0 / numClasses) {
+          // worse than random under the SAMME bound: keep only if first
+          if (models.isEmpty) keep(model, 1.0)
+          done = true
+        } else {
+          val alpha = math.log((1.0 - err) / err) + math.log(numClasses - 1.0)
+          keep(model, alpha)
+          val boost = math.exp(alpha)
+          learner.reweight(e => if (e > 0.0) boost else 1.0)
+        }
+        learner.endRound()
+        i += 1
       }
-      i += 1
-    }
-    loop.close()
+    } finally learner.close()
+    instr.logNamedValue("numRoundsKept", models.length.toLong)
     new BoostingClassificationModel(uid, numClasses, modelWeights.toArray, models.toArray)
       .setParent(this)
-  }
-
-  /** Native-tree fast path for discrete SAMME (see
-    * [[BoostingRegressor.trainNativeDT]] for the binning argument): one
-    * binning pass, per-round reweighting of the binned points, exact
-    * SAMME error/alpha recursion — misprediction via binned leaf lookup.
-    */
-  private def trainNativeDT(
-      instances: DataFrame,
-      numClasses: Int,
-      dtc: org.apache.spark.ml.classification.DecisionTreeClassifier): BoostingClassificationModel = {
-    import org.apache.spark.ml.classification.DecisionTreeClassificationModel
-    import org.apache.spark.rdd.RDD
-
-    val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
-    val boost = new NativeTreeBoost(
-      instances, dtc.getOldStrategy(categorical, numClasses), dtc.getSeed,
-      $(checkpointInterval))
-    try {
-      var bw: RDD[Double] = boost.initialWeights()
-      val models = ArrayBuffer.empty[EnsemblePredictionModelType]
-      val modelWeights = ArrayBuffer.empty[Double]
-      var i = 0
-      var done = false
-      while (i < $(numBaseLearners) && !done) {
-        val sw = NativeTreeBoost.orderedSum(bw)
-        val model = boost.fitRound(bw, sw, boost.dtSeed + i)
-          .asInstanceOf[DecisionTreeClassificationModel]
-
-        // (mispredicted flag via binned leaf lookup, normalized bw, raw bw)
-        val bcSplits = boost.bcSplits
-        val data = boost.treePoints.zip(bw).map { case (tp, w) =>
-          val pred = model.rootNode.predictBinned(tp.binnedFeatures, bcSplits.value).prediction
-          (pred != tp.label, w / sw, w)
-        }
-        data.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val err =
-            NativeTreeBoost.orderedSum(data.map { case (mis, bwn, _) => if (mis) bwn else 0.0 })
-          if (err <= 0.0) {
-            models += model
-            modelWeights += 1.0
-            done = true
-          } else if (err >= 1.0 - 1.0 / numClasses) {
-            if (models.isEmpty) {
-              models += model
-              modelWeights += 1.0
-            }
-            done = true
-          } else {
-            val alpha = math.log((1.0 - err) / err) + math.log(numClasses - 1.0)
-            models += model
-            modelWeights += alpha
-            bw = boost.advance(
-              data.map { case (mis, _, w) => if (mis) w * math.exp(alpha) else w })
-          }
-        } finally data.unpersist(blocking = false)
-        i += 1
-      }
-      new BoostingClassificationModel(uid, numClasses, modelWeights.toArray, models.toArray)
-        .setParent(this)
-    } finally boost.close()
-  }
-
-  /** Native-tree fast path for SAMME.R: same bin-once scaffold as the
-    * discrete path, but each round consumes the leaf's calibrated class
-    * probabilities (normalized `impurityStats` — exactly what
-    * `DecisionTreeClassificationModel.predictProbability` returns) through
-    * a binned leaf lookup, and applies Zhu et al.'s probability-coded
-    * weight recursion (reference:
-    * classification/BoostingClassifier.scala:198-230). All models get
-    * weight 1.0; boosting stops early when a round's tree is perfect on
-    * the weighted sample.
-    */
-  private def trainNativeSammeR(
-      instances: DataFrame,
-      numClasses: Int,
-      dtc: org.apache.spark.ml.classification.DecisionTreeClassifier): BoostingClassificationModel = {
-    import org.apache.spark.ml.classification.DecisionTreeClassificationModel
-    import org.apache.spark.rdd.RDD
-
-    val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
-    val boost = new NativeTreeBoost(
-      instances, dtc.getOldStrategy(categorical, numClasses), dtc.getSeed,
-      $(checkpointInterval))
-    try {
-      var bw: RDD[Double] = boost.initialWeights()
-      val models = ArrayBuffer.empty[EnsemblePredictionModelType]
-      val modelWeights = ArrayBuffer.empty[Double]
-      var i = 0
-      var done = false
-      while (i < $(numBaseLearners) && !done) {
-        val sw = NativeTreeBoost.orderedSum(bw)
-        val model = boost.fitRound(bw, sw, boost.dtSeed + i)
-          .asInstanceOf[DecisionTreeClassificationModel]
-        models += model
-        modelWeights += 1.0
-
-        val bcSplits = boost.bcSplits
-        val k = numClasses
-        // (normalized error contribution, next round's raw weight).
-        // The probability-coded score s(label) = Σ_j code_j·log(p_j) only
-        // depends on the LEAF and the label, so it is computed once per
-        // (leaf, label) in a per-partition identity cache instead of
-        // k logs + k divisions per ROW — trees have tens of leaves, rows
-        // are millions. Identity keying is safe here: within one task the
-        // deserialized tree is a single object graph, so equal leaves ARE
-        // the same reference. Expanded form of the score used below:
-        // s(li) = (k/(k-1))·log(p_li) − (Σ_j log p_j)/(k−1).
-        val data = boost.treePoints.zip(bw).mapPartitions { iter =>
-          val leafScores = new java.util.IdentityHashMap[AnyRef, Array[Double]]()
-          iter.map { case (tp, w) =>
-            val leaf = model.rootNode.predictBinned(tp.binnedFeatures, bcSplits.value)
-            var s = leafScores.get(leaf)
-            if (s == null) {
-              val stats = leaf.impurityStats.stats
-              var tot = 0.0
-              var j = 0
-              while (j < k) { tot += stats(j); j += 1 }
-              val logs = new Array[Double](k)
-              var sumLog = 0.0
-              j = 0
-              while (j < k) {
-                logs(j) = math.log(math.max(stats(j) / tot, EPSILON))
-                sumLog += logs(j)
-                j += 1
-              }
-              s = new Array[Double](k)
-              j = 0
-              while (j < k) {
-                s(j) = (k / (k - 1.0)) * logs(j) - sumLog / (k - 1.0)
-                j += 1
-              }
-              leafScores.put(leaf, s)
-            }
-            val errContrib = if (leaf.prediction != tp.label) w / sw else 0.0
-            (errContrib, w * math.exp(-(k - 1.0) / k * s(tp.label.toInt)))
-          }
-        }
-        data.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val err = NativeTreeBoost.orderedSum(data.map(_._1))
-          if (err <= 0.0) done = true
-          else bw = boost.advance(data.map(_._2))
-        } finally data.unpersist(blocking = false)
-        i += 1
-      }
-      new BoostingClassificationModel(uid, numClasses, modelWeights.toArray, models.toArray)
-        .setParent(this)
-    } finally boost.close()
   }
 
   override def copy(extra: ParamMap): BoostingClassifier = defaultCopy(extra)
@@ -328,6 +135,19 @@ class BoostingClassifier(override val uid: String)
 }
 
 object BoostingClassifier extends MLReadable[BoostingClassifier] {
+
+  /** SAMME.R's probability-coded weight factor for each possible label of
+    * a row with class probabilities `p` (Zhu et al. 2009; reference:
+    * classification/BoostingClassifier.scala:198-230): w *= exp(-(K-1)/K *
+    * s_y) with s_y = sum_j code_j log p_j, code = 1 at the true class and
+    * -1/(K-1) elsewhere, computed in the expanded form
+    * s_y = (K/(K-1)) log p_y - (sum_j log p_j)/(K-1).
+    */
+  private[graft] def sammeRFactors(k: Int)(p: Array[Double]): Array[Double] = {
+    val logs = p.map(pj => math.log(math.max(pj, EPSILON)))
+    val sumLog = logs.sum
+    logs.map(lj => math.exp(-(k - 1.0) / k * ((k / (k - 1.0)) * lj - sumLog / (k - 1.0))))
+  }
 
   private[graft] class Writer(instance: BoostingClassifier) extends MLWriter {
     override protected def saveImpl(path: String): Unit = {

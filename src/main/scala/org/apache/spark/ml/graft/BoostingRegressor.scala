@@ -14,7 +14,6 @@ import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.json4s.DefaultFormats
 import org.json4s.JsonDSL._
@@ -118,12 +117,11 @@ private[graft] trait BoostingRegressorParams
   setDefault(lossType -> "exponential", votingStrategy -> "median", checkpointInterval -> 10)
 }
 
-/** AdaBoost.R2 (Drucker 1997) meta-regressor. Spark-first shape: the
-  * per-row boost weight lives in a DataFrame column updated by codegen'd
-  * expressions; the three per-iteration reductions (sum of weights, max
-  * error, weighted loss) are DataFrame aggs with map-side partial
-  * aggregation (reference dataflow: regression/BoostingRegressor
-  * .scala:173-282, re-derived from the published algorithm).
+/** AdaBoost.R2 (Drucker 1997) meta-regressor: one training loop over an
+  * [[AdaBoostLearner]], whose three per-iteration reductions are the sum
+  * of weights, the max error and the weighted loss (reference dataflow:
+  * regression/BoostingRegressor.scala:173-282, re-derived from the
+  * published algorithm).
   */
 class BoostingRegressor(override val uid: String)
     extends Regressor[Vector, BoostingRegressor, BoostingRegressionModel]
@@ -147,146 +145,58 @@ class BoostingRegressor(override val uid: String)
   }
 
   private def trainImpl(dataset: Dataset[_], instr: Instrumentation): BoostingRegressionModel = {
-    val instances = SubBagFit
-      .instances(
-        dataset, $(labelCol),
-        if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol))
-      .withColumn("__bw", col("weight"))
-    $(baseLearner) match {
-      case dt: org.apache.spark.ml.regression.DecisionTreeRegressor
-          if $(nativeTreeFastPath) =>
-        return trainNativeDT(instances, dt)
-      case _ => ()
+    val instances = SubBagFit.instances(
+      dataset, $(labelCol),
+      if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol))
+    val absError = (p: Double, y: Double) => math.abs(p - y)
+    val learner: AdaBoostLearner = $(baseLearner) match {
+      case dt: org.apache.spark.ml.regression.DecisionTreeRegressor if $(nativeTreeFastPath) =>
+        val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
+        new BinnedAdaBoost(
+          instances, dt.getOldStrategy(categorical), dt.getSeed, $(checkpointInterval), absError)
+      case base =>
+        new PredictorAdaBoost(
+          instances, base, $(checkpointInterval), absError, withProbability = false)
     }
-    val loop = new IterLoopCache($(checkpointInterval))
-    var df = loop.next(instances)
-
     val models = ArrayBuffer.empty[EnsemblePredictionModelType]
     val modelWeights = ArrayBuffer.empty[Double]
+    def keep(model: EnsemblePredictionModelType, weight: Double): Unit = {
+      instr.logNamedValue("modelWeight", weight)
+      models += model
+      modelWeights += weight
+    }
     var i = 0
     var done = false
-    while (i < $(numBaseLearners) && !done) {
-      val sumW = df.agg(sum("__bw")).head().getDouble(0)
-      val weighted = df.withColumn("__bwn", col("__bw") / sumW)
-      val model = Learners.fit($(baseLearner), weighted, "label", "features", Some("__bwn"), weightRequired = true)
-      val predicted = Learners
-        .transform(model, weighted, "__pred")
-        .withColumn("__err", abs(col("__pred") - col("label")))
-      predicted.persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val maxError = predicted.agg(max("__err")).head().getDouble(0)
+    try {
+      while (i < $(numBaseLearners) && !done) {
+        val model = learner.fit(i)
+        val maxError = learner.maxError()
         if (maxError == 0.0) {
           // perfect fit: keep it with full confidence and stop early
-          models += model
-          modelWeights += 1.0
+          keep(model, 1.0)
           done = true
         } else {
-          val lossCol = $(lossType) match {
-            case "linear" => col("__err") / maxError
-            case "squared" => pow(col("__err") / maxError, 2)
-            case "exponential" => lit(1.0) - exp(-col("__err") / maxError)
-          }
-          val withLoss = predicted.withColumn("__loss", lossCol)
-          val estimatorError =
-            withLoss.agg(sum(col("__bwn") * col("__loss"))).head().getDouble(0)
+          val loss = BoostingRegressor.normalizedLoss($(lossType), maxError)
+          val estimatorError = learner.weightedError(loss)
+          instr.logNamedValue("estimatorError", estimatorError)
           if (estimatorError >= 0.5) {
             // boosting assumption broken: keep the model only if it is the
             // first (so the ensemble is non-empty, voting with full weight
             // like the classifier's degenerate case), then stop
-            if (models.isEmpty) {
-              models += model
-              modelWeights += 1.0
-            }
+            if (models.isEmpty) keep(model, 1.0)
             done = true
           } else {
             val beta = estimatorError / (1.0 - estimatorError)
-            models += model
-            modelWeights += math.log(1.0 / beta)
-            val updated = withLoss
-              .withColumn("__bw", col("__bw") * pow(lit(beta), lit(1.0) - col("__loss")))
-              .select("label", "weight", "features", "__bw")
-            df = loop.next(updated)
+            keep(model, math.log(1.0 / beta))
+            learner.reweight(e => StrictMath.pow(beta, 1.0 - loss(e)))
           }
         }
-      } finally predicted.unpersist()
-      i += 1
-    }
-    loop.close()
-    new BoostingRegressionModel(uid, modelWeights.toArray, models.toArray).setParent(this)
-  }
-
-  /** Native-tree fast path for AdaBoost.R2: bin features once, reweight
-    * the binned points per boosting round. The candidate split GRID is
-    * computed once from the feature values (the hist-gradient-boosting
-    * convention — LightGBM/XGBoost-hist bin once the same way); each
-    * round's tree still fits the EXACT current boost weights, which enter
-    * the induction through the TreePoint weights. The generic path
-    * recomputes weighted split candidates per round — a per-round
-    * threshold-grid refinement the fixed grid approximates, traded for
-    * removing numBaseLearners-1 full binning passes. The weight recursion
-    * (normalized loss, beta, log(1/beta) model weights, early-stop
-    * conditions) is identical to the generic loop line for line.
-    */
-  private def trainNativeDT(
-      instances: DataFrame,
-      dt: org.apache.spark.ml.regression.DecisionTreeRegressor): BoostingRegressionModel = {
-    import org.apache.spark.ml.regression.DecisionTreeRegressionModel
-    import org.apache.spark.rdd.RDD
-
-    val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
-    val boost = new NativeTreeBoost(
-      instances, dt.getOldStrategy(categorical), dt.getSeed, $(checkpointInterval))
-    try {
-      var bw: RDD[Double] = boost.initialWeights()
-      val models = ArrayBuffer.empty[EnsemblePredictionModelType]
-      val modelWeights = ArrayBuffer.empty[Double]
-      var i = 0
-      var done = false
-      while (i < $(numBaseLearners) && !done) {
-        val sw = NativeTreeBoost.orderedSum(bw)
-        val model = boost.fitRound(bw, sw, boost.dtSeed + i)
-          .asInstanceOf[DecisionTreeRegressionModel]
-
-        // (absolute error via binned prediction, normalized bw, raw bw)
-        val bcSplits = boost.bcSplits
-        val data = boost.treePoints.zip(bw).map { case (tp, w) =>
-          val pred = model.rootNode.predictBinned(tp.binnedFeatures, bcSplits.value).prediction
-          (math.abs(pred - tp.label), w / sw, w)
-        }
-        data.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val maxError = data.map(_._1).max()
-          if (maxError == 0.0) {
-            models += model
-            modelWeights += 1.0
-            done = true
-          } else {
-            val lossFn: Double => Double = $(lossType) match {
-              case "linear" => e => e / maxError
-              case "squared" => e => (e / maxError) * (e / maxError)
-              case "exponential" => e => 1.0 - math.exp(-e / maxError)
-            }
-            val estimatorError =
-              NativeTreeBoost.orderedSum(data.map { case (e, bwn, _) => bwn * lossFn(e) })
-            if (estimatorError >= 0.5) {
-              if (models.isEmpty) {
-                models += model
-                modelWeights += 1.0
-              }
-              done = true
-            } else {
-              val beta = estimatorError / (1.0 - estimatorError)
-              models += model
-              modelWeights += math.log(1.0 / beta)
-              bw = boost.advance(
-                data.map { case (e, _, w) => w * math.pow(beta, 1.0 - lossFn(e)) })
-            }
-          }
-        } finally data.unpersist(blocking = false)
+        learner.endRound()
         i += 1
       }
-      new BoostingRegressionModel(uid, modelWeights.toArray, models.toArray).setParent(this)
-    } finally boost.close()
+    } finally learner.close()
+    instr.logNamedValue("numRoundsKept", models.length.toLong)
+    new BoostingRegressionModel(uid, modelWeights.toArray, models.toArray).setParent(this)
   }
 
   override def copy(extra: ParamMap): BoostingRegressor = defaultCopy(extra)
@@ -295,6 +205,18 @@ class BoostingRegressor(override val uid: String)
 }
 
 object BoostingRegressor extends MLReadable[BoostingRegressor] {
+
+  /** AdaBoost.R2's normalized loss of a row's absolute error given the
+    * round's max error (reference: regression/BoostingRegressor.scala:97-106).
+    * `StrictMath.pow` and `math.exp` are what Spark's generated code calls
+    * for `pow` and `exp`, so results match the SQL form of the recursion.
+    */
+  private[graft] def normalizedLoss(lossType: String, maxError: Double): Double => Double =
+    lossType match {
+      case "linear" => e => e / maxError
+      case "squared" => e => StrictMath.pow(e / maxError, 2)
+      case "exponential" => e => 1.0 - math.exp(-e / maxError)
+    }
 
   private[graft] class Writer(instance: BoostingRegressor) extends MLWriter {
     override protected def saveImpl(path: String): Unit = {

@@ -17,6 +17,7 @@ import org.apache.spark.ml.param._
 import org.apache.spark.ml.param.shared.HasParallelism
 import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -57,8 +58,7 @@ private[graft] trait GBMClassifierParams
   * regressor per model dimension is fit to that component of the negative
   * gradient (concurrently, driver pool), and the joint step-size vector is
   * optimized by bound-constrained L-BFGS-B over a cached narrow projection.
-  * Model state (score vector f, encoded label) lives in array columns — no
-  * RDD.zip (SURVEY.md §7.0 decision 3).
+  * One training loop over a learner backend, as in [[GBMRegressor]].
   */
 class GBMClassifier(override val uid: String)
     extends ProbabilisticClassifier[Vector, GBMClassifier, GBMClassificationModel]
@@ -100,11 +100,10 @@ class GBMClassifier(override val uid: String)
     * practice vs ~20 L-BFGS-B objective passes. Falls back to
     * bound-constrained L-BFGS-B whenever the Newton path leaves the
     * interior of [0,inf)^K or the solve goes singular/non-finite, so the
-    * boundary semantics stay exactly the reference's. Shared by the
-    * generic and native-tree loops.
+    * boundary semantics stay exactly the reference's.
     */
   private def stepVectorSearch(
-      rdd: org.apache.spark.rdd.RDD[(Array[Double], Array[Double], Array[Double], Double)],
+      rdd: RDD[(Array[Double], Array[Double], Array[Double], Double)],
       lossB: GBMClassificationLoss,
       dim: Int): Array[Double] = {
     if (dim == 1 && lossB.isInstanceOf[HasHessian]) {
@@ -209,7 +208,7 @@ class GBMClassifier(override val uid: String)
     * exactly the reference's bound-constrained semantics.
     */
   private[graft] def newtonStepVector(
-      rdd: org.apache.spark.rdd.RDD[(Array[Double], Array[Double], Array[Double], Double)],
+      rdd: RDD[(Array[Double], Array[Double], Array[Double], Double)],
       loss: GBMClassificationLoss with HasFullHessian,
       dim: Int): Array[Double] = {
     val depth = $(aggregationDepth)
@@ -384,131 +383,163 @@ class GBMClassifier(override val uid: String)
         else priors.map(math.log)
     }
 
-    // same fast-path gate as GBMRegressor: bin-once is only valid when the
-    // instance weights (and so the weighted split candidates) are
-    // iteration-invariant — gradient updates, full feature space
-    $(baseLearner) match {
+    val learner: ClsLearner = $(baseLearner) match {
       case dt: org.apache.spark.ml.regression.DecisionTreeRegressor
-          if $(nativeTreeFastPath) && $(subspaceRatio) >= 1.0 &&
-            $(updates) == "gradient" =>
-        return trainNativeDT(instances, init, numClasses, gbmLoss, nf, hasVal, dt)
-      case _ => ()
+          if $(nativeTreeFastPath) && $(subspaceRatio) >= 1.0 && $(updates) == "gradient" =>
+        new BinnedClsLearner(instances, init, gbmLoss, hasVal, dt)
+      case _ => new PredictorClsLearner(instances, init, gbmLoss, nf)
     }
-
-    val lossB = gbmLoss
-    val encodeUdf = udf { (y: Double) => lossB.encodeLabel(y) }
-    val initLit = array(init.toIndexedSeq.map(lit(_)): _*)
-    val loop = new IterLoopCache($(checkpointInterval))
-    var df = loop.next(
-      instances
-        .withColumn("__yenc", encodeUdf(col("label")))
-        .withColumn("__f", initLit)
-        .select("label", "weight", "features", "__val", "__yenc", "__f"))
-
-    val models = ArrayBuffer.empty[Array[EnsemblePredictionModelType]]
-    val modelWeights = ArrayBuffer.empty[Array[Double]]
-    val subspaces = ArrayBuffer.empty[Array[Int]]
-    var bestValLoss = Double.PositiveInfinity
-    var badRounds = 0
+    val rounds = ArrayBuffer.empty[(Array[EnsemblePredictionModelType], Array[Double], Array[Int])]
+    val stop = new ValidationStop($(numRounds), $(validationTol))
     var i = 0
-    var done = false
-    val ec = getExecutionContext
+    try {
+      while (i < $(maxIter) && !stop.stopped) {
+        val indices = GraftUtils.subspace($(subspaceRatio), nf, $(seed) + i)
+        val dimModels = learner.fit(gbmLoss, indices, $(seed) + i)
+        // joint step-size vector over [0, inf)^dim
+        val stepVec =
+          if ($(optimizedWeights)) stepVectorSearch(learner.directions, gbmLoss, dim)
+          else Array.fill(dim)(1.0)
+        val w = stepVec.map(_ * $(learningRate))
+        instr.logNamedValue("stepSize", w)
+        rounds += ((dimModels, w, indices))
+        learner.advance(w)
+        if (hasVal) {
+          learner.validationLoss(gbmLoss).foreach { vloss =>
+            instr.logNamedValue("validationLoss", vloss)
+            stop.observe(vloss, rounds)
+          }
+        }
+        i += 1
+      }
+    } finally learner.close()
+    instr.logNamedValue("numRoundsKept", rounds.length.toLong)
+    new GBMClassificationModel(
+      uid, numClasses, init,
+      rounds.map(_._2).toArray, rounds.map(_._3).toArray, rounds.map(_._1).toArray)
+      .setParent(this)
+  }
 
-    while (i < $(maxIter) && !done) {
+  /** The learner side of one K-dim GBM iteration over (encoded label, f)
+    * rows, f being the running score vector: `fit` fits one base regressor
+    * per model dimension to that component of the negative gradient at f
+    * (rows sampled once with `sampleSeed` for all dimensions, features
+    * restricted to `indices`) and leaves (yenc, f, direction, weight) per
+    * training row in `directions` for the step search; `advance` moves
+    * every row (train and validation) to f + w o direction. `close` always
+    * runs.
+    */
+  private trait ClsLearner {
+    def fit(
+        loss: GBMClassificationLoss,
+        indices: Array[Int],
+        sampleSeed: Long): Array[EnsemblePredictionModelType]
+    def directions: RDD[(Array[Double], Array[Double], Array[Double], Double)]
+    def advance(w: Array[Double]): Unit
+    /** Weighted mean loss over the validation rows; None without any. */
+    def validationLoss(loss: GBMClassificationLoss): Option[Double]
+    def close(): Unit
+  }
+
+  /** Any spark.ml regressor as the learner. Model state (score vector f,
+    * encoded label) lives in array columns carried through
+    * [[IterLoopCache]] — no RDD.zip (SURVEY.md §7.0 decision 3). The K
+    * per-class fits share one sampled frame and run concurrently on the
+    * driver pool, or as one fused job where the learner allows it.
+    */
+  private class PredictorClsLearner(
+      instances: DataFrame,
+      init: Array[Double],
+      loss: GBMClassificationLoss,
+      nf: Int) extends ClsLearner {
+    private val dim = loss.dim
+    private val ec = getExecutionContext
+    private val loop = new IterLoopCache($(checkpointInterval))
+    private var df = {
+      val lossB = loss // a local copy keeps this learner out of the UDF closure
+      loop.next(
+        instances
+          .withColumn("__yenc", udf { (y: Double) => lossB.encodeLabel(y) }.apply(col("label")))
+          .withColumn("__f", array(init.toIndexedSeq.map(lit(_)): _*))
+          .select("label", "weight", "features", "__val", "__yenc", "__f"))
+    }
+    private var withDir: DataFrame = _
+    private var dirRows: RDD[(Array[Double], Array[Double], Array[Double], Double)] = _
+
+    def fit(
+        loss: GBMClassificationLoss,
+        indices: Array[Int],
+        sampleSeed: Long): Array[EnsemblePredictionModelType] = {
       val newton = $(updates) == "newton"
       val residUdf = udf { (yenc: Seq[Double], f: Seq[Double]) =>
-        lossB.negativeGradient(yenc.toArray, f.toArray).toSeq
+        loss.negativeGradient(yenc.toArray, f.toArray).toSeq
       }
       val hessUdf = udf { (yenc: Seq[Double], f: Seq[Double]) =>
-        lossB.asInstanceOf[GBMClassificationLoss with HasHessian]
+        loss.asInstanceOf[GBMClassificationLoss with HasHessian]
           .hessian(yenc.toArray, f.toArray).toSeq
       }
-
       val trainRows = df.filter(!col("__val"))
       val sampled =
         if ($(subsampleRatio) == 1.0 && !$(replacement)) trainRows
-        else trainRows.sample($(replacement), $(subsampleRatio), $(seed) + i)
-      val indices = GraftUtils.subspace($(subspaceRatio), nf, $(seed) + i)
+        else trainRows.sample($(replacement), $(subsampleRatio), sampleSeed)
       val full = indices.length == nf
-      val sliceUdf =
-        if (full) null else udf((v: Vector) => GraftUtils.sliceVector(v, indices))
+      def sliced(d: DataFrame): DataFrame =
+        if (full) d
+        else d
+          .withColumn("__sf", udf((v: Vector) => GraftUtils.sliceVector(v, indices))
+            .apply(col("features")))
+          .withMetadata("__sf", GraftUtils.featuresMetadata(indices.length, "__sf"))
 
       var fitBase = sampled.withColumn("__r", residUdf(col("__yenc"), col("__f")))
       if (newton) fitBase = fitBase.withColumn("__h", hessUdf(col("__yenc"), col("__f")))
-      if (!full) {
-        fitBase = fitBase
-          .withColumn("__sf", sliceUdf(col("features")))
-          .withMetadata("__sf", GraftUtils.featuresMetadata(indices.length, "__sf"))
-      }
-
+      fitBase = sliced(fitBase)
       val featCol = if (full) "features" else "__sf"
       // fused multi-target fit first: one job for all K classes when the
       // base learner's fit is a single aggregation (K separate fit
       // actions are K job floors on a small-partition input); the same
       // per-class (label, weight) expressions feed both paths
-      val fused = Learners.fitMulti(
-        $(baseLearner), fitBase,
-        IndexedSeq.tabulate(dim) { k =>
-          val rk = element_at(col("__r"), k + 1)
-          if (newton) {
-            val hk = element_at(col("__h"), k + 1)
-            (rk / hk, col("weight") * hk)
-          } else (rk, col("weight"))
-        })
-      val dimModels: Array[EnsemblePredictionModelType] = fused.getOrElse {
+      val targets = IndexedSeq.tabulate(dim) { k =>
+        val rk = element_at(col("__r"), k + 1)
+        if (newton) {
+          val hk = element_at(col("__h"), k + 1)
+          (rk / hk, col("weight") * hk)
+        } else (rk, col("weight"))
+      }
+      val dimModels = Learners.fitMulti($(baseLearner), fitBase, targets).getOrElse {
         fitBase.persist(StorageLevel.MEMORY_AND_DISK)
         try {
           val futures = Array.tabulate(dim) { k =>
             Future {
-              var fitK = fitBase.withColumn("__rk", element_at(col("__r"), k + 1))
-              fitK =
-                if (newton) {
-                  fitK
-                    .withColumn("__hk", element_at(col("__h"), k + 1))
-                    .withColumn("__rk", col("__rk") / col("__hk"))
-                    .withColumn("__wk", col("weight") * col("__hk"))
-                } else fitK.withColumn("__wk", col("weight"))
-              Learners.fit($(baseLearner), fitK, "__rk", featCol, Some("__wk"), weightRequired = newton)
+              Learners.fit(
+                $(baseLearner),
+                fitBase.withColumn("__rk", targets(k)._1).withColumn("__wk", targets(k)._2),
+                "__rk", featCol, Some("__wk"), weightRequired = newton)
             }(ec)
           }
           futures.map(ThreadUtils.awaitResult(_, Duration.Inf))
         } finally fitBase.unpersist()
       }
-
       // directions for all rows
-      var withDir =
-        if (full) df
-        else df
-          .withColumn("__sf", sliceUdf(col("features")))
-          .withMetadata("__sf", GraftUtils.featuresMetadata(indices.length, "__sf"))
+      var d = sliced(df)
       var k = 0
       while (k < dim) {
-        withDir = Learners.transformOn(dimModels(k), withDir, featCol, s"__d_$k")
+        d = Learners.transformOn(dimModels(k), d, featCol, s"__d_$k")
         k += 1
       }
-      val dirArray = array(IndexedSeq.tabulate(dim)(k => col(s"__d_$k")): _*)
-      val withDirArr = withDir.withColumn("__d", dirArray)
+      withDir = d.withColumn("__d", array(IndexedSeq.tabulate(dim)(k => col(s"__d_$k")): _*))
+      dimModels
+    }
 
-      // joint step-size vector via L-BFGS-B over [0, inf)^dim
-      val stepVec: Array[Double] =
-        if (!$(optimizedWeights)) Array.fill(dim)(1.0)
-        else {
-          val proj = withDirArr.filter(!col("__val"))
-            .select(col("__yenc"), col("__f"), col("__d"), col("weight"))
-          val rdd = proj.rdd.map(r =>
-            (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray,
-              r.getSeq[Double](2).toArray, r.getDouble(3)))
-          rdd.persist(StorageLevel.MEMORY_AND_DISK)
-          try stepVectorSearch(rdd, lossB, dim)
-          finally rdd.unpersist()
-        }
+    def directions: RDD[(Array[Double], Array[Double], Array[Double], Double)] = {
+      dirRows = withDir.filter(!col("__val"))
+        .select(col("__yenc"), col("__f"), col("__d"), col("weight"))
+        .rdd.map(r => (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray,
+          r.getSeq[Double](2).toArray, r.getDouble(3)))
+      dirRows.persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
-      val w = stepVec.map(_ * $(learningRate))
-      models += dimModels
-      modelWeights += w
-      subspaces += indices
-
-      val wLit = array(w.toIndexedSeq.map(lit(_)): _*)
+    def advance(w: Array[Double]): Unit = {
+      if (dirRows != null) { dirRows.unpersist(); dirRows = null }
       val updateUdf = udf { (f: Seq[Double], dir: Seq[Double], ww: Seq[Double]) =>
         val out = new Array[Double](f.length)
         var j = 0
@@ -516,229 +547,141 @@ class GBMClassifier(override val uid: String)
         out.toSeq
       }
       df = loop.next(
-        withDirArr
-          .withColumn("__f", updateUdf(col("__f"), col("__d"), wLit))
+        withDir
+          .withColumn("__f",
+            updateUdf(col("__f"), col("__d"), array(w.toIndexedSeq.map(lit(_)): _*)))
           .select("label", "weight", "features", "__val", "__yenc", "__f"))
-
-      if (hasVal) {
-        val lossUdf = udf { (yenc: Seq[Double], f: Seq[Double]) =>
-          lossB.loss(yenc.toArray, f.toArray)
-        }
-        val agg = df.filter(col("__val"))
-          .agg(
-            sum(col("weight") * lossUdf(col("__yenc"), col("__f"))).as("l"),
-            sum("weight").as("w"))
-          .head()
-        if (!agg.isNullAt(0)) {
-          val vloss = agg.getDouble(0) / agg.getDouble(1)
-          // first finite loss always establishes the baseline (see
-          // GBMRegressor: Inf-arithmetic would mis-count round one)
-          if (bestValLoss.isPosInfinity ||
-            bestValLoss - vloss > $(validationTol) * math.max(math.abs(bestValLoss), 1e-12)) {
-            bestValLoss = vloss
-            badRounds = 0
-          } else {
-            badRounds += 1
-            if (badRounds >= $(numRounds)) {
-              val keep = math.max(models.length - badRounds, 1)
-              models.dropRightInPlace(models.length - keep)
-              modelWeights.dropRightInPlace(modelWeights.length - keep)
-              subspaces.dropRightInPlace(subspaces.length - keep)
-              done = true
-            }
-          }
-        }
-      }
-      i += 1
     }
-    loop.close()
-    new GBMClassificationModel(
-      uid, numClasses, init, modelWeights.toArray, subspaces.toArray, models.toArray)
-      .setParent(this)
+
+    def validationLoss(loss: GBMClassificationLoss): Option[Double] = {
+      val lossUdf = udf { (yenc: Seq[Double], f: Seq[Double]) =>
+        loss.loss(yenc.toArray, f.toArray)
+      }
+      val agg = df.filter(col("__val"))
+        .agg(
+          sum(col("weight") * lossUdf(col("__yenc"), col("__f"))).as("l"),
+          sum("weight").as("w"))
+        .head()
+      if (agg.isNullAt(0)) None else Some(agg.getDouble(0) / agg.getDouble(1))
+    }
+
+    def close(): Unit = {
+      if (dirRows != null) dirRows.unpersist()
+      loop.close()
+    }
   }
 
-  /** Native-tree fast path for the K-dim loop (see
-    * [[GBMRegressor.trainNativeDT]] for the general argument): metadata,
-    * candidate splits, and the binned TreePoint table are built once and
-    * shared across BOTH boosting iterations and the K per-class fits — the
-    * generic path re-pays the binning i*K times. Per iteration: one narrow
-    * map computes the K-dim negative gradient, one BaggedPoint pass fixes
-    * the joint subsample for all classes, and each class fit is a
-    * relabeling map + `RandomForest.runBagged` (still concurrent on the
-    * driver pool). Directions and the score update predict on binned
-    * features; the L-BFGS-B step search is the shared helper.
+  /** A Spark DecisionTreeRegressor as the learner over the bin-once
+    * [[NativeTreeBoost]] table, shared across BOTH boosting iterations and
+    * the K per-class fits — the generic learner re-pays the binning i*K
+    * times. Per iteration one narrow map computes the K-dim negative
+    * gradient, one BaggedPoint pass fixes the joint subsample for all
+    * classes, and each class fit is a relabeling map + the core induction
+    * (still concurrent on the driver pool). Directions and the score update
+    * predict on binned features.
     */
-  private def trainNativeDT(
+  private class BinnedClsLearner(
       instances: DataFrame,
       init: Array[Double],
-      numClasses: Int,
-      gbmLoss: GBMClassificationLoss,
-      nf: Int,
+      loss: GBMClassificationLoss,
       hasVal: Boolean,
-      dt: org.apache.spark.ml.regression.DecisionTreeRegressor): GBMClassificationModel = {
-    import org.apache.spark.ml.feature.Instance
+      dt: org.apache.spark.ml.regression.DecisionTreeRegressor) extends ClsLearner {
     import org.apache.spark.ml.regression.DecisionTreeRegressionModel
     import org.apache.spark.ml.tree.impl.{
-      BaggedPoint, DecisionTreeMetadata, GraftTreeShim, RandomForest, TreePoint,
-      GradientBoostedTrees => NativeGBT
+      BaggedPoint, GradientBoostedTrees => NativeGBT, TreePoint
     }
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.rdd.util.PeriodicRDDCheckpointer
 
-    val lossB = gbmLoss
-    val dim = lossB.dim
-    val sc = instances.sparkSession.sparkContext
-    val withVal = instances.select("label", "weight", "features", "__val").rdd
-      .map(r => (Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2)), r.getBoolean(3)))
-    withVal.persist(StorageLevel.MEMORY_AND_DISK)
-    val train = withVal.filter(!_._2).map(_._1)
-    val valid = withVal.filter(_._2).map(_._1)
+    private val dim = loss.dim
+    private val ec = getExecutionContext
+    private val boost = new NativeTreeBoost(
+      instances,
+      dt.getOldStrategy(MetadataUtils.getCategoricalFeatures(instances.schema("features"))),
+      dt.getSeed, $(checkpointInterval), sumOneWeights = false, hasVal)
+    // a local copy keeps this learner out of the task closures
+    private val (f, valF) = {
+      val f0 = init
+      (new boost.State(boost.treePoints.map(_ => f0.clone())),
+        if (hasVal) new boost.State(boost.valPoints.map(_ => f0.clone())) else null)
+    }
+    private var trees: Array[DecisionTreeRegressionModel] = _
+    private var data: RDD[(Array[Double], Array[Double], Array[Double], Double)] = _
 
-    val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
-    val strategy = dt.getOldStrategy(categorical)
-    val metadata = DecisionTreeMetadata.buildMetadata(train, strategy, numTrees = 1, "all")
-    val splits = GraftTreeShim.findSplits(train, metadata, dt.getSeed)
-    val bcSplits = sc.broadcast(splits)
-    val treePoints = TreePoint.convertToTreeRDD(train, splits, metadata)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val valPoints =
-      if (hasVal) TreePoint.convertToTreeRDD(valid, splits, metadata)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      else null
-
-    val fCk = new PeriodicRDDCheckpointer[Array[Double]]($(checkpointInterval), sc)
-    val valCk =
-      if (hasVal) new PeriodicRDDCheckpointer[Array[Double]]($(checkpointInterval), sc)
-      else null
-    var f: RDD[Array[Double]] = treePoints.map(_ => init.clone())
-    fCk.update(f)
-    f.count()
-    var valF: RDD[Array[Double]] =
-      if (hasVal) {
-        val p = valPoints.map(_ => init.clone())
-        valCk.update(p)
-        p.count()
-        p
-      } else null
-
-    val models = ArrayBuffer.empty[Array[EnsemblePredictionModelType]]
-    val modelWeights = ArrayBuffer.empty[Array[Double]]
-    val subspaces = ArrayBuffer.empty[Array[Int]]
-    var bestValLoss = Double.PositiveInfinity
-    var badRounds = 0
-    var i = 0
-    var done = false
-    val ec = getExecutionContext
-
-    while (i < $(maxIter) && !done) {
+    def fit(
+        loss: GBMClassificationLoss,
+        indices: Array[Int],
+        sampleSeed: Long): Array[EnsemblePredictionModelType] = {
       // K-dim negative gradient + joint subsample, computed ONCE for all
-      // classes (the generic path samples once and shares fitBase the same
-      // way — parity matters for the per-class fits seeing identical rows)
-      val resid: RDD[(TreePoint, Array[Double])] = treePoints.zip(f).map { case (tp, fr) =>
-        (tp, lossB.negativeGradient(lossB.encodeLabel(tp.label), fr))
+      // classes (the generic learner samples once and shares fitBase the
+      // same way — parity matters for the per-class fits seeing identical
+      // rows)
+      val resid: RDD[(TreePoint, Array[Double])] = boost.treePoints.zip(f.rdd).map {
+        case (tp, fr) => (tp, loss.negativeGradient(loss.encodeLabel(tp.label), fr))
       }
       val bagged = BaggedPoint.convertToBaggedRDD(
         resid, $(subsampleRatio), 1, $(replacement),
-        (t: (TreePoint, Array[Double])) => t._1.weight, $(seed) + i)
+        (t: (TreePoint, Array[Double])) => t._1.weight, sampleSeed)
       bagged.persist(StorageLevel.MEMORY_AND_DISK)
-
-      val dimModels: Array[EnsemblePredictionModelType] =
+      trees =
         try {
           val futures = Array.tabulate(dim) { k =>
             Future {
-              val baggedK = bagged.map { bp =>
+              boost.grow(bagged.map { bp =>
                 new BaggedPoint(
                   new TreePoint(bp.datum._2(k), bp.datum._1.binnedFeatures, bp.datum._1.weight),
                   bp.subsampleCounts, bp.sampleWeight)
-              }
-              RandomForest.runBagged(
-                  baggedK, metadata, bcSplits, strategy, 1, "all", dt.getSeed, None)
-                .head.asInstanceOf[DecisionTreeRegressionModel]
-                .asInstanceOf[EnsemblePredictionModelType]
+              }).asInstanceOf[DecisionTreeRegressionModel]
             }(ec)
           }
           futures.map(ThreadUtils.awaitResult(_, Duration.Inf))
         } finally bagged.unpersist(blocking = false)
-
-      val treeModels = dimModels.map(_.asInstanceOf[DecisionTreeRegressionModel])
-      val data: RDD[(Array[Double], Array[Double], Array[Double], Double)] =
-        treePoints.zip(f).map { case (tp, fr) =>
-          val d = Array.tabulate(dim)(k =>
-            NativeGBT.updatePrediction(tp, 0.0, treeModels(k), 1.0, bcSplits.value))
-          (lossB.encodeLabel(tp.label), fr, d, tp.weight)
-        }
+      val (ts, splits) = (trees, boost.bcSplits)
+      data = boost.treePoints.zip(f.rdd).map { case (tp, fr) =>
+        val d = Array.tabulate(ts.length)(k =>
+          NativeGBT.updatePrediction(tp, 0.0, ts(k), 1.0, splits.value))
+        (loss.encodeLabel(tp.label), fr, d, tp.weight)
+      }
       data.persist(StorageLevel.MEMORY_AND_DISK)
+      trees.map(_.asInstanceOf[EnsemblePredictionModelType])
+    }
 
-      val stepVec: Array[Double] =
-        if (!$(optimizedWeights)) Array.fill(dim)(1.0)
-        else stepVectorSearch(data, lossB, dim)
+    def directions: RDD[(Array[Double], Array[Double], Array[Double], Double)] = data
 
-      val w = stepVec.map(_ * $(learningRate))
-      models += dimModels
-      modelWeights += w
-      subspaces += GraftUtils.subspace($(subspaceRatio), nf, $(seed) + i)
-
-      val newF = data.map { case (_, fr, d, _) =>
+    def advance(w: Array[Double]): Unit = {
+      f.set(data.map { case (_, fr, d, _) =>
         val out = new Array[Double](fr.length)
         var j = 0
         while (j < fr.length) { out(j) = fr(j) + w(j) * d(j); j += 1 }
         out
-      }
-      fCk.update(newF)
-      newF.count()
+      })
       data.unpersist(blocking = false)
-      f = newF
-
       if (hasVal) {
-        val newValF = valPoints.zip(valF).map { case (tp, fr) =>
+        val (ts, splits) = (trees, boost.bcSplits)
+        valF.set(boost.valPoints.zip(valF.rdd).map { case (tp, fr) =>
           val out = new Array[Double](fr.length)
           var j = 0
           while (j < fr.length) {
-            out(j) = fr(j) + w(j) * NativeGBT.updatePrediction(tp, 0.0, treeModels(j), 1.0, bcSplits.value)
+            out(j) = fr(j) + w(j) * NativeGBT.updatePrediction(tp, 0.0, ts(j), 1.0, splits.value)
             j += 1
           }
           out
-        }
-        valCk.update(newValF)
-        newValF.count()
-        valF = newValF
-        val (lsum, wsum) = valPoints.zip(valF).treeAggregate((0.0, 0.0))(
-          (acc, t) => (
-            acc._1 + t._1.weight * lossB.loss(lossB.encodeLabel(t._1.label), t._2),
-            acc._2 + t._1.weight),
-          (a, b) => (a._1 + b._1, a._2 + b._2),
-          $(aggregationDepth))
-        if (wsum > 0) {
-          val vloss = lsum / wsum
-          if (bestValLoss.isPosInfinity ||
-            bestValLoss - vloss > $(validationTol) * math.max(math.abs(bestValLoss), 1e-12)) {
-            bestValLoss = vloss
-            badRounds = 0
-          } else {
-            badRounds += 1
-            if (badRounds >= $(numRounds)) {
-              val keep = math.max(models.length - badRounds, 1)
-              models.dropRightInPlace(models.length - keep)
-              modelWeights.dropRightInPlace(modelWeights.length - keep)
-              subspaces.dropRightInPlace(subspaces.length - keep)
-              done = true
-            }
-          }
-        }
+        })
       }
-      i += 1
     }
 
-    fCk.unpersistDataSet()
-    fCk.deleteAllCheckpoints()
-    if (valCk != null) { valCk.unpersistDataSet(); valCk.deleteAllCheckpoints() }
-    treePoints.unpersist(blocking = false)
-    if (valPoints != null) valPoints.unpersist(blocking = false)
-    withVal.unpersist(blocking = false)
-    bcSplits.destroy()
-    new GBMClassificationModel(
-      uid, numClasses, init, modelWeights.toArray, subspaces.toArray, models.toArray)
-      .setParent(this)
+    def validationLoss(loss: GBMClassificationLoss): Option[Double] = {
+      val (lsum, wsum) = boost.valPoints.zip(valF.rdd).treeAggregate((0.0, 0.0))(
+        (acc, t) => (
+          acc._1 + t._1.weight * loss.loss(loss.encodeLabel(t._1.label), t._2),
+          acc._2 + t._1.weight),
+        (a, b) => (a._1 + b._1, a._2 + b._2),
+        $(aggregationDepth))
+      if (wsum > 0) Some(lsum / wsum) else None
+    }
+
+    def close(): Unit = {
+      if (data != null) data.unpersist(blocking = false)
+      boost.close()
+    }
   }
 
   override def copy(extra: ParamMap): GBMClassifier = defaultCopy(extra)

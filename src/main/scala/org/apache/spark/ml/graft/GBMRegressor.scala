@@ -18,6 +18,7 @@ import org.apache.spark.ml.param.shared.{
 import org.apache.spark.ml.regression.{RegressionModel, Regressor}
 import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -81,6 +82,32 @@ private[graft] trait GBMParams
     checkpointInterval -> 10, replacement -> false, tol -> 1e-4)
 }
 
+/** Validation early stopping, shared by the GBM loops: a round whose loss
+  * does not improve on the best so far by more than `tol` (relative) is a
+  * miss, and `patience` consecutive misses stop the fit and drop the
+  * non-improving tail (reference: take(i - v),
+  * regression/GBMRegressor.scala:474), always keeping one round.
+  */
+private[graft] final class ValidationStop(patience: Int, tol: Double) {
+  private var best = Double.PositiveInfinity
+  private var misses = 0
+  var stopped = false
+
+  def observe(vloss: Double, rounds: ArrayBuffer[_]): Unit =
+    // the first finite loss always sets the baseline (Inf - vloss >
+    // tol*Inf is false, which would mis-count round one as a miss)
+    if (best.isPosInfinity || best - vloss > tol * math.max(math.abs(best), 1e-12)) {
+      best = vloss
+      misses = 0
+    } else {
+      misses += 1
+      if (misses >= patience) {
+        rounds.dropRightInPlace(rounds.length - math.max(rounds.length - misses, 1))
+        stopped = true
+      }
+    }
+}
+
 private[graft] trait GBMRegressorParams extends GBMParams {
 
   /** squared | absolute | huber | quantile | logcosh | scaledlogcosh. */
@@ -114,12 +141,11 @@ private[graft] trait GBMRegressorParams extends GBMParams {
 }
 
 /** Friedman-style gradient boosting generic in the base regressor
-  * (reference: regression/GBMRegressor.scala:237-476). Spark-first design
-  * choices vs the reference's RDD.zip pipeline: the running prediction
-  * `__f` is a DataFrame column carried through the loop (immune to
-  * partition-ordering hazards, SURVEY.md §7.0 decision 3); residuals are
-  * codegen'd column expressions over a scalar-loss UDF; the line-search
-  * objective is a treeAggregate over a cached narrow projection.
+  * (reference: regression/GBMRegressor.scala:237-476). One training loop
+  * over a learner backend: any spark.ml regressor through its own `fit`,
+  * or a Spark DecisionTree over a bin-once `TreePoint` table
+  * ([[NativeTreeBoost]]). The line-search objective is a treeAggregate
+  * over the backend's cached (label, f, direction, weight) rows.
   */
 class GBMRegressor(override val uid: String)
     extends Regressor[Vector, GBMRegressor, GBMRegressionModel]
@@ -185,20 +211,71 @@ class GBMRegressor(override val uid: String)
         Learners.fit($(baseLearner), trainOnly, "label", "features", Some("weight"))
     }
 
-    // the fast path requires iteration-invariant binning: gradient updates
-    // keep instance weights constant, so split candidates (which are
-    // weighted quantiles of the feature values) are identical every round;
-    // newton updates reweight rows by the hessian each round, giving the
-    // generic path iteration-specific weighted split candidates the
-    // bin-once representation cannot reproduce
-    $(baseLearner) match {
+    val learner: RegLearner = $(baseLearner) match {
       case dt: org.apache.spark.ml.regression.DecisionTreeRegressor
-          if $(nativeTreeFastPath) && $(subspaceRatio) >= 1.0 &&
-            $(updates) == "gradient" =>
-        trainNativeDT(instances, init, nf, hasVal, dt)
-      case _ =>
-        trainGeneric(instances, init, nf, hasVal)
+          if $(nativeTreeFastPath) && $(subspaceRatio) >= 1.0 && $(updates) == "gradient" =>
+        new BinnedRegLearner(instances, init, hasVal, dt)
+      case _ => new PredictorRegLearner(instances, init, nf)
     }
+    val rounds = ArrayBuffer.empty[(EnsemblePredictionModelType, Double, Array[Int])]
+    val stop = new ValidationStop($(numRounds), $(validationTol))
+    // early stopping needs a STATIONARY metric: huber's delta refreshes
+    // every round, so comparing losses computed under different deltas
+    // would be apples-to-oranges — freeze the first round's loss object
+    // for all validation evaluations
+    var valLossObj: GBMRegressionLoss = null
+    var i = 0
+    try {
+      while (i < $(maxIter) && !stop.stopped) {
+        // Huber delta refresh: alpha-quantile of current absolute residuals
+        val lossB: GBMRegressionLoss =
+          if ($(loss) == "huber") {
+            val d = learner.absResiduals
+              .stat.approxQuantile("__absr", Array($(alpha)), 0.001).head
+            lossObj(math.max(d, 1e-6))
+          } else lossObj(0.0)
+        val indices = GraftUtils.subspace($(subspaceRatio), nf, $(seed) + i)
+        val model = learner.fit(lossB, indices, $(seed) + i)
+        val w = $(learningRate) *
+          (if ($(optimizedWeights)) lineSearch(learner.directions, lossB) else 1.0)
+        instr.logNamedValue("stepSize", w)
+        rounds += ((model, w, indices))
+        learner.advance(w)
+        if (hasVal) {
+          if (valLossObj == null) valLossObj = lossB
+          learner.validationLoss(valLossObj).foreach { vloss =>
+            instr.logNamedValue("validationLoss", vloss)
+            stop.observe(vloss, rounds)
+          }
+        }
+        i += 1
+      }
+    } finally learner.close()
+    instr.logNamedValue("numRoundsKept", rounds.length.toLong)
+    new GBMRegressionModel(
+      uid, init, rounds.map(_._2).toArray, rounds.map(_._3).toArray, rounds.map(_._1).toArray)
+      .setParent(this)
+  }
+
+  /** The learner side of one GBM iteration over (label, f) rows, f being
+    * the running prediction. `fit` fits the base learner to the negative
+    * gradient at f (rows sampled with `sampleSeed`, features restricted to
+    * `indices`) and leaves (label, f, direction, weight) per training row
+    * in `directions` for the line search; `advance` moves every row (train
+    * and validation) to f + step * direction. `close` always runs.
+    */
+  private trait RegLearner {
+    /** |label - f| over the training rows, as column `__absr`. */
+    def absResiduals: DataFrame
+    def fit(
+        loss: GBMRegressionLoss,
+        indices: Array[Int],
+        sampleSeed: Long): EnsemblePredictionModelType
+    def directions: RDD[(Double, Double, Double, Double)]
+    def advance(step: Double): Unit
+    /** Weighted mean loss over the validation rows; None without any. */
+    def validationLoss(loss: GBMRegressionLoss): Option[Double]
+    def close(): Unit
   }
 
   /** Per-iteration step size over cached (label, f, direction, weight)
@@ -214,7 +291,7 @@ class GBMRegressor(override val uid: String)
     * tails) keep the Brent search over [0, 100].
     */
   private def lineSearch(
-      data: org.apache.spark.rdd.RDD[(Double, Double, Double, Double)],
+      data: RDD[(Double, Double, Double, Double)],
       lossB: GBMRegressionLoss): Double = {
     val depth = $(aggregationDepth)
     if ($(loss) == "squared") {
@@ -285,321 +362,176 @@ class GBMRegressor(override val uid: String)
     }
   }
 
-  /** The generic loop: every iteration re-enters the base learner's own
-    * `fit`, so any spark.ml regressor works as the weak learner.
+  /** Any spark.ml regressor as the learner: every iteration re-enters its
+    * own `fit`. The running prediction `__f` is a DataFrame column carried
+    * through [[IterLoopCache]] (immune to partition-ordering hazards,
+    * SURVEY.md §7.0 decision 3) and residuals are column expressions over
+    * a scalar-loss UDF.
     */
-  private def trainGeneric(
+  private class PredictorRegLearner(
       instances: DataFrame,
       init: EnsemblePredictionModelType,
-      nf: Int,
-      hasVal: Boolean): GBMRegressionModel = {
-    val loop = new IterLoopCache($(checkpointInterval))
-    var df = loop.next(
+      nf: Int) extends RegLearner {
+    private val loop = new IterLoopCache($(checkpointInterval))
+    private var df = loop.next(
       Learners.transform(init, instances, "__f")
         .select("label", "weight", "features", "__val", "__f"))
+    private var withDir: DataFrame = _
+    private var dirRows: RDD[(Double, Double, Double, Double)] = _
 
-    val models = ArrayBuffer.empty[EnsemblePredictionModelType]
-    val modelWeights = ArrayBuffer.empty[Double]
-    val subspaces = ArrayBuffer.empty[Array[Int]]
-    var bestValLoss = Double.PositiveInfinity
-    var badRounds = 0
-    // early stopping needs a STATIONARY metric: huber's delta refreshes
-    // every round, so comparing losses computed under different deltas
-    // would be apples-to-oranges — freeze the first round's loss object
-    // for all validation evaluations
-    var valLossObj: GBMRegressionLoss = null
-    var i = 0
-    var done = false
+    def absResiduals: DataFrame =
+      df.filter(!col("__val")).select(abs(col("label") - col("__f")).as("__absr"))
 
-    while (i < $(maxIter) && !done) {
-      // Huber delta refresh: alpha-quantile of current absolute residuals
-      val currentLoss: GBMRegressionLoss =
-        if ($(loss) == "huber") {
-          val d = df.filter(!col("__val"))
-            .select(abs(col("label") - col("__f")).as("__absr"))
-            .stat.approxQuantile("__absr", Array($(alpha)), 0.001).head
-          lossObj(math.max(d, 1e-6))
-        } else lossObj(0.0)
-
-      val newton = $(updates) == "newton" && currentLoss.isInstanceOf[HasScalarHessian]
-      val lossB = currentLoss
-      val residUdf = udf { (y: Double, f: Double) => -lossB.gradient(y, f) }
-      val newtonUdf =
-        if (newton) {
-          val h = currentLoss.asInstanceOf[GBMRegressionLoss with HasScalarHessian]
-          // clamp like the reference (hess >= 1e-2) or -grad/hess explodes
-          // where the loss flattens (regression/GBMRegressor.scala:368-385)
-          udf { (y: Double, f: Double) => math.max(h.hessian(y, f), 1e-2) }
-        } else null
-
+    def fit(
+        loss: GBMRegressionLoss,
+        indices: Array[Int],
+        sampleSeed: Long): EnsemblePredictionModelType = {
+      val newton = $(updates) == "newton" && loss.isInstanceOf[HasScalarHessian]
+      val residUdf = udf { (y: Double, f: Double) => -loss.gradient(y, f) }
       // sub-bag of (instance, prediction) pairs — column-aligned by
       // construction, no RDD.zip (reference samples pairs jointly at
       // regression/GBMRegressor.scala:355-366)
       val trainRows = df.filter(!col("__val"))
       val sampled =
         if ($(subsampleRatio) == 1.0 && !$(replacement)) trainRows
-        else trainRows.sample($(replacement), $(subsampleRatio), $(seed) + i)
-      val indices = GraftUtils.subspace($(subspaceRatio), nf, $(seed) + i)
+        else trainRows.sample($(replacement), $(subsampleRatio), sampleSeed)
       val full = indices.length == nf
-      val sliceUdf =
-        if (full) null else udf((v: Vector) => GraftUtils.sliceVector(v, indices))
+      def sliced(d: DataFrame): DataFrame =
+        if (full) d
+        else d
+          .withColumn("__sf", udf((v: Vector) => GraftUtils.sliceVector(v, indices))
+            .apply(col("features")))
+          .withMetadata("__sf", GraftUtils.featuresMetadata(indices.length, "__sf"))
 
       var fitDf = sampled.withColumn("__r", residUdf(col("label"), col("__f")))
       fitDf =
         if (newton) {
+          val h = loss.asInstanceOf[GBMRegressionLoss with HasScalarHessian]
+          // clamp like the reference (hess >= 1e-2) or -grad/hess explodes
+          // where the loss flattens (regression/GBMRegressor.scala:368-385)
+          val hessUdf = udf { (y: Double, f: Double) => math.max(h.hessian(y, f), 1e-2) }
           fitDf
-            .withColumn("__h", newtonUdf(col("label"), col("__f")))
+            .withColumn("__h", hessUdf(col("label"), col("__f")))
             .withColumn("__r", col("__r") / col("__h"))
             .withColumn("__w", col("weight") * col("__h"))
         } else fitDf.withColumn("__w", col("weight"))
-      if (!full) {
-        fitDf = fitDf
-          .withColumn("__sf", sliceUdf(col("features")))
-          .withMetadata("__sf", GraftUtils.featuresMetadata(indices.length, "__sf"))
-      }
+      val featCol = if (full) "features" else "__sf"
       val model = Learners.fit(
-        $(baseLearner), fitDf, "__r", if (full) "features" else "__sf", Some("__w"),
-        weightRequired = newton)
-
+        $(baseLearner), sliced(fitDf), "__r", featCol, Some("__w"), weightRequired = newton)
       // direction on ALL rows (train + validation)
-      val withSf =
-        if (full) df
-        else df
-          .withColumn("__sf", sliceUdf(col("features")))
-          .withMetadata("__sf", GraftUtils.featuresMetadata(indices.length, "__sf"))
-      val withDir = Learners.transformOn(
-        model, withSf, if (full) "features" else "__sf", "__d")
+      withDir = Learners.transformOn(model, sliced(df), featCol, "__d")
+      model
+    }
 
-      // step size
-      val stepAlpha =
-        if (!$(optimizedWeights)) 1.0
-        else {
-          val proj = withDir.filter(!col("__val"))
-            .select(col("label"), col("__f"), col("__d"), col("weight"))
-          val rdd = proj.rdd.map(r =>
-            (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-          rdd.persist(StorageLevel.MEMORY_AND_DISK)
-          try lineSearch(rdd, lossB)
-          finally rdd.unpersist()
-        }
+    def directions: RDD[(Double, Double, Double, Double)] = {
+      dirRows = withDir.filter(!col("__val"))
+        .select(col("label"), col("__f"), col("__d"), col("weight"))
+        .rdd.map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+      dirRows.persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
-      val w = $(learningRate) * stepAlpha
-      models += model
-      modelWeights += w
-      subspaces += indices
-
+    def advance(step: Double): Unit = {
+      if (dirRows != null) { dirRows.unpersist(); dirRows = null }
       df = loop.next(
         withDir
-          .withColumn("__f", col("__f") + lit(w) * col("__d"))
+          .withColumn("__f", col("__f") + lit(step) * col("__d"))
           .select("label", "weight", "features", "__val", "__f"))
-
-      // validation early stop
-      if (hasVal) {
-        if (valLossObj == null) valLossObj = lossB
-        val frozen = valLossObj
-        val lossUdf = udf { (y: Double, f: Double) => frozen.loss(y, f) }
-        val agg = df.filter(col("__val"))
-          .agg(
-            sum(col("weight") * lossUdf(col("label"), col("__f"))).as("l"),
-            sum("weight").as("w"))
-          .head()
-        if (agg.isNullAt(0)) {
-          // no validation rows; ignore
-        } else {
-          val vloss = agg.getDouble(0) / agg.getDouble(1)
-          // the first finite loss always establishes the baseline (Inf -
-          // vloss > tol*Inf is false, which would mis-count round one as
-          // a failure)
-          if (bestValLoss.isPosInfinity ||
-            bestValLoss - vloss > $(validationTol) * math.max(math.abs(bestValLoss), 1e-12)) {
-            bestValLoss = vloss
-            badRounds = 0
-          } else {
-            badRounds += 1
-            if (badRounds >= $(numRounds)) {
-              // drop the non-improving tail (reference: take(i - v),
-              // regression/GBMRegressor.scala:474)
-              val keep = math.max(models.length - badRounds, 1)
-              models.dropRightInPlace(models.length - keep)
-              modelWeights.dropRightInPlace(modelWeights.length - keep)
-              subspaces.dropRightInPlace(subspaces.length - keep)
-              done = true
-            }
-          }
-        }
-      }
-      i += 1
     }
-    loop.close()
-    new GBMRegressionModel(uid, init, modelWeights.toArray, subspaces.toArray, models.toArray)
-      .setParent(this)
+
+    def validationLoss(loss: GBMRegressionLoss): Option[Double] = {
+      val lossUdf = udf { (y: Double, f: Double) => loss.loss(y, f) }
+      val agg = df.filter(col("__val"))
+        .agg(sum(col("weight") * lossUdf(col("label"), col("__f"))).as("l"), sum("weight").as("w"))
+        .head()
+      if (agg.isNullAt(0)) None else Some(agg.getDouble(0) / agg.getDouble(1))
+    }
+
+    def close(): Unit = {
+      if (dirRows != null) dirRows.unpersist()
+      loop.close()
+    }
   }
 
-  /** Native-tree fast path: bin features ONCE (metadata + findSplits +
-    * TreePoint conversion — the per-iteration fixed cost of re-entering
-    * `DecisionTreeRegressor.fit`), then per iteration only relabel the
-    * binned points with pseudo-residuals and run the core induction
-    * (`RandomForest.runBagged`). Trees are identical to the generic path
-    * at subsampleRatio=1 because candidate splits depend on feature values
-    * only, never on the residual labels (pinned by GBMSuite). Predictions
-    * for the line search and state update use the binned representation
-    * too (`GradientBoostedTrees.updatePrediction`) — no per-row Vector
-    * boxing anywhere in the loop. This is the same amortization Spark's
-    * own GBT uses; at 1000 executors it removes i-1 redundant full-data
-    * binning passes and their driver barriers from an i-iteration fit.
+  /** A Spark DecisionTreeRegressor as the learner over the bin-once
+    * [[NativeTreeBoost]] table: each iteration relabels the binned points
+    * with the negative gradient (a narrow map over cached data) and runs
+    * the core induction. Trees are identical to the generic learner's at
+    * subsampleRatio = 1 because candidate splits depend on feature values
+    * and the constant gradient-update weights only, never on the residual
+    * labels (pinned by GBMSuite). Directions and the score update predict
+    * on binned features (`GradientBoostedTrees.updatePrediction`, exact for
+    * points binned with the fitted splits) — no per-row Vector boxing.
     */
-  private def trainNativeDT(
+  private class BinnedRegLearner(
       instances: DataFrame,
       init: EnsemblePredictionModelType,
-      nf: Int,
       hasVal: Boolean,
-      dt: org.apache.spark.ml.regression.DecisionTreeRegressor): GBMRegressionModel = {
-    import org.apache.spark.ml.feature.Instance
+      dt: org.apache.spark.ml.regression.DecisionTreeRegressor) extends RegLearner {
     import org.apache.spark.ml.regression.DecisionTreeRegressionModel
-    import org.apache.spark.ml.tree.impl.{
-      BaggedPoint, DecisionTreeMetadata, GraftTreeShim, RandomForest, TreePoint,
-      GradientBoostedTrees => NativeGBT
+    import org.apache.spark.ml.tree.impl.{GradientBoostedTrees => NativeGBT, TreePoint}
+
+    private val boost = new NativeTreeBoost(
+      instances,
+      dt.getOldStrategy(MetadataUtils.getCategoricalFeatures(instances.schema("features"))),
+      dt.getSeed, $(checkpointInterval), sumOneWeights = false, hasVal)
+    // closures take local copies: a constructor parameter referenced from a
+    // task closure would pull this learner (and its DataFrames) into the task
+    private val (pred, valPred) = {
+      val f0 = init
+      (new boost.State(boost.train.map(inst => f0.predict(inst.features))),
+        if (hasVal) new boost.State(boost.valid.map(inst => f0.predict(inst.features))) else null)
     }
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.rdd.util.PeriodicRDDCheckpointer
+    private var model: DecisionTreeRegressionModel = _
+    private var data: RDD[(Double, Double, Double, Double)] = _
 
-    val spark = instances.sparkSession
-    val sc = spark.sparkContext
-    val withVal = instances.select("label", "weight", "features", "__val").rdd
-      .map(r => (Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2)), r.getBoolean(3)))
-    withVal.persist(StorageLevel.MEMORY_AND_DISK)
-    val train = withVal.filter(!_._2).map(_._1)
-    val valid = withVal.filter(_._2).map(_._1)
+    def absResiduals: DataFrame = {
+      val absr = boost.treePoints.zip(pred.rdd).map { case (tp, f) => math.abs(tp.label - f) }
+      instances.sparkSession.createDataset(absr)(org.apache.spark.sql.Encoders.scalaDouble)
+        .toDF("__absr")
+    }
 
-    val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
-    val strategy = dt.getOldStrategy(categorical)
-    val metadata = DecisionTreeMetadata.buildMetadata(train, strategy, numTrees = 1, "all")
-    val splits = GraftTreeShim.findSplits(train, metadata, dt.getSeed)
-    val bcSplits = sc.broadcast(splits)
-    val treePoints = TreePoint.convertToTreeRDD(train, splits, metadata)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val valPoints =
-      if (hasVal) TreePoint.convertToTreeRDD(valid, splits, metadata)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      else null
-
-    val predCk = new PeriodicRDDCheckpointer[Double]($(checkpointInterval), sc)
-    val valCk =
-      if (hasVal) new PeriodicRDDCheckpointer[Double]($(checkpointInterval), sc) else null
-    var pred: RDD[Double] = train.map(inst => init.predict(inst.features))
-    predCk.update(pred)
-    pred.count()
-    var valPred: RDD[Double] =
-      if (hasVal) {
-        val p = valid.map(inst => init.predict(inst.features))
-        valCk.update(p)
-        p.count()
-        p
-      } else null
-
-    val models = ArrayBuffer.empty[EnsemblePredictionModelType]
-    val modelWeights = ArrayBuffer.empty[Double]
-    val subspaces = ArrayBuffer.empty[Array[Int]]
-    var bestValLoss = Double.PositiveInfinity
-    var badRounds = 0
-    var valLossObj: GBMRegressionLoss = null
-    var i = 0
-    var done = false
-
-    while (i < $(maxIter) && !done) {
-      // Huber delta refresh — same alpha-quantile of |residual|, same
-      // approx tolerance as the generic path
-      val currentLoss: GBMRegressionLoss =
-        if ($(loss) == "huber") {
-          val absr = treePoints.zip(pred).map { case (tp, f) => math.abs(tp.label - f) }
-          val d = spark.createDataset(absr)(org.apache.spark.sql.Encoders.scalaDouble)
-            .toDF("__absr")
-            .stat.approxQuantile("__absr", Array($(alpha)), 0.001).head
-          lossObj(math.max(d, 1e-6))
-        } else lossObj(0.0)
-
-      val lossB = currentLoss
-
-      // relabel the binned points with -grad — a narrow map over cached
-      // data, THE payoff of the fast path (newton never reaches here: its
-      // hessian reweighting needs per-iteration weighted split candidates)
-      val relabeled = treePoints.zip(pred).map { case (tp, f) =>
-        new TreePoint(-lossB.gradient(tp.label, f), tp.binnedFeatures, tp.weight)
+    def fit(
+        loss: GBMRegressionLoss,
+        indices: Array[Int],
+        sampleSeed: Long): EnsemblePredictionModelType = {
+      val relabeled = boost.treePoints.zip(pred.rdd).map { case (tp, f) =>
+        new TreePoint(-loss.gradient(tp.label, f), tp.binnedFeatures, tp.weight)
       }
-      val bagged = BaggedPoint.convertToBaggedRDD(
-        relabeled, $(subsampleRatio), 1, $(replacement),
-        (tp: TreePoint) => tp.weight, $(seed) + i)
-      bagged.persist(StorageLevel.MEMORY_AND_DISK)
-      val model =
-        try RandomForest.runBagged(
-            bagged, metadata, bcSplits, strategy, 1, "all", dt.getSeed, None)
-          .head.asInstanceOf[DecisionTreeRegressionModel]
-        finally bagged.unpersist(blocking = false)
-
-      // per-row direction via binned prediction (exactly equivalent to
-      // Vector prediction for points binned with the fitted splits)
-      val data = treePoints.zip(pred).map { case (tp, f) =>
-        (tp.label, f, NativeGBT.updatePrediction(tp, 0.0, model, 1.0, bcSplits.value), tp.weight)
+      model = boost.fitTree(relabeled, $(subsampleRatio), $(replacement), sampleSeed)
+        .asInstanceOf[DecisionTreeRegressionModel]
+      val (m, splits) = (model, boost.bcSplits)
+      data = boost.treePoints.zip(pred.rdd).map { case (tp, f) =>
+        (tp.label, f, NativeGBT.updatePrediction(tp, 0.0, m, 1.0, splits.value), tp.weight)
       }
       data.persist(StorageLevel.MEMORY_AND_DISK)
-      val stepAlpha =
-        if (!$(optimizedWeights)) 1.0
-        else lineSearch(data, lossB)
-
-      val w = $(learningRate) * stepAlpha
-      models += model
-      modelWeights += w
-      subspaces += GraftUtils.subspace($(subspaceRatio), nf, $(seed) + i)
-
-      val newPred = data.map(t => t._2 + w * t._3)
-      predCk.update(newPred)
-      newPred.count()
-      data.unpersist(blocking = false)
-      pred = newPred
-
-      if (hasVal) {
-        val newValPred = valPoints.zip(valPred).map { case (tp, f) =>
-          f + w * NativeGBT.updatePrediction(tp, 0.0, model, 1.0, bcSplits.value)
-        }
-        valCk.update(newValPred)
-        newValPred.count()
-        valPred = newValPred
-        if (valLossObj == null) valLossObj = lossB
-        val frozen = valLossObj
-        val (lsum, wsum) = valPoints.zip(valPred).treeAggregate((0.0, 0.0))(
-          (acc, t) => (acc._1 + t._1.weight * frozen.loss(t._1.label, t._2), acc._2 + t._1.weight),
-          (a, b) => (a._1 + b._1, a._2 + b._2),
-          $(aggregationDepth))
-        if (wsum > 0) {
-          val vloss = lsum / wsum
-          if (bestValLoss.isPosInfinity ||
-            bestValLoss - vloss > $(validationTol) * math.max(math.abs(bestValLoss), 1e-12)) {
-            bestValLoss = vloss
-            badRounds = 0
-          } else {
-            badRounds += 1
-            if (badRounds >= $(numRounds)) {
-              val keep = math.max(models.length - badRounds, 1)
-              models.dropRightInPlace(models.length - keep)
-              modelWeights.dropRightInPlace(modelWeights.length - keep)
-              subspaces.dropRightInPlace(subspaces.length - keep)
-              done = true
-            }
-          }
-        }
-      }
-      i += 1
+      model
     }
 
-    predCk.unpersistDataSet()
-    predCk.deleteAllCheckpoints()
-    if (valCk != null) { valCk.unpersistDataSet(); valCk.deleteAllCheckpoints() }
-    treePoints.unpersist(blocking = false)
-    if (valPoints != null) valPoints.unpersist(blocking = false)
-    withVal.unpersist(blocking = false)
-    bcSplits.destroy()
-    new GBMRegressionModel(uid, init, modelWeights.toArray, subspaces.toArray, models.toArray)
-      .setParent(this)
+    def directions: RDD[(Double, Double, Double, Double)] = data
+
+    def advance(step: Double): Unit = {
+      pred.set(data.map(t => t._2 + step * t._3))
+      data.unpersist(blocking = false)
+      if (hasVal) {
+        val (m, splits) = (model, boost.bcSplits)
+        valPred.set(boost.valPoints.zip(valPred.rdd).map { case (tp, f) =>
+          f + step * NativeGBT.updatePrediction(tp, 0.0, m, 1.0, splits.value)
+        })
+      }
+    }
+
+    def validationLoss(loss: GBMRegressionLoss): Option[Double] = {
+      val (lsum, wsum) = boost.valPoints.zip(valPred.rdd).treeAggregate((0.0, 0.0))(
+        (acc, t) => (acc._1 + t._1.weight * loss.loss(t._1.label, t._2), acc._2 + t._1.weight),
+        (a, b) => (a._1 + b._1, a._2 + b._2),
+        $(aggregationDepth))
+      if (wsum > 0) Some(lsum / wsum) else None
+    }
+
+    def close(): Unit = {
+      if (data != null) data.unpersist(blocking = false)
+      boost.close()
+    }
   }
 
   override def copy(extra: ParamMap): GBMRegressor = defaultCopy(extra)

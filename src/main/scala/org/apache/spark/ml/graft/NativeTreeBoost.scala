@@ -1,5 +1,7 @@
 package org.apache.spark.ml.graft
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.feature.Instance
 import org.apache.spark.ml.linalg.Vector
@@ -11,100 +13,128 @@ import org.apache.spark.mllib.tree.configuration.{Strategy => OldStrategy}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.rdd.util.PeriodicRDDCheckpointer
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.storage.StorageLevel
 
-/** Shared bin-once scaffolding for the AdaBoost fast paths (one copy of
-  * the fragile Spark-internals plumbing; the estimators keep only their
-  * own error/alpha/weight-update recursions).
+/** Bin-once state of the DecisionTree learner backend that the GBM and
+  * AdaBoost loops share: metadata, candidate splits and the binned
+  * `TreePoint` table are built ONCE per fit (the native GBT/RandomForest
+  * trick), and each round only relabels or reweights the binned points and
+  * runs the core induction (`RandomForest.runBagged`). The other backend
+  * re-enters the base learner's own `fit` every round and so re-pays the
+  * binning per round.
   *
-  * Weight scale: the instance weights are normalized to SUM 1 before
-  * metadata/split building, because `DecisionTreeMetadata` bakes
-  * `minWeightPerNode = minWeightFractionPerNode * weightedNumExamples` at
-  * build time and every boosting round trains on weights re-normalized to
-  * sum 1 — building metadata on the raw scale would make the fraction
-  * threshold unsatisfiable (the generic loop rebuilds metadata per round
-  * from the normalized weight column, so sum-1 is the scale that matches
-  * it). Split candidates are weighted quantiles and therefore
-  * scale-invariant; all boosting statistics (normalized losses, beta,
-  * alpha) are scale-invariant too, so outputs are unchanged for the
-  * default minWeightFractionPerNode = 0.
+  * The estimators pick this backend from what they can observe (the
+  * `nativeTreeFastPath` param only lets suites force the other one): the
+  * base learner is a Spark DecisionTree and the round's binning is
+  * provably the generic fit's. Candidate splits are quantiles of
+  * the feature values under the instance weights, so they are round-
+  * invariant only while the weights that shape them are: GBM with gradient
+  * updates and the full feature space (newton reweights rows by the
+  * hessian, a subspace changes the feature set) and AdaBoost, whose fixed
+  * grid is computed once from the sum-1 instance weights (the
+  * hist-gradient-boosting convention) while each round's tree still fits the
+  * exact current boost weights through the `TreePoint` weights.
+  *
+  * Weight scale (`sumOneWeights`, AdaBoost): the instance weights are
+  * normalized to SUM 1 before metadata/split building, because
+  * `DecisionTreeMetadata` bakes `minWeightPerNode =
+  * minWeightFractionPerNode * weightedNumExamples` at build time and every
+  * AdaBoost round trains on weights re-normalized to sum 1 — the raw scale
+  * would make the fraction threshold unsatisfiable. Split candidates are
+  * weighted quantiles and therefore scale-invariant, and so are all AdaBoost
+  * statistics. GBM keeps the raw weights its generic fit sees.
+  *
+  * Rows with `__val` set (GBM validation) are binned with the training
+  * splits into `valPoints` and never reach the induction.
   */
 private[graft] final class NativeTreeBoost(
     instances: DataFrame,
     strategy: OldStrategy,
     val dtSeed: Long,
-    checkpointInterval: Int) {
+    checkpointInterval: Int,
+    sumOneWeights: Boolean,
+    hasVal: Boolean) {
 
   private val sc = instances.sparkSession.sparkContext
 
-  private val raw: RDD[Instance] = instances.select("label", "weight", "features").rdd
-    .map(r => Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2)))
-  raw.persist(StorageLevel.MEMORY_AND_DISK)
+  private val rows: RDD[(Instance, Boolean)] = instances
+    .select(col("label"), col("weight"), col("features"), if (hasVal) col("__val") else lit(false))
+    .rdd
+    .map(r => (Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2)), r.getBoolean(3)))
+  rows.persist(StorageLevel.MEMORY_AND_DISK)
 
-  private val totalWeight = NativeTreeBoost.orderedSum(raw.map(_.weight))
-  require(totalWeight > 0.0,
-    s"boosting needs positive total instance weight, got $totalWeight")
-
-  private val train: RDD[Instance] = {
-    // local copy: closing over the member would serialize `this` (which
-    // holds the DataFrame and SparkContext) into the task
-    val tw = totalWeight
-    raw.map(i => Instance(i.label, i.weight / tw, i.features))
+  /** Training instances on the scale the induction sees. */
+  val train: RDD[Instance] = {
+    val fit = rows.filter(!_._2).map(_._1)
+    if (!sumOneWeights) fit
+    else {
+      val tw = NativeTreeBoost.orderedSum(fit.map(_.weight))
+      require(tw > 0.0, s"boosting needs positive total instance weight, got $tw")
+      fit.map(i => Instance(i.label, i.weight / tw, i.features))
+    }
   }
+  val valid: RDD[Instance] = rows.filter(_._2).map(_._1)
 
-  val metadata: DecisionTreeMetadata =
-    DecisionTreeMetadata.buildMetadata(train, strategy, numTrees = 1, "all")
+  private val metadata = DecisionTreeMetadata.buildMetadata(train, strategy, numTrees = 1, "all")
   private val splits = GraftTreeShim.findSplits(train, metadata, dtSeed)
   val bcSplits: Broadcast[Array[Array[Split]]] = sc.broadcast(splits)
   val treePoints: RDD[TreePoint] = TreePoint.convertToTreeRDD(train, splits, metadata)
     .persist(StorageLevel.MEMORY_AND_DISK)
+  val valPoints: RDD[TreePoint] =
+    if (hasVal) TreePoint.convertToTreeRDD(valid, splits, metadata)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    else null
 
-  val bwCk = new PeriodicRDDCheckpointer[Double](checkpointInterval, sc)
+  private val checkpointers = ArrayBuffer.empty[PeriodicRDDCheckpointer[_]]
 
-  /** Initial boost-weight state (normalized instance weights), registered
-    * with the checkpointer and materialized.
+  /** Per-row loop state (boost weights, running scores) aligned with the
+    * RDD it is derived from. Every value is registered with its own
+    * checkpointer, which bounds the lineage, and materialized at once.
     */
-  def initialWeights(): RDD[Double] = {
-    val bw = treePoints.map(_.weight)
-    bwCk.update(bw)
-    bw.count()
-    bw
+  final class State[T](initial: RDD[T]) {
+    private val ck = new PeriodicRDDCheckpointer[T](checkpointInterval, sc)
+    checkpointers += ck
+    var rdd: RDD[T] = _
+    set(initial)
+
+    def set(next: RDD[T]): Unit = {
+      ck.update(next)
+      next.count()
+      rdd = next
+    }
   }
 
-  /** One boosted tree: relabel the cached binned points with the round's
-    * sum-normalized weights (labels never change in AdaBoost — only the
-    * weights), fix the round's sample, run the core induction.
+  /** One tree on `points` (the binned table relabeled or reweighted for the
+    * round), row-sampled like the generic fit.
     */
-  def fitRound(bw: RDD[Double], sumW: Double, roundSeed: Long): DecisionTreeModel = {
-    val relabeled = treePoints.zip(bw).map { case (tp, w) =>
-      new TreePoint(tp.label, tp.binnedFeatures, w / sumW)
-    }
+  def fitTree(
+      points: RDD[TreePoint],
+      rate: Double,
+      replacement: Boolean,
+      sampleSeed: Long): DecisionTreeModel = {
     val bagged = BaggedPoint.convertToBaggedRDD(
-      relabeled, 1.0, 1, false, (tp: TreePoint) => tp.weight, roundSeed)
+      points, rate, 1, replacement, (tp: TreePoint) => tp.weight, sampleSeed)
     bagged.persist(StorageLevel.MEMORY_AND_DISK)
-    try RandomForest.runBagged(
-        bagged, metadata, bcSplits, strategy, 1, "all", dtSeed, None).head
+    try grow(bagged)
     finally bagged.unpersist(blocking = false)
   }
 
-  /** Register + materialize the next round's weight state. */
-  def advance(newBw: RDD[Double]): RDD[Double] = {
-    bwCk.update(newBw)
-    newBw.count()
-    newBw
-  }
+  /** The core induction over an already-sampled binned table. */
+  def grow(bagged: RDD[BaggedPoint[TreePoint]]): DecisionTreeModel =
+    RandomForest.runBagged(bagged, metadata, bcSplits, strategy, 1, "all", dtSeed, None).head
 
-  /** Always runs (callers wrap their loop in try/finally): frees the
-    * weight-state caches and checkpoint files, the binned table, the
-    * instance cache, and the splits broadcast — a failed fit must not
-    * leak reliable checkpoint directories (ContextCleaner never deletes
-    * them) or corpus-sized cached RDDs into the surviving session.
+  /** Always runs (the loops call it from `finally`): frees the state caches
+    * and checkpoint files, the binned tables, the instance cache and the
+    * splits broadcast — a failed fit must not leak reliable checkpoint
+    * directories (ContextCleaner never deletes them) or corpus-sized cached
+    * RDDs into the surviving session.
     */
   def close(): Unit = {
-    bwCk.unpersistDataSet()
-    bwCk.deleteAllCheckpoints()
+    checkpointers.foreach { ck => ck.unpersistDataSet(); ck.deleteAllCheckpoints() }
     treePoints.unpersist(blocking = false)
-    raw.unpersist(blocking = false)
+    if (valPoints != null) valPoints.unpersist(blocking = false)
+    rows.unpersist(blocking = false)
     bcSplits.destroy()
   }
 }
@@ -114,7 +144,7 @@ private[graft] object NativeTreeBoost {
   /** Deterministic distributed double sum: per-partition sums combined in
     * PARTITION ORDER on the driver. `RDD.sum` folds partition results in
     * task-completion order, which perturbs float sums by ulps run-to-run —
-    * enough to flip a split choice and break the fast path's
+    * enough to flip a split choice and break the backend's
     * same-seed-same-model guarantee.
     */
   def orderedSum(rdd: RDD[Double]): Double =

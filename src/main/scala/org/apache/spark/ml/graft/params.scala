@@ -88,13 +88,17 @@ private[graft] object GraftInstrumentation {
   }
 }
 
-/** Reuse the binned TreePoint representation across the estimator's
-  * repeated tree fits when the base learner is a Spark DecisionTree (the
-  * native GBT/RandomForest trick: feature binning and candidate splits
-  * depend only on feature values, so metadata + findSplits + TreePoint
-  * conversion amortize over the whole fit instead of being re-paid per
-  * tree). Only engaged where binning is provably iteration-invariant;
-  * exposed as a param so suites can pin generic-vs-fast equivalence.
+/** Lets the estimator fit its trees on the bin-once `TreePoint` backend
+  * ([[NativeTreeBoost]]; bagging: one `RandomForest.runBagged` pass)
+  * instead of re-entering the base learner's `fit` per tree. The backend is
+  * chosen from the input, not by this param alone: it is used only when
+  * the base learner is a Spark DecisionTree and the binning is provably
+  * the same every round (feature binning and candidate splits depend only
+  * on feature values and the round-invariant weights, so metadata +
+  * findSplits + TreePoint conversion amortize over the whole fit). Both
+  * backends run under the same training loop; the param (default on)
+  * exists so suites can force the spark.ml `Predictor` backend and pin the
+  * two against each other.
   */
 private[graft] trait HasNativeTreeFastPath extends Params {
 

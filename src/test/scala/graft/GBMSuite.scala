@@ -265,6 +265,25 @@ class GBMSuite extends graft.SparkSpec {
       s"fast stopped at ${fast.models.length}, generic at ${slow.models.length}")
   }
 
+  test("GBMClassifier native-tree fast path replays validation early stopping identically") {
+    val withVal = clsDf.withColumn("isVal", rand(7) > 0.7)
+    def fitWith(fast: Boolean) = new GBMClassifier()
+      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2).setSeed(1))
+      .setMaxIter(30)
+      .setLoss("logloss")
+      .setLearningRate(1.0)
+      .setValidationIndicatorCol("isVal")
+      .setNumRounds(2)
+      .setNativeTreeFastPath(fast)
+      .setSeed(0L)
+      .fit(withVal)
+    val fast = fitWith(true)
+    val slow = fitWith(false)
+    assert(fast.models.length < 30, s"expected an early stop, got ${fast.models.length}")
+    assert(fast.models.length === slow.models.length,
+      s"fast stopped at ${fast.models.length}, generic at ${slow.models.length}")
+  }
+
   test("GBMRegressor validation early stopping truncates") {
     val s = spark
     import s.implicits._

@@ -6,9 +6,11 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.LoggerConfig
+import org.apache.spark.ml.classification.DecisionTreeClassifier
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.regression.DecisionTreeRegressor
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
 
@@ -101,4 +103,44 @@ class InstrumentationSuite extends SparkSpec {
       assert(logs.exists(_.contains(name)), s"$name: no pipeline-stage log")
     }
   }
+
+  /** The logged values of `key`, in logging order. */
+  private def named(logs: Seq[String], key: String): Seq[String] =
+    logs.flatMap(m => s"\"$key\":([^,}]+)".r.findFirstMatchIn(m).map(_.group(1)))
+
+  test("boosting loops log a per-round trace on both learner backends") {
+    val withVal = df.withColumn("isVal", col("label") > 1.8)
+    for (fast <- Seq(true, false)) {
+      var gbm: GBMRegressionModel = null
+      val gbmLogs = captureInstrumentation {
+        gbm = new GBMRegressor()
+          .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2).setSeed(1))
+          .setMaxIter(3)
+          .setValidationIndicatorCol("isVal")
+          .setNumRounds(10)
+          .setNativeTreeFastPath(fast)
+          .setSeed(1)
+          .fit(withVal)
+      }
+      assert(named(gbmLogs, "stepSize").map(_.toDouble) === gbm.modelWeights.toSeq,
+        s"fast=$fast: $gbmLogs")
+      assert(named(gbmLogs, "validationLoss").length === 3, s"fast=$fast: $gbmLogs")
+      assert(named(gbmLogs, "numRoundsKept") === Seq("3"), s"fast=$fast: $gbmLogs")
+
+      var ada: BoostingClassificationModel = null
+      val adaLogs = captureInstrumentation {
+        ada = new BoostingClassifier()
+          .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(1).setSeed(1))
+          .setNumBaseLearners(2)
+          .setNativeTreeFastPath(fast)
+          .fit(clsDf)
+      }
+      assert(named(adaLogs, "modelWeight").map(_.toDouble) === ada.modelWeights.toSeq,
+        s"fast=$fast: $adaLogs")
+      assert(named(adaLogs, "estimatorError").length === 2, s"fast=$fast: $adaLogs")
+      assert(named(adaLogs, "numRoundsKept") === Seq(ada.models.length.toString),
+        s"fast=$fast: $adaLogs")
+    }
+  }
 }
+

@@ -96,6 +96,51 @@ class RobustnessSuite extends SparkSpec {
     assert(leftover.isEmpty, s"GBM fast path leaked checkpoints: $leftover")
   }
 
+  test("a failed boosting fit deletes its checkpoints and frees its cached state") {
+    val s = spark
+    import s.implicits._
+    val sc = spark.sparkContext
+    val ckptDir = sc.getCheckpointDir.get
+    val ckptRoot =
+      if (ckptDir.startsWith("file:")) new java.io.File(new java.net.URI(ckptDir))
+      else new java.io.File(ckptDir)
+    def rddDirs() = Option(ckptRoot.listFiles()).getOrElse(Array.empty[java.io.File])
+      .map(_.getName).filter(_.startsWith("rdd-")).toSet
+
+    // rejected in round one, after the loop checkpointed its input
+    val cls = Seq(
+      (0.0, Vectors.dense(0.0, 1.0)), (1.0, Vectors.dense(1.0, 0.0)),
+      (0.0, Vectors.dense(0.1, 0.9)), (1.0, Vectors.dense(0.9, 0.1))
+    ).toDF("label", "features")
+    val dirs = rddDirs()
+    intercept[IllegalArgumentException] {
+      new BoostingClassifier()
+        .setBaseLearner(new org.apache.spark.ml.classification.MultilayerPerceptronClassifier()
+          .setLayers(Array(2, 2)).setMaxIter(1))
+        .setNumBaseLearners(2)
+        .setCheckpointInterval(1)
+        .fit(cls)
+    }
+    assert(rddDirs() -- dirs === Set.empty, "rejected BoostingClassifier fit leaked checkpoints")
+
+    // fails in round two, with a round's state cached and checkpointed
+    val dirs2 = rddDirs()
+    val cached = sc.getPersistentRDDs.keySet
+    SecondFitFails.fits.set(0)
+    val e = intercept[IllegalStateException] {
+      new GBMRegressor()
+        .setBaseLearner(new SecondFitFails())
+        .setMaxIter(3)
+        .setCheckpointInterval(1)
+        .setSeed(1L)
+        .fit(df)
+    }
+    assert(e.getMessage.contains("second fit"))
+    assert(rddDirs() -- dirs2 === Set.empty, "failed GBMRegressor fit leaked checkpoints")
+    assert(sc.getPersistentRDDs.keySet -- cached === Set.empty,
+      "failed GBMRegressor fit left cached RDDs")
+  }
+
   test("instance weights steer boosting") {
     val s = spark
     import s.implicits._
@@ -273,4 +318,22 @@ class RobustnessSuite extends SparkSpec {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new org.apache.spark.sql.graft.GraftExtensions()(ext) // must not throw
   }
+}
+
+/** A DummyRegressor whose every fit after the first throws. The count is
+  * global because `Estimator.fit(df, params)` fits a copy of the learner.
+  */
+class SecondFitFails(uid: String) extends DummyRegressor(uid) {
+  def this() = this(org.apache.spark.ml.util.Identifiable.randomUID("secondFitFails"))
+
+  override protected def train(dataset: org.apache.spark.sql.Dataset[_]): DummyRegressionModel = {
+    if (SecondFitFails.fits.incrementAndGet() > 1) {
+      throw new IllegalStateException("second fit of the base learner fails")
+    }
+    super.train(dataset)
+  }
+}
+
+object SecondFitFails {
+  val fits = new java.util.concurrent.atomic.AtomicInteger()
 }
