@@ -10,7 +10,6 @@ import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
-import org.json4s.DefaultFormats
 import org.json4s.JsonDSL._
 
 private[graft] trait BaggingClassifierParams
@@ -52,15 +51,13 @@ class BaggingClassifier(override val uid: String)
         $(baseLearner).isInstanceOf[ProbabilisticClassifier[_, _, _]],
         "soft voting requires a probabilistic base classifier")
     }
-    val instances = SubBagFit.instances(
-      dataset, $(labelCol),
-      if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol))
+    val instances = SubBagFit.instances(this, dataset)
     val handlePersist = dataset.storageLevel == StorageLevel.NONE
     if (handlePersist) instances.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val bags = {
         val native =
-          if ($(nativeTreeFastPath) && $(subspaceRatio) >= 1.0)
+          if ($(subspaceRatio) >= 1.0)
             SubBagFit.runNativeTrees(
               instances, $(baseLearner), $(numBaseLearners), $(replacement),
               $(subsampleRatio), $(seed), Some(numClasses))
@@ -76,31 +73,10 @@ class BaggingClassifier(override val uid: String)
 
   override def copy(extra: ParamMap): BaggingClassifier = defaultCopy(extra)
 
-  override def write: MLWriter = new BaggingClassifier.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(this)
 }
 
-object BaggingClassifier extends MLReadable[BaggingClassifier] {
-
-  private[graft] class Writer(instance: BaggingClassifier) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(instance, path, sparkSession)
-      Learners.save(instance.getBaseLearner, s"$path/learner")
-    }
-  }
-
-  private class Reader extends MLReader[BaggingClassifier] {
-    private val className = classOf[BaggingClassifier].getName
-    override def load(path: String): BaggingClassifier = {
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val est = new BaggingClassifier(metadata.uid)
-      metadata.getAndSetParams(est)
-      est.setBaseLearner(Learners.loadLearner(s"$path/learner", sparkSession))
-    }
-  }
-
-  override def read: MLReader[BaggingClassifier] = new Reader
-  override def load(path: String): BaggingClassifier = super.load(path)
-}
+object BaggingClassifier extends GraftReadable[BaggingClassifier](s => new BaggingClassifier(s.uid))
 
 class BaggingClassificationModel(
     override val uid: String,
@@ -153,49 +129,17 @@ class BaggingClassificationModel(
       case v => throw new IllegalArgumentException(s"unexpected raw vector $v")
     }
 
-  private[graft] def setBaseLearner(value: EnsemblePredictorType): this.type =
-    set(baseLearner, value)
-
   override def copy(extra: ParamMap): BaggingClassificationModel =
     copyValues(new BaggingClassificationModel(uid, numClasses, subspaces, models), extra)
       .setParent(parent)
 
-  override def write: MLWriter = new BaggingClassificationModel.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(
+    this,
+    ("numModels" -> models.length) ~ ("numClasses" -> numClasses) ~
+      ("subspaces" -> subspaces.map(_.toSeq).toSeq),
+    GraftPersistence.numbered(models))
 }
 
-object BaggingClassificationModel extends MLReadable[BaggingClassificationModel] {
-
-  private[graft] class Writer(instance: BaggingClassificationModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(
-        instance, path, sparkSession,
-        Some(("numModels" -> instance.models.length) ~
-          ("numClasses" -> instance.numClasses) ~
-          ("subspaces" -> instance.subspaces.map(_.toSeq).toSeq)))
-      Learners.save(instance.getBaseLearner, s"$path/learner")
-      instance.models.zipWithIndex.foreach { case (m, i) =>
-        Learners.save(m, s"$path/model-$i")
-      }
-    }
-  }
-
-  private class Reader extends MLReader[BaggingClassificationModel] {
-    private val className = classOf[BaggingClassificationModel].getName
-    override def load(path: String): BaggingClassificationModel = {
-      implicit val fmt: DefaultFormats.type = DefaultFormats
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val numModels = (metadata.metadata \ "numModels").extract[Int]
-      val numClasses = (metadata.metadata \ "numClasses").extract[Int]
-      val subspaces = (metadata.metadata \ "subspaces").extract[Seq[Seq[Int]]]
-        .map(_.toArray).toArray
-      val models = Array.tabulate(numModels)(i =>
-        Learners.loadModel(s"$path/model-$i", sparkSession))
-      val model = new BaggingClassificationModel(metadata.uid, numClasses, subspaces, models)
-      metadata.getAndSetParams(model, skipParams = Some(List("baseLearner")))
-      model.setBaseLearner(Learners.loadLearner(s"$path/learner", sparkSession))
-    }
-  }
-
-  override def read: MLReader[BaggingClassificationModel] = new Reader
-  override def load(path: String): BaggingClassificationModel = super.load(path)
-}
+object BaggingClassificationModel extends GraftReadable[BaggingClassificationModel](s =>
+  new BaggingClassificationModel(
+    s.uid, s.int("numClasses"), s.subspaces, s.models(s.int("numModels"))))

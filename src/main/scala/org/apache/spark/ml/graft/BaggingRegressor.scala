@@ -16,7 +16,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.ThreadUtils
-import org.json4s.DefaultFormats
 import org.json4s.JsonDSL._
 
 private[graft] trait BaggingParams
@@ -26,7 +25,6 @@ private[graft] trait BaggingParams
     with HasBaseLearner
     with HasWeightCol
     with HasParallelism
-    with HasNativeTreeFastPath
 
 /** Shared bootstrap-rows x feature-subspace fit loop (reference:
   * regression/BaggingRegressor.scala:117-172 /
@@ -50,24 +48,29 @@ private[graft] object SubBagFit {
     val nf = GraftUtils.numFeatures(instances, "features")
     val futures = Array.tabulate(numLearners) { i =>
       Future {
-        val sampled =
-          if (subsampleRatio == 1.0 && !replacement) instances
-          else instances.sample(replacement, subsampleRatio, seed + i)
         val indices = GraftUtils.subspace(subspaceRatio, nf, seed + i)
-        val prepared =
-          if (indices.length == nf) sampled
-          else {
-            val idx = indices
-            val sliceUdf = udf((v: Vector) => GraftUtils.sliceVector(v, idx))
-            sampled
-              .withColumn("features", sliceUdf(col("features")))
-              .withMetadata("features", GraftUtils.featuresMetadata(idx.length, "features"))
-          }
+        val prepared = sliceFeatures(
+          sample(instances, replacement, subsampleRatio, seed + i), indices, nf, "features")
         (indices, Learners.fit(learner, prepared, "label", "features", Some("weight")))
       }(ec)
     }
     futures.map(ThreadUtils.awaitResult(_, Duration.Inf))
   }
+
+  /** One learner's row sample; all rows at ratio 1 without replacement. */
+  def sample(df: DataFrame, replacement: Boolean, ratio: Double, seed: Long): DataFrame =
+    if (ratio == 1.0 && !replacement) df else df.sample(replacement, ratio, seed)
+
+  /** `features` restricted to `indices` as column `out`, with vector
+    * metadata of the sliced width; `df` itself when `indices` keeps all
+    * `nf` features.
+    */
+  def sliceFeatures(df: DataFrame, indices: Array[Int], nf: Int, out: String): DataFrame =
+    if (indices.length == nf) df
+    else df
+      .withColumn(
+        out, udf((v: Vector) => GraftUtils.sliceVector(v, indices)).apply(col("features")))
+      .withMetadata(out, GraftUtils.featuresMetadata(indices.length, out))
 
   /** Native-tree fast path: bagging K DecisionTrees over the same dataset
     * IS one RandomForest pass — metadata, candidate splits, and the binned
@@ -146,22 +149,22 @@ private[graft] object SubBagFit {
     }
   }
 
-  /** Normalize any input dataset to hard-coded (label, weight, features)
-    * columns, preserving features metadata (reference:
+  /** Normalize an estimator's input dataset to hard-coded (label, weight,
+    * features) columns, preserving features metadata; weight 1 when the
+    * estimator's weightCol is unset or empty (reference:
     * ensemble/ensembleParams.scala:70-80). `extra` appends additional
     * derived columns (e.g. GBM's validation flag) in the same projection.
     */
   def instances(
+      est: PredictorParams with HasWeightCol,
       dataset: Dataset[_],
-      labelCol: String,
-      weightCol: Option[String],
-      featuresCol: String,
       extra: Seq[(org.apache.spark.sql.Column, String)] = Nil): DataFrame = {
-    val w = weightCol.filter(_.nonEmpty).map(c => col(c).cast(DoubleType)).getOrElse(lit(1.0))
+    val w = est.get(est.weightCol).filter(_.nonEmpty)
+      .map(c => col(c).cast(DoubleType)).getOrElse(lit(1.0))
     val base = Seq(
-      col(labelCol).cast(DoubleType).as("label"),
+      col(est.getLabelCol).cast(DoubleType).as("label"),
       w.as("weight"),
-      col(featuresCol).as("features"))
+      col(est.getFeaturesCol).as("features"))
     dataset.select(base ++ extra.map { case (c, n) => c.as(n) }: _*)
   }
 }
@@ -193,15 +196,13 @@ class BaggingRegressor(override val uid: String)
   }
 
   private def trainImpl(dataset: Dataset[_], instr: Instrumentation): BaggingRegressionModel = {
-    val instances = SubBagFit.instances(
-      dataset, $(labelCol),
-      if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol))
+    val instances = SubBagFit.instances(this, dataset)
     val handlePersist = dataset.storageLevel == StorageLevel.NONE
     if (handlePersist) instances.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val bags = {
         val native =
-          if ($(nativeTreeFastPath) && $(subspaceRatio) >= 1.0)
+          if ($(subspaceRatio) >= 1.0)
             SubBagFit.runNativeTrees(
               instances, $(baseLearner), $(numBaseLearners), $(replacement),
               $(subsampleRatio), $(seed))
@@ -216,31 +217,10 @@ class BaggingRegressor(override val uid: String)
 
   override def copy(extra: ParamMap): BaggingRegressor = defaultCopy(extra)
 
-  override def write: MLWriter = new BaggingRegressor.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(this)
 }
 
-object BaggingRegressor extends MLReadable[BaggingRegressor] {
-
-  private[graft] class Writer(instance: BaggingRegressor) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(instance, path, sparkSession)
-      Learners.save(instance.getBaseLearner, s"$path/learner")
-    }
-  }
-
-  private class Reader extends MLReader[BaggingRegressor] {
-    private val className = classOf[BaggingRegressor].getName
-    override def load(path: String): BaggingRegressor = {
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val est = new BaggingRegressor(metadata.uid)
-      metadata.getAndSetParams(est)
-      est.setBaseLearner(Learners.loadLearner(s"$path/learner", sparkSession))
-    }
-  }
-
-  override def read: MLReader[BaggingRegressor] = new Reader
-  override def load(path: String): BaggingRegressor = super.load(path)
-}
+object BaggingRegressor extends GraftReadable[BaggingRegressor](s => new BaggingRegressor(s.uid))
 
 class BaggingRegressionModel(
     override val uid: String,
@@ -268,46 +248,14 @@ class BaggingRegressionModel(
     s / numModels
   }
 
-  private[graft] def setBaseLearner(value: EnsemblePredictorType): this.type =
-    set(baseLearner, value)
-
   override def copy(extra: ParamMap): BaggingRegressionModel =
     copyValues(new BaggingRegressionModel(uid, subspaces, models), extra).setParent(parent)
 
-  override def write: MLWriter = new BaggingRegressionModel.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(
+    this,
+    ("numModels" -> models.length) ~ ("subspaces" -> subspaces.map(_.toSeq).toSeq),
+    GraftPersistence.numbered(models))
 }
 
-object BaggingRegressionModel extends MLReadable[BaggingRegressionModel] {
-
-  private[graft] class Writer(instance: BaggingRegressionModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(
-        instance, path, sparkSession,
-        Some(("numModels" -> instance.models.length) ~
-          ("subspaces" -> instance.subspaces.map(_.toSeq).toSeq)))
-      Learners.save(instance.getBaseLearner, s"$path/learner")
-      instance.models.zipWithIndex.foreach { case (m, i) =>
-        Learners.save(m, s"$path/model-$i")
-      }
-    }
-  }
-
-  private class Reader extends MLReader[BaggingRegressionModel] {
-    private val className = classOf[BaggingRegressionModel].getName
-    override def load(path: String): BaggingRegressionModel = {
-      implicit val fmt: DefaultFormats.type = DefaultFormats
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val numModels = (metadata.metadata \ "numModels").extract[Int]
-      val subspaces = (metadata.metadata \ "subspaces").extract[Seq[Seq[Int]]]
-        .map(_.toArray).toArray
-      val models = Array.tabulate(numModels)(i =>
-        Learners.loadModel(s"$path/model-$i", sparkSession))
-      val model = new BaggingRegressionModel(metadata.uid, subspaces, models)
-      metadata.getAndSetParams(model, skipParams = Some(List("baseLearner")))
-      model.setBaseLearner(Learners.loadLearner(s"$path/learner", sparkSession))
-    }
-  }
-
-  override def read: MLReader[BaggingRegressionModel] = new Reader
-  override def load(path: String): BaggingRegressionModel = super.load(path)
-}
+object BaggingRegressionModel extends GraftReadable[BaggingRegressionModel](s =>
+  new BaggingRegressionModel(s.uid, s.subspaces, s.models(s.int("numModels"))))

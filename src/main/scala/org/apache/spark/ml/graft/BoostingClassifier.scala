@@ -14,7 +14,6 @@ import org.apache.spark.ml.param.shared.{
 import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
 import org.apache.spark.sql.Dataset
-import org.json4s.DefaultFormats
 import org.json4s.JsonDSL._
 
 private[graft] trait BoostingClassifierParams
@@ -22,7 +21,6 @@ private[graft] trait BoostingClassifierParams
     with HasNumBaseLearners
     with HasBaseLearner
     with HasWeightCol
-    with HasNativeTreeFastPath
     with HasCheckpointInterval
     with HasAggregationDepth {
 
@@ -71,13 +69,10 @@ class BoostingClassifier(override val uid: String)
         $(baseLearner).isInstanceOf[ProbabilisticClassifier[_, _, _]],
         "SAMME.R requires a probabilistic base classifier")
     }
-    val instances = SubBagFit.instances(
-      dataset, $(labelCol),
-      if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol))
+    val instances = SubBagFit.instances(this, dataset)
     val mispredicted = (p: Double, y: Double) => if (p != y) 1.0 else 0.0
     val learner: AdaBoostLearner = $(baseLearner) match {
-      case dt: org.apache.spark.ml.classification.DecisionTreeClassifier
-          if $(nativeTreeFastPath) =>
+      case dt: org.apache.spark.ml.classification.DecisionTreeClassifier =>
         val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
         new BinnedAdaBoost(
           instances, dt.getOldStrategy(categorical, numClasses), dt.getSeed,
@@ -131,10 +126,11 @@ class BoostingClassifier(override val uid: String)
 
   override def copy(extra: ParamMap): BoostingClassifier = defaultCopy(extra)
 
-  override def write: MLWriter = new BoostingClassifier.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(this)
 }
 
-object BoostingClassifier extends MLReadable[BoostingClassifier] {
+object BoostingClassifier
+    extends GraftReadable[BoostingClassifier](s => new BoostingClassifier(s.uid)) {
 
   /** SAMME.R's probability-coded weight factor for each possible label of
     * a row with class probabilities `p` (Zhu et al. 2009; reference:
@@ -148,26 +144,6 @@ object BoostingClassifier extends MLReadable[BoostingClassifier] {
     val sumLog = logs.sum
     logs.map(lj => math.exp(-(k - 1.0) / k * ((k / (k - 1.0)) * lj - sumLog / (k - 1.0))))
   }
-
-  private[graft] class Writer(instance: BoostingClassifier) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(instance, path, sparkSession)
-      Learners.save(instance.getBaseLearner, s"$path/learner")
-    }
-  }
-
-  private class Reader extends MLReader[BoostingClassifier] {
-    private val className = classOf[BoostingClassifier].getName
-    override def load(path: String): BoostingClassifier = {
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val est = new BoostingClassifier(metadata.uid)
-      metadata.getAndSetParams(est)
-      est.setBaseLearner(Learners.loadLearner(s"$path/learner", sparkSession))
-    }
-  }
-
-  override def read: MLReader[BoostingClassifier] = new Reader
-  override def load(path: String): BoostingClassifier = super.load(path)
 }
 
 class BoostingClassificationModel(
@@ -238,47 +214,17 @@ class BoostingClassificationModel(
       case v => throw new IllegalArgumentException(s"unexpected raw vector $v")
     }
 
-  private[graft] def setBaseLearner(value: EnsemblePredictorType): this.type =
-    set(baseLearner, value)
-
   override def copy(extra: ParamMap): BoostingClassificationModel =
     copyValues(new BoostingClassificationModel(uid, numClasses, modelWeights, models), extra)
       .setParent(parent)
 
-  override def write: MLWriter = new BoostingClassificationModel.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(
+    this,
+    ("numModels" -> models.length) ~ ("numClasses" -> numClasses) ~
+      ("modelWeights" -> modelWeights.toSeq),
+    GraftPersistence.numbered(models))
 }
 
-object BoostingClassificationModel extends MLReadable[BoostingClassificationModel] {
-
-  private[graft] class Writer(instance: BoostingClassificationModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(
-        instance, path, sparkSession,
-        Some(("numModels" -> instance.models.length) ~
-          ("numClasses" -> instance.numClasses) ~
-          ("modelWeights" -> instance.modelWeights.toSeq)))
-      Learners.save(instance.getBaseLearner, s"$path/learner")
-      instance.models.zipWithIndex.foreach { case (m, i) =>
-        Learners.save(m, s"$path/model-$i")
-      }
-    }
-  }
-
-  private class Reader extends MLReader[BoostingClassificationModel] {
-    private val className = classOf[BoostingClassificationModel].getName
-    override def load(path: String): BoostingClassificationModel = {
-      implicit val fmt: DefaultFormats.type = DefaultFormats
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val n = (metadata.metadata \ "numModels").extract[Int]
-      val k = (metadata.metadata \ "numClasses").extract[Int]
-      val weights = (metadata.metadata \ "modelWeights").extract[Seq[Double]].toArray
-      val models = Array.tabulate(n)(i => Learners.loadModel(s"$path/model-$i", sparkSession))
-      val model = new BoostingClassificationModel(metadata.uid, k, weights, models)
-      metadata.getAndSetParams(model, skipParams = Some(List("baseLearner")))
-      model.setBaseLearner(Learners.loadLearner(s"$path/learner", sparkSession))
-    }
-  }
-
-  override def read: MLReader[BoostingClassificationModel] = new Reader
-  override def load(path: String): BoostingClassificationModel = super.load(path)
-}
+object BoostingClassificationModel extends GraftReadable[BoostingClassificationModel](s =>
+  new BoostingClassificationModel(
+    s.uid, s.int("numClasses"), s.doubles("modelWeights"), s.models(s.int("numModels"))))

@@ -15,7 +15,6 @@ import org.apache.spark.ml.util.Instrumentation.instrumented
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
-import org.json4s.DefaultFormats
 import org.json4s.JsonDSL._
 
 /** Iteration-state cache manager: persists the per-iteration weighted
@@ -93,7 +92,6 @@ private[graft] trait BoostingRegressorParams
     with HasNumBaseLearners
     with HasBaseLearner
     with HasWeightCol
-    with HasNativeTreeFastPath
     with HasCheckpointInterval
     // kept for API parity with the reference's treeReduce/treeAggregate
     // depth; the DataFrame aggregations here partial-aggregate map-side,
@@ -145,12 +143,10 @@ class BoostingRegressor(override val uid: String)
   }
 
   private def trainImpl(dataset: Dataset[_], instr: Instrumentation): BoostingRegressionModel = {
-    val instances = SubBagFit.instances(
-      dataset, $(labelCol),
-      if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol))
+    val instances = SubBagFit.instances(this, dataset)
     val absError = (p: Double, y: Double) => math.abs(p - y)
     val learner: AdaBoostLearner = $(baseLearner) match {
-      case dt: org.apache.spark.ml.regression.DecisionTreeRegressor if $(nativeTreeFastPath) =>
+      case dt: org.apache.spark.ml.regression.DecisionTreeRegressor =>
         val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
         new BinnedAdaBoost(
           instances, dt.getOldStrategy(categorical), dt.getSeed, $(checkpointInterval), absError)
@@ -201,10 +197,11 @@ class BoostingRegressor(override val uid: String)
 
   override def copy(extra: ParamMap): BoostingRegressor = defaultCopy(extra)
 
-  override def write: MLWriter = new BoostingRegressor.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(this)
 }
 
-object BoostingRegressor extends MLReadable[BoostingRegressor] {
+object BoostingRegressor
+    extends GraftReadable[BoostingRegressor](s => new BoostingRegressor(s.uid)) {
 
   /** AdaBoost.R2's normalized loss of a row's absolute error given the
     * round's max error (reference: regression/BoostingRegressor.scala:97-106).
@@ -217,26 +214,6 @@ object BoostingRegressor extends MLReadable[BoostingRegressor] {
       case "squared" => e => StrictMath.pow(e / maxError, 2)
       case "exponential" => e => 1.0 - math.exp(-e / maxError)
     }
-
-  private[graft] class Writer(instance: BoostingRegressor) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(instance, path, sparkSession)
-      Learners.save(instance.getBaseLearner, s"$path/learner")
-    }
-  }
-
-  private class Reader extends MLReader[BoostingRegressor] {
-    private val className = classOf[BoostingRegressor].getName
-    override def load(path: String): BoostingRegressor = {
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val est = new BoostingRegressor(metadata.uid)
-      metadata.getAndSetParams(est)
-      est.setBaseLearner(Learners.loadLearner(s"$path/learner", sparkSession))
-    }
-  }
-
-  override def read: MLReader[BoostingRegressor] = new Reader
-  override def load(path: String): BoostingRegressor = super.load(path)
 }
 
 class BoostingRegressionModel(
@@ -265,44 +242,14 @@ class BoostingRegressionModel(
     }
   }
 
-  private[graft] def setBaseLearner(value: EnsemblePredictorType): this.type =
-    set(baseLearner, value)
-
   override def copy(extra: ParamMap): BoostingRegressionModel =
     copyValues(new BoostingRegressionModel(uid, modelWeights, models), extra).setParent(parent)
 
-  override def write: MLWriter = new BoostingRegressionModel.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(
+    this,
+    ("numModels" -> models.length) ~ ("modelWeights" -> modelWeights.toSeq),
+    GraftPersistence.numbered(models))
 }
 
-object BoostingRegressionModel extends MLReadable[BoostingRegressionModel] {
-
-  private[graft] class Writer(instance: BoostingRegressionModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(
-        instance, path, sparkSession,
-        Some(("numModels" -> instance.models.length) ~
-          ("modelWeights" -> instance.modelWeights.toSeq)))
-      Learners.save(instance.getBaseLearner, s"$path/learner")
-      instance.models.zipWithIndex.foreach { case (m, i) =>
-        Learners.save(m, s"$path/model-$i")
-      }
-    }
-  }
-
-  private class Reader extends MLReader[BoostingRegressionModel] {
-    private val className = classOf[BoostingRegressionModel].getName
-    override def load(path: String): BoostingRegressionModel = {
-      implicit val fmt: DefaultFormats.type = DefaultFormats
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val n = (metadata.metadata \ "numModels").extract[Int]
-      val weights = (metadata.metadata \ "modelWeights").extract[Seq[Double]].toArray
-      val models = Array.tabulate(n)(i => Learners.loadModel(s"$path/model-$i", sparkSession))
-      val model = new BoostingRegressionModel(metadata.uid, weights, models)
-      metadata.getAndSetParams(model, skipParams = Some(List("baseLearner")))
-      model.setBaseLearner(Learners.loadLearner(s"$path/learner", sparkSession))
-    }
-  }
-
-  override def read: MLReader[BoostingRegressionModel] = new Reader
-  override def load(path: String): BoostingRegressionModel = super.load(path)
-}
+object BoostingRegressionModel extends GraftReadable[BoostingRegressionModel](s =>
+  new BoostingRegressionModel(s.uid, s.doubles("modelWeights"), s.models(s.int("numModels"))))

@@ -12,7 +12,6 @@ import org.apache.spark.ml.util.Instrumentation.instrumented
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
-import org.json4s.DefaultFormats
 import org.json4s.JsonDSL._
 
 private[graft] trait DummyClassifierParams
@@ -115,30 +114,9 @@ class DummyClassificationModel(override val uid: String, val classProbabilities:
   override def copy(extra: ParamMap): DummyClassificationModel =
     copyValues(new DummyClassificationModel(uid, classProbabilities), extra).setParent(parent)
 
-  override def write: MLWriter = new DummyClassificationModel.Writer(this)
+  override def write: MLWriter =
+    GraftPersistence.writer(this, "classProbabilities" -> classProbabilities.toSeq)
 }
 
-object DummyClassificationModel extends MLReadable[DummyClassificationModel] {
-
-  private[graft] class Writer(instance: DummyClassificationModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit =
-      DefaultParamsWriter.saveMetadata(
-        instance, path, sparkSession,
-        Some("classProbabilities" -> instance.classProbabilities.toSeq))
-  }
-
-  private class Reader extends MLReader[DummyClassificationModel] {
-    private val className = classOf[DummyClassificationModel].getName
-    override def load(path: String): DummyClassificationModel = {
-      implicit val fmt: DefaultFormats.type = DefaultFormats
-      val metadata = DefaultParamsReader.loadMetadata(path, sparkSession, className)
-      val probs = (metadata.metadata \ "classProbabilities").extract[Seq[Double]].toArray
-      val model = new DummyClassificationModel(metadata.uid, probs)
-      metadata.getAndSetParams(model)
-      model
-    }
-  }
-
-  override def read: MLReader[DummyClassificationModel] = new Reader
-  override def load(path: String): DummyClassificationModel = super.load(path)
-}
+object DummyClassificationModel extends GraftReadable[DummyClassificationModel](s =>
+  new DummyClassificationModel(s.uid, s.doubles("classProbabilities")))

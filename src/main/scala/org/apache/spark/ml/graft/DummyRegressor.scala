@@ -10,7 +10,6 @@ import org.apache.spark.ml.util.Instrumentation.instrumented
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
-import org.json4s.DefaultFormats
 import org.json4s.JsonDSL._
 
 private[graft] trait DummyRegressorParams extends PredictorParams with HasWeightCol {
@@ -203,29 +202,9 @@ class DummyRegressionModel(override val uid: String, val constantValue: Double)
   override def copy(extra: ParamMap): DummyRegressionModel =
     copyValues(new DummyRegressionModel(uid, constantValue), extra).setParent(parent)
 
-  override def write: MLWriter = new DummyRegressionModel.Writer(this)
+  override def write: MLWriter =
+    GraftPersistence.writer(this, "constantValue" -> constantValue)
 }
 
-object DummyRegressionModel extends MLReadable[DummyRegressionModel] {
-
-  private[graft] class Writer(instance: DummyRegressionModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit =
-      DefaultParamsWriter.saveMetadata(
-        instance, path, sparkSession, Some("constantValue" -> instance.constantValue))
-  }
-
-  private class Reader extends MLReader[DummyRegressionModel] {
-    private val className = classOf[DummyRegressionModel].getName
-    override def load(path: String): DummyRegressionModel = {
-      implicit val fmt: DefaultFormats.type = DefaultFormats
-      val metadata = DefaultParamsReader.loadMetadata(path, sparkSession, className)
-      val c = (metadata.metadata \ "constantValue").extract[Double]
-      val model = new DummyRegressionModel(metadata.uid, c)
-      metadata.getAndSetParams(model)
-      model
-    }
-  }
-
-  override def read: MLReader[DummyRegressionModel] = new Reader
-  override def load(path: String): DummyRegressionModel = super.load(path)
-}
+object DummyRegressionModel extends GraftReadable[DummyRegressionModel](s =>
+  new DummyRegressionModel(s.uid, s.get[Double]("constantValue")))

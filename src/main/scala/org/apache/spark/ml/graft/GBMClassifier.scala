@@ -22,7 +22,6 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.ThreadUtils
-import org.json4s.DefaultFormats
 import org.json4s.JsonDSL._
 
 private[graft] trait GBMClassifierParams
@@ -89,10 +88,9 @@ class GBMClassifier(override val uid: String)
 
   /** Joint step-size vector over cached (yenc, f, direction, weight)
     * rows. Margin losses (dim=1: bernoulli, exponential — analytic
-    * scalar hessian, convex in the step) run guarded 1-D Newton: each
-    * iteration is ONE pass computing (phi', phi'') together, <=8
-    * iterations and typically 2-3 — same guard rails as the regressor's
-    * Newton search. The K-dimensional softmax logloss runs a damped
+    * scalar hessian, convex in the step) run [[NewtonStep]], the
+    * regressor's 1-D Newton search: each iteration is ONE pass computing
+    * (phi', phi'') together, typically 2-3 of them. The K-dimensional softmax logloss runs a damped
     * Newton over the FULL KxK hessian (HasFullHessian — the cross-class
     * terms that make coordinate-wise Newton unsound are included; K is
     * numClasses, so the per-row outer product is tiny): one pass per
@@ -107,23 +105,10 @@ class GBMClassifier(override val uid: String)
       lossB: GBMClassificationLoss,
       dim: Int): Array[Double] = {
     if (dim == 1 && lossB.isInstanceOf[HasHessian]) {
-      // bracketed Newton (see GBMRegressor.lineSearch): convex phi, so
-      // phi'(a)'s sign maintains a [lo, hi] bracket; bisect whenever the
-      // raw Newton step escapes it (margin-loss hessians vanish at large
-      // margins, which would otherwise make the step oscillate)
       val h = lossB.asInstanceOf[GBMClassificationLoss with HasHessian]
       val depth = $(aggregationDepth)
-      var lo = 0.0
-      var hi = 100.0
-      var loProbed = false
-      var hiProbed = false
-      var a = 1.0
-      var it = 0
-      var converged = false
-      var failed = false
-      while (it < 12 && !converged && !failed) {
-        val step = a
-        val (dphi, d2phi) = rdd.treeAggregate((0.0, 0.0))(
+      return Array(NewtonStep.search($(tol)) { step =>
+        rdd.treeAggregate((0.0, 0.0))(
           seqOp = { case ((accG, accH), (yenc, f, dir, w)) =>
             val fa = Array(f(0) + step * dir(0))
             (accG + w * h.gradient(yenc, fa)(0) * dir(0),
@@ -131,26 +116,7 @@ class GBMClassifier(override val uid: String)
           },
           combOp = (x, y) => (x._1 + y._1, x._2 + y._2),
           depth = depth)
-        if (!dphi.isFinite || !d2phi.isFinite) failed = true
-        else {
-          val wantRight = dphi <= 0
-          if (dphi > 0) { hi = a; hiProbed = true } else { lo = a; loProbed = true }
-          val newton = if (d2phi > 0) a - dphi / d2phi else Double.NaN
-          // see GBMRegressor.lineSearch: probe a not-yet-probed clamp
-          // directly when the step escapes toward it — near-constant
-          // directions put the constrained optimum AT the clamp, and
-          // bisection would spend log2(range/tol) passes getting there
-          val next =
-            if (newton.isFinite && newton > lo && newton < hi) newton
-            else if (wantRight && !hiProbed) hi
-            else if (!wantRight && !loProbed) lo
-            else (lo + hi) / 2.0
-          if (math.abs(next - a) < $(tol) || hi - lo < $(tol)) converged = true
-          a = next
-        }
-        it += 1
-      }
-      return if (failed) Array(1.0) else Array(a)
+      })
     }
     lossB match {
       case fh: GBMClassificationLoss with HasFullHessian =>
@@ -360,10 +326,7 @@ class GBMClassifier(override val uid: String)
     val valCol =
       if (hasVal) col($(validationIndicatorCol)).cast("boolean") else lit(false)
 
-    val instances = SubBagFit.instances(
-      dataset, $(labelCol),
-      if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol),
-      extra = Seq(valCol -> "__val"))
+    val instances = SubBagFit.instances(this, dataset, extra = Seq(valCol -> "__val"))
     val nf = GraftUtils.numFeatures(instances, "features")
     instr.logNumFeatures(nf)
     instr.logNumClasses(numClasses)
@@ -385,7 +348,7 @@ class GBMClassifier(override val uid: String)
 
     val learner: ClsLearner = $(baseLearner) match {
       case dt: org.apache.spark.ml.regression.DecisionTreeRegressor
-          if $(nativeTreeFastPath) && $(subspaceRatio) >= 1.0 && $(updates) == "gradient" =>
+          if $(subspaceRatio) >= 1.0 && $(updates) == "gradient" =>
         new BinnedClsLearner(instances, init, gbmLoss, hasVal, dt)
       case _ => new PredictorClsLearner(instances, init, gbmLoss, nf)
     }
@@ -478,22 +441,14 @@ class GBMClassifier(override val uid: String)
         loss.asInstanceOf[GBMClassificationLoss with HasHessian]
           .hessian(yenc.toArray, f.toArray).toSeq
       }
-      val trainRows = df.filter(!col("__val"))
       val sampled =
-        if ($(subsampleRatio) == 1.0 && !$(replacement)) trainRows
-        else trainRows.sample($(replacement), $(subsampleRatio), sampleSeed)
-      val full = indices.length == nf
-      def sliced(d: DataFrame): DataFrame =
-        if (full) d
-        else d
-          .withColumn("__sf", udf((v: Vector) => GraftUtils.sliceVector(v, indices))
-            .apply(col("features")))
-          .withMetadata("__sf", GraftUtils.featuresMetadata(indices.length, "__sf"))
+        SubBagFit.sample(df.filter(!col("__val")), $(replacement), $(subsampleRatio), sampleSeed)
+      def sliced(d: DataFrame): DataFrame = SubBagFit.sliceFeatures(d, indices, nf, "__sf")
 
       var fitBase = sampled.withColumn("__r", residUdf(col("__yenc"), col("__f")))
       if (newton) fitBase = fitBase.withColumn("__h", hessUdf(col("__yenc"), col("__f")))
       fitBase = sliced(fitBase)
-      val featCol = if (full) "features" else "__sf"
+      val featCol = if (indices.length == nf) "features" else "__sf"
       // fused multi-target fit first: one job for all K classes when the
       // base learner's fit is a single aggregation (K separate fit
       // actions are K job floors on a small-partition input); the same
@@ -686,31 +641,10 @@ class GBMClassifier(override val uid: String)
 
   override def copy(extra: ParamMap): GBMClassifier = defaultCopy(extra)
 
-  override def write: MLWriter = new GBMClassifier.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(this)
 }
 
-object GBMClassifier extends MLReadable[GBMClassifier] {
-
-  private[graft] class Writer(instance: GBMClassifier) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(instance, path, sparkSession)
-      Learners.save(instance.getBaseLearner, s"$path/learner")
-    }
-  }
-
-  private class Reader extends MLReader[GBMClassifier] {
-    private val className = classOf[GBMClassifier].getName
-    override def load(path: String): GBMClassifier = {
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val est = new GBMClassifier(metadata.uid)
-      metadata.getAndSetParams(est)
-      est.setBaseLearner(Learners.loadLearner(s"$path/learner", sparkSession))
-    }
-  }
-
-  override def read: MLReader[GBMClassifier] = new Reader
-  override def load(path: String): GBMClassifier = super.load(path)
-}
+object GBMClassifier extends GraftReadable[GBMClassifier](s => new GBMClassifier(s.uid))
 
 class GBMClassificationModel(
     override val uid: String,
@@ -751,59 +685,21 @@ class GBMClassificationModel(
       case v => throw new IllegalArgumentException(s"unexpected raw vector $v")
     }
 
-  private[graft] def setBaseLearner(value: EnsemblePredictorType): this.type =
-    set(baseLearner, value)
-
   override def copy(extra: ParamMap): GBMClassificationModel =
     copyValues(
       new GBMClassificationModel(uid, numClasses, init, modelWeights, subspaces, models),
       extra).setParent(parent)
 
-  override def write: MLWriter = new GBMClassificationModel.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(
+    this,
+    ("numIters" -> models.length) ~ ("dim" -> dim) ~ ("numClasses" -> numClasses) ~
+      ("init" -> init.toSeq) ~ ("modelWeights" -> modelWeights.map(_.toSeq).toSeq) ~
+      ("subspaces" -> subspaces.map(_.toSeq).toSeq),
+    for (i <- models.indices; k <- 0 until dim) yield s"model-$i-$k" -> models(i)(k))
 }
 
-object GBMClassificationModel extends MLReadable[GBMClassificationModel] {
-
-  private[graft] class Writer(instance: GBMClassificationModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(
-        instance, path, sparkSession,
-        Some(("numIters" -> instance.models.length) ~
-          ("dim" -> instance.init.length) ~
-          ("numClasses" -> instance.numClasses) ~
-          ("init" -> instance.init.toSeq) ~
-          ("modelWeights" -> instance.modelWeights.map(_.toSeq).toSeq) ~
-          ("subspaces" -> instance.subspaces.map(_.toSeq).toSeq)))
-      Learners.save(instance.getBaseLearner, s"$path/learner")
-      instance.models.zipWithIndex.foreach { case (ms, i) =>
-        ms.zipWithIndex.foreach { case (m, k) =>
-          Learners.save(m, s"$path/model-$i-$k")
-        }
-      }
-    }
-  }
-
-  private class Reader extends MLReader[GBMClassificationModel] {
-    private val className = classOf[GBMClassificationModel].getName
-    override def load(path: String): GBMClassificationModel = {
-      implicit val fmt: DefaultFormats.type = DefaultFormats
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val iters = (metadata.metadata \ "numIters").extract[Int]
-      val dim = (metadata.metadata \ "dim").extract[Int]
-      val k = (metadata.metadata \ "numClasses").extract[Int]
-      val init = (metadata.metadata \ "init").extract[Seq[Double]].toArray
-      val weights = (metadata.metadata \ "modelWeights").extract[Seq[Seq[Double]]]
-        .map(_.toArray).toArray
-      val subspaces = (metadata.metadata \ "subspaces").extract[Seq[Seq[Int]]]
-        .map(_.toArray).toArray
-      val models = Array.tabulate(iters)(i =>
-        Array.tabulate(dim)(d => Learners.loadModel(s"$path/model-$i-$d", sparkSession)))
-      val model = new GBMClassificationModel(metadata.uid, k, init, weights, subspaces, models)
-      metadata.getAndSetParams(model, skipParams = Some(List("baseLearner")))
-      model.setBaseLearner(Learners.loadLearner(s"$path/learner", sparkSession))
-    }
-  }
-
-  override def read: MLReader[GBMClassificationModel] = new Reader
-  override def load(path: String): GBMClassificationModel = super.load(path)
-}
+object GBMClassificationModel extends GraftReadable[GBMClassificationModel](s =>
+  new GBMClassificationModel(
+    s.uid, s.int("numClasses"), s.doubles("init"),
+    s.get[Seq[Seq[Double]]]("modelWeights").map(_.toArray).toArray, s.subspaces,
+    Array.tabulate(s.int("numIters"), s.int("dim"))((i, k) => s.model(s"model-$i-$k"))))

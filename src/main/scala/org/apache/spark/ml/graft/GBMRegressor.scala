@@ -22,7 +22,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import org.json4s.DefaultFormats
 import org.json4s.JsonDSL._
 
 /** Params shared by GBMRegressor / GBMClassifier (reference:
@@ -35,8 +34,7 @@ private[graft] trait GBMParams
     with HasMaxIter
     with HasSubBag
     with HasCheckpointInterval
-    with HasAggregationDepth
-    with HasNativeTreeFastPath {
+    with HasAggregationDepth {
 
   final val learningRate: DoubleParam = new DoubleParam(
     this, "learningRate", "shrinkage in (0,1]", ParamValidators.inRange(0, 1, false, true))
@@ -106,6 +104,49 @@ private[graft] final class ValidationStop(patience: Int, tol: Double) {
         stopped = true
       }
     }
+}
+
+/** Bracketed 1-D Newton search for the step `a` in [0, 100] that minimizes
+  * a convex phi(a), shared by the GBM line searches. `probe(a)` is one pass
+  * over the data returning (phi'(a), phi''(a)). Convexity means the sign of
+  * phi'(a) tells which side of the optimum `a` is on, so a shrinking
+  * [lo, hi] bracket is kept and the search falls back to its midpoint
+  * whenever the Newton step escapes it (hessians that vanish in saturated
+  * regions, as logcosh's and the margin losses' do, make the raw step
+  * oscillate between the clamps). A step escaping toward a clamp not yet
+  * probed probes that clamp directly: near-constant directions put the
+  * optimum there, and bisecting toward it would cost log2(range/tol)
+  * passes. A non-finite probe gives the step 1.
+  */
+private[graft] object NewtonStep {
+  def search(tol: Double)(probe: Double => (Double, Double)): Double = {
+    var lo = 0.0
+    var hi = 100.0
+    var loProbed = false
+    var hiProbed = false
+    var a = 1.0
+    var it = 0
+    var converged = false
+    var failed = false
+    while (it < 12 && !converged && !failed) {
+      val (dphi, d2phi) = probe(a)
+      if (!dphi.isFinite || !d2phi.isFinite) failed = true
+      else {
+        val wantRight = dphi <= 0
+        if (dphi > 0) { hi = a; hiProbed = true } else { lo = a; loProbed = true }
+        val newton = if (d2phi > 0) a - dphi / d2phi else Double.NaN
+        val next =
+          if (newton.isFinite && newton > lo && newton < hi) newton
+          else if (wantRight && !hiProbed) hi
+          else if (!wantRight && !loProbed) lo
+          else (lo + hi) / 2.0
+        if (math.abs(next - a) < tol || hi - lo < tol) converged = true
+        a = next
+      }
+      it += 1
+    }
+    if (failed) 1.0 else a
+  }
 }
 
 private[graft] trait GBMRegressorParams extends GBMParams {
@@ -184,10 +225,7 @@ class GBMRegressor(override val uid: String)
     val hasVal = isDefined(validationIndicatorCol) && $(validationIndicatorCol).nonEmpty
     val valCol =
       if (hasVal) col($(validationIndicatorCol)).cast("boolean") else lit(false)
-    val instances = SubBagFit.instances(
-      dataset, $(labelCol),
-      if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol),
-      extra = Seq(valCol -> "__val"))
+    val instances = SubBagFit.instances(this, dataset, extra = Seq(valCol -> "__val"))
     val nf = GraftUtils.numFeatures(instances, "features")
     instr.logNumFeatures(nf)
 
@@ -213,7 +251,7 @@ class GBMRegressor(override val uid: String)
 
     val learner: RegLearner = $(baseLearner) match {
       case dt: org.apache.spark.ml.regression.DecisionTreeRegressor
-          if $(nativeTreeFastPath) && $(subspaceRatio) >= 1.0 && $(updates) == "gradient" =>
+          if $(subspaceRatio) >= 1.0 && $(updates) == "gradient" =>
         new BinnedRegLearner(instances, init, hasVal, dt)
       case _ => new PredictorRegLearner(instances, init, nf)
     }
@@ -283,7 +321,7 @@ class GBMRegressor(override val uid: String)
     * a* = sum(w*d*(y-f)) / sum(w*d^2) — ONE pass instead of Brent's ~25
     * sequential objective jobs (each a full cluster barrier at scale).
     * Losses with an analytic scalar hessian (logcosh, scaled logcosh) run
-    * guarded 1-D Newton on phi(a) = sum w*L(y, f + a*d): each iteration is
+    * [[NewtonStep]] on phi(a) = sum w*L(y, f + a*d): each iteration is
     * ONE pass computing (phi', phi'') together, and the convex phi
     * converges in 2-3 iterations — same [0, 100] clamp and fall-back-to-1
     * guard rails as the closed form. Only the losses with no usable
@@ -302,23 +340,9 @@ class GBMRegressor(override val uid: String)
       if (den <= 0 || !num.isFinite) 1.0
       else math.min(math.max(num / den, 0.0), 100.0)
     } else if (lossB.isInstanceOf[HasScalarHessian]) {
-      // bracketed Newton: phi is convex, so the sign of phi'(a) tells
-      // which side of the optimum a is on — keep a shrinking [lo, hi]
-      // bracket and fall back to its midpoint whenever the Newton step
-      // escapes it (logcosh's hessian ~ 0 in saturated regions makes the
-      // raw step oscillate between the clamps)
       val h = lossB.asInstanceOf[GBMRegressionLoss with HasScalarHessian]
-      var lo = 0.0
-      var hi = 100.0
-      var loProbed = false
-      var hiProbed = false
-      var a = 1.0
-      var it = 0
-      var converged = false
-      var failed = false
-      while (it < 12 && !converged && !failed) {
-        val step = a
-        val (dphi, d2phi) = data.treeAggregate((0.0, 0.0))(
+      NewtonStep.search($(tol)) { step =>
+        data.treeAggregate((0.0, 0.0))(
           (acc, t) => {
             val f = t._2 + step * t._3
             (acc._1 + t._4 * t._3 * h.gradient(t._1, f),
@@ -326,26 +350,7 @@ class GBMRegressor(override val uid: String)
           },
           (x, y) => (x._1 + y._1, x._2 + y._2),
           depth)
-        if (!dphi.isFinite || !d2phi.isFinite) failed = true
-        else {
-          val wantRight = dphi <= 0
-          if (dphi > 0) { hi = a; hiProbed = true } else { lo = a; loProbed = true }
-          val newton = if (d2phi > 0) a - dphi / d2phi else Double.NaN
-          // convex phi: a step escaping toward a NOT-yet-probed clamp means
-          // the optimum may BE the clamp (near-constant directions put it
-          // there) — probe the clamp directly, one pass, instead of
-          // bisecting toward it in log2(range/tol) passes
-          val next =
-            if (newton.isFinite && newton > lo && newton < hi) newton
-            else if (wantRight && !hiProbed) hi
-            else if (!wantRight && !loProbed) lo
-            else (lo + hi) / 2.0
-          if (math.abs(next - a) < $(tol) || hi - lo < $(tol)) converged = true
-          a = next
-        }
-        it += 1
       }
-      if (failed) 1.0 else a
     } else {
       data.count()
       val objective = new UnivariateObjectiveFunction(a =>
@@ -391,17 +396,9 @@ class GBMRegressor(override val uid: String)
       // sub-bag of (instance, prediction) pairs — column-aligned by
       // construction, no RDD.zip (reference samples pairs jointly at
       // regression/GBMRegressor.scala:355-366)
-      val trainRows = df.filter(!col("__val"))
       val sampled =
-        if ($(subsampleRatio) == 1.0 && !$(replacement)) trainRows
-        else trainRows.sample($(replacement), $(subsampleRatio), sampleSeed)
-      val full = indices.length == nf
-      def sliced(d: DataFrame): DataFrame =
-        if (full) d
-        else d
-          .withColumn("__sf", udf((v: Vector) => GraftUtils.sliceVector(v, indices))
-            .apply(col("features")))
-          .withMetadata("__sf", GraftUtils.featuresMetadata(indices.length, "__sf"))
+        SubBagFit.sample(df.filter(!col("__val")), $(replacement), $(subsampleRatio), sampleSeed)
+      def sliced(d: DataFrame): DataFrame = SubBagFit.sliceFeatures(d, indices, nf, "__sf")
 
       var fitDf = sampled.withColumn("__r", residUdf(col("label"), col("__f")))
       fitDf =
@@ -415,7 +412,7 @@ class GBMRegressor(override val uid: String)
             .withColumn("__r", col("__r") / col("__h"))
             .withColumn("__w", col("weight") * col("__h"))
         } else fitDf.withColumn("__w", col("weight"))
-      val featCol = if (full) "features" else "__sf"
+      val featCol = if (indices.length == nf) "features" else "__sf"
       val model = Learners.fit(
         $(baseLearner), sliced(fitDf), "__r", featCol, Some("__w"), weightRequired = newton)
       // direction on ALL rows (train + validation)
@@ -536,31 +533,10 @@ class GBMRegressor(override val uid: String)
 
   override def copy(extra: ParamMap): GBMRegressor = defaultCopy(extra)
 
-  override def write: MLWriter = new GBMRegressor.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(this)
 }
 
-object GBMRegressor extends MLReadable[GBMRegressor] {
-
-  private[graft] class Writer(instance: GBMRegressor) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(instance, path, sparkSession)
-      Learners.save(instance.getBaseLearner, s"$path/learner")
-    }
-  }
-
-  private class Reader extends MLReader[GBMRegressor] {
-    private val className = classOf[GBMRegressor].getName
-    override def load(path: String): GBMRegressor = {
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val est = new GBMRegressor(metadata.uid)
-      metadata.getAndSetParams(est)
-      est.setBaseLearner(Learners.loadLearner(s"$path/learner", sparkSession))
-    }
-  }
-
-  override def read: MLReader[GBMRegressor] = new Reader
-  override def load(path: String): GBMRegressor = super.load(path)
-}
+object GBMRegressor extends GraftReadable[GBMRegressor](s => new GBMRegressor(s.uid))
 
 class GBMRegressionModel(
     override val uid: String,
@@ -587,50 +563,17 @@ class GBMRegressionModel(
     f
   }
 
-  private[graft] def setBaseLearner(value: EnsemblePredictorType): this.type =
-    set(baseLearner, value)
-
   override def copy(extra: ParamMap): GBMRegressionModel =
     copyValues(new GBMRegressionModel(uid, init, modelWeights, subspaces, models), extra)
       .setParent(parent)
 
-  override def write: MLWriter = new GBMRegressionModel.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(
+    this,
+    ("numModels" -> models.length) ~ ("modelWeights" -> modelWeights.toSeq) ~
+      ("subspaces" -> subspaces.map(_.toSeq).toSeq),
+    GraftPersistence.numbered(models) :+ ("init" -> init))
 }
 
-object GBMRegressionModel extends MLReadable[GBMRegressionModel] {
-
-  private[graft] class Writer(instance: GBMRegressionModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(
-        instance, path, sparkSession,
-        Some(("numModels" -> instance.models.length) ~
-          ("modelWeights" -> instance.modelWeights.toSeq) ~
-          ("subspaces" -> instance.subspaces.map(_.toSeq).toSeq)))
-      Learners.save(instance.getBaseLearner, s"$path/learner")
-      Learners.save(instance.init, s"$path/init")
-      instance.models.zipWithIndex.foreach { case (m, i) =>
-        Learners.save(m, s"$path/model-$i")
-      }
-    }
-  }
-
-  private class Reader extends MLReader[GBMRegressionModel] {
-    private val className = classOf[GBMRegressionModel].getName
-    override def load(path: String): GBMRegressionModel = {
-      implicit val fmt: DefaultFormats.type = DefaultFormats
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val n = (metadata.metadata \ "numModels").extract[Int]
-      val weights = (metadata.metadata \ "modelWeights").extract[Seq[Double]].toArray
-      val subspaces = (metadata.metadata \ "subspaces").extract[Seq[Seq[Int]]]
-        .map(_.toArray).toArray
-      val init = Learners.loadModel(s"$path/init", sparkSession)
-      val models = Array.tabulate(n)(i => Learners.loadModel(s"$path/model-$i", sparkSession))
-      val model = new GBMRegressionModel(metadata.uid, init, weights, subspaces, models)
-      metadata.getAndSetParams(model, skipParams = Some(List("baseLearner")))
-      model.setBaseLearner(Learners.loadLearner(s"$path/learner", sparkSession))
-    }
-  }
-
-  override def read: MLReader[GBMRegressionModel] = new Reader
-  override def load(path: String): GBMRegressionModel = super.load(path)
-}
+object GBMRegressionModel extends GraftReadable[GBMRegressionModel](s =>
+  new GBMRegressionModel(
+    s.uid, s.model("init"), s.doubles("modelWeights"), s.subspaces, s.models(s.int("numModels"))))

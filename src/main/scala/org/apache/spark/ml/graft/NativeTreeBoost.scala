@@ -24,12 +24,13 @@ import org.apache.spark.storage.StorageLevel
   * re-enters the base learner's own `fit` every round and so re-pays the
   * binning per round.
   *
-  * The estimators pick this backend from what they can observe (the
-  * `nativeTreeFastPath` param only lets suites force the other one): the
-  * base learner is a Spark DecisionTree and the round's binning is
-  * provably the generic fit's. Candidate splits are quantiles of
-  * the feature values under the instance weights, so they are round-
-  * invariant only while the weights that shape them are: GBM with gradient
+  * The estimators pick this backend from the input alone, with no option
+  * to override it: the base learner is a Spark DecisionTree and the
+  * round's binning is provably the generic fit's (any other predictor,
+  * including one that wraps a tree, takes the `Predictor` backend).
+  * Candidate splits are quantiles of the feature values under the
+  * instance weights, so they are round-invariant only while the weights
+  * that shape them are: GBM with gradient
   * updates and the full feature space (newton reweights rows by the
   * hessian, a subspace changes the feature set) and AdaBoost, whose fixed
   * grid is computed once from the sum-1 instance weights (the

@@ -8,7 +8,6 @@ import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
-import org.json4s.DefaultFormats
 import org.json4s.JsonDSL._
 
 private[graft] trait StackingClassifierParams extends StackingParams {
@@ -60,9 +59,7 @@ class StackingClassifier(override val uid: String)
           "stackMethod=proba requires probabilistic base learners")
       case _ => ()
     }
-    val instances = SubBagFit.instances(
-      dataset, $(labelCol),
-      if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol))
+    val instances = SubBagFit.instances(this, dataset)
     val handlePersist = dataset.storageLevel == StorageLevel.NONE
     if (handlePersist) instances.persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -99,40 +96,12 @@ class StackingClassifier(override val uid: String)
 
   override def copy(extra: ParamMap): StackingClassifier = defaultCopy(extra)
 
-  override def write: MLWriter = new StackingClassifier.Writer(this)
+  override def write: MLWriter =
+    GraftPersistence.writer(this, "numLearners" -> getBaseLearners.length)
 }
 
-object StackingClassifier extends MLReadable[StackingClassifier] {
-
-  private[graft] class Writer(instance: StackingClassifier) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(
-        instance, path, sparkSession,
-        Some("numLearners" -> instance.getBaseLearners.length))
-      instance.getBaseLearners.zipWithIndex.foreach { case (l, i) =>
-        Learners.save(l, s"$path/learner-$i")
-      }
-      Learners.save(instance.getStacker, s"$path/stacker")
-    }
-  }
-
-  private class Reader extends MLReader[StackingClassifier] {
-    private val className = classOf[StackingClassifier].getName
-    override def load(path: String): StackingClassifier = {
-      implicit val fmt: DefaultFormats.type = DefaultFormats
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val n = (metadata.metadata \ "numLearners").extract[Int]
-      val est = new StackingClassifier(metadata.uid)
-      metadata.getAndSetParams(est)
-      est.setBaseLearners(
-        Array.tabulate(n)(i => Learners.loadLearner(s"$path/learner-$i", sparkSession)))
-      est.setStacker(Learners.loadLearner(s"$path/stacker", sparkSession))
-    }
-  }
-
-  override def read: MLReader[StackingClassifier] = new Reader
-  override def load(path: String): StackingClassifier = super.load(path)
-}
+object StackingClassifier
+    extends GraftReadable[StackingClassifier](s => new StackingClassifier(s.uid))
 
 class StackingClassificationModel(
     override val uid: String,
@@ -158,52 +127,12 @@ class StackingClassificationModel(
     stack.predict(Vectors.dense(meta))
   }
 
-  private[graft] def setLearners(
-      ls: Array[EnsemblePredictorType],
-      st: EnsemblePredictorType): this.type = {
-    set(baseLearners, ls)
-    set(stacker, st)
-  }
-
   override def copy(extra: ParamMap): StackingClassificationModel =
     copyValues(new StackingClassificationModel(uid, models, stack), extra).setParent(parent)
 
-  override def write: MLWriter = new StackingClassificationModel.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(
+    this, "numModels" -> models.length, GraftPersistence.numbered(models) :+ ("stack" -> stack))
 }
 
-object StackingClassificationModel extends MLReadable[StackingClassificationModel] {
-
-  private[graft] class Writer(instance: StackingClassificationModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(
-        instance, path, sparkSession, Some("numModels" -> instance.models.length))
-      instance.getBaseLearners.zipWithIndex.foreach { case (l, i) =>
-        Learners.save(l, s"$path/learner-$i")
-      }
-      Learners.save(instance.getStacker, s"$path/stacker")
-      instance.models.zipWithIndex.foreach { case (m, i) =>
-        Learners.save(m, s"$path/model-$i")
-      }
-      Learners.save(instance.stack, s"$path/stack")
-    }
-  }
-
-  private class Reader extends MLReader[StackingClassificationModel] {
-    private val className = classOf[StackingClassificationModel].getName
-    override def load(path: String): StackingClassificationModel = {
-      implicit val fmt: DefaultFormats.type = DefaultFormats
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val n = (metadata.metadata \ "numModels").extract[Int]
-      val models = Array.tabulate(n)(i => Learners.loadModel(s"$path/model-$i", sparkSession))
-      val stack = Learners.loadModel(s"$path/stack", sparkSession)
-      val model = new StackingClassificationModel(metadata.uid, models, stack)
-      metadata.getAndSetParams(model, skipParams = Some(List("baseLearners", "stacker")))
-      model.setLearners(
-        Array.tabulate(n)(i => Learners.loadLearner(s"$path/learner-$i", sparkSession)),
-        Learners.loadLearner(s"$path/stacker", sparkSession))
-    }
-  }
-
-  override def read: MLReader[StackingClassificationModel] = new Reader
-  override def load(path: String): StackingClassificationModel = super.load(path)
-}
+object StackingClassificationModel extends GraftReadable[StackingClassificationModel](s =>
+  new StackingClassificationModel(s.uid, s.models(s.int("numModels")), s.model("stack")))

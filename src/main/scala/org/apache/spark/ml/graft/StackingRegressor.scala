@@ -15,7 +15,6 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.ThreadUtils
-import org.json4s.DefaultFormats
 import org.json4s.JsonDSL._
 
 private[graft] trait StackingParams
@@ -100,9 +99,7 @@ class StackingRegressor(override val uid: String)
   }
 
   private def trainImpl(dataset: Dataset[_], instr: Instrumentation): StackingRegressionModel = {
-    val instances = SubBagFit.instances(
-      dataset, $(labelCol),
-      if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol))
+    val instances = SubBagFit.instances(this, dataset)
     val handlePersist = dataset.storageLevel == StorageLevel.NONE
     if (handlePersist) instances.persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -121,40 +118,11 @@ class StackingRegressor(override val uid: String)
 
   override def copy(extra: ParamMap): StackingRegressor = defaultCopy(extra)
 
-  override def write: MLWriter = new StackingRegressor.Writer(this)
+  override def write: MLWriter =
+    GraftPersistence.writer(this, "numLearners" -> getBaseLearners.length)
 }
 
-object StackingRegressor extends MLReadable[StackingRegressor] {
-
-  private[graft] class Writer(instance: StackingRegressor) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(
-        instance, path, sparkSession,
-        Some("numLearners" -> instance.getBaseLearners.length))
-      instance.getBaseLearners.zipWithIndex.foreach { case (l, i) =>
-        Learners.save(l, s"$path/learner-$i")
-      }
-      Learners.save(instance.getStacker, s"$path/stacker")
-    }
-  }
-
-  private class Reader extends MLReader[StackingRegressor] {
-    private val className = classOf[StackingRegressor].getName
-    override def load(path: String): StackingRegressor = {
-      implicit val fmt: DefaultFormats.type = DefaultFormats
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val n = (metadata.metadata \ "numLearners").extract[Int]
-      val est = new StackingRegressor(metadata.uid)
-      metadata.getAndSetParams(est)
-      est.setBaseLearners(
-        Array.tabulate(n)(i => Learners.loadLearner(s"$path/learner-$i", sparkSession)))
-      est.setStacker(Learners.loadLearner(s"$path/stacker", sparkSession))
-    }
-  }
-
-  override def read: MLReader[StackingRegressor] = new Reader
-  override def load(path: String): StackingRegressor = super.load(path)
-}
+object StackingRegressor extends GraftReadable[StackingRegressor](s => new StackingRegressor(s.uid))
 
 class StackingRegressionModel(
     override val uid: String,
@@ -174,52 +142,12 @@ class StackingRegressionModel(
     stack.predict(Vectors.dense(meta))
   }
 
-  private[graft] def setLearners(
-      ls: Array[EnsemblePredictorType],
-      st: EnsemblePredictorType): this.type = {
-    set(baseLearners, ls)
-    set(stacker, st)
-  }
-
   override def copy(extra: ParamMap): StackingRegressionModel =
     copyValues(new StackingRegressionModel(uid, models, stack), extra).setParent(parent)
 
-  override def write: MLWriter = new StackingRegressionModel.Writer(this)
+  override def write: MLWriter = GraftPersistence.writer(
+    this, "numModels" -> models.length, GraftPersistence.numbered(models) :+ ("stack" -> stack))
 }
 
-object StackingRegressionModel extends MLReadable[StackingRegressionModel] {
-
-  private[graft] class Writer(instance: StackingRegressionModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftPersistence.saveMetadata(
-        instance, path, sparkSession, Some("numModels" -> instance.models.length))
-      instance.getBaseLearners.zipWithIndex.foreach { case (l, i) =>
-        Learners.save(l, s"$path/learner-$i")
-      }
-      Learners.save(instance.getStacker, s"$path/stacker")
-      instance.models.zipWithIndex.foreach { case (m, i) =>
-        Learners.save(m, s"$path/model-$i")
-      }
-      Learners.save(instance.stack, s"$path/stack")
-    }
-  }
-
-  private class Reader extends MLReader[StackingRegressionModel] {
-    private val className = classOf[StackingRegressionModel].getName
-    override def load(path: String): StackingRegressionModel = {
-      implicit val fmt: DefaultFormats.type = DefaultFormats
-      val metadata = GraftPersistence.loadMetadata(path, sparkSession, className)
-      val n = (metadata.metadata \ "numModels").extract[Int]
-      val models = Array.tabulate(n)(i => Learners.loadModel(s"$path/model-$i", sparkSession))
-      val stack = Learners.loadModel(s"$path/stack", sparkSession)
-      val model = new StackingRegressionModel(metadata.uid, models, stack)
-      metadata.getAndSetParams(model, skipParams = Some(List("baseLearners", "stacker")))
-      model.setLearners(
-        Array.tabulate(n)(i => Learners.loadLearner(s"$path/learner-$i", sparkSession)),
-        Learners.loadLearner(s"$path/stacker", sparkSession))
-    }
-  }
-
-  override def read: MLReader[StackingRegressionModel] = new Reader
-  override def load(path: String): StackingRegressionModel = super.load(path)
-}
+object StackingRegressionModel extends GraftReadable[StackingRegressionModel](s =>
+  new StackingRegressionModel(s.uid, s.models(s.int("numModels")), s.model("stack")))

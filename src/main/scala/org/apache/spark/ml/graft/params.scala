@@ -1,8 +1,11 @@
 package org.apache.spark.ml.graft
 
+import scala.reflect.ClassTag
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.param.shared.{HasSeed, HasWeightCol}
-import org.apache.spark.ml.util.{DefaultParamsReader, DefaultParamsWriter, MLWritable}
+import org.apache.spark.ml.util._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s.JsonDSL._
 import org.json4s._
@@ -86,29 +89,6 @@ private[graft] object GraftInstrumentation {
       case _ => true
     }).toIndexedSeq: _*)
   }
-}
-
-/** Lets the estimator fit its trees on the bin-once `TreePoint` backend
-  * ([[NativeTreeBoost]]; bagging: one `RandomForest.runBagged` pass)
-  * instead of re-entering the base learner's `fit` per tree. The backend is
-  * chosen from the input, not by this param alone: it is used only when
-  * the base learner is a Spark DecisionTree and the binning is provably
-  * the same every round (feature binning and candidate splits depend only
-  * on feature values and the round-invariant weights, so metadata +
-  * findSplits + TreePoint conversion amortize over the whole fit). Both
-  * backends run under the same training loop; the param (default on)
-  * exists so suites can force the spark.ml `Predictor` backend and pin the
-  * two against each other.
-  */
-private[graft] trait HasNativeTreeFastPath extends Params {
-
-  final val nativeTreeFastPath: BooleanParam = new BooleanParam(
-    this, "nativeTreeFastPath",
-    "reuse binned tree representation across fits for DecisionTree base learners")
-  def getNativeTreeFastPath: Boolean = $(nativeTreeFastPath)
-  def setNativeTreeFastPath(value: Boolean): this.type = set(nativeTreeFastPath, value)
-
-  setDefault(nativeTreeFastPath -> true)
 }
 
 private[graft] trait HasVotingStrategy extends Params {
@@ -219,41 +199,116 @@ private[graft] object Learners {
     val m = model.asInstanceOf[VectorModel]
     m.transform(df, ParamMap(m.featuresCol.w(featuresCol), m.predictionCol.w(predictionCol)))
   }
-
-  /** Save/load a nested spark.ml writable (base learner or fitted model). */
-  def save(stage: Params, path: String): Unit =
-    stage.asInstanceOf[MLWritable].write.save(path)
-
-  def loadLearner(path: String, spark: SparkSession): EnsemblePredictorType =
-    DefaultParamsReader.loadParamsInstance[EnsemblePredictorType](path, spark)
-
-  def loadModel(path: String, spark: SparkSession): EnsemblePredictionModelType =
-    DefaultParamsReader.loadParamsInstance[EnsemblePredictionModelType](path, spark)
 }
 
-/** Metadata persistence that skips non-JSON-encodable learner params
-  * (reference: ensemble/ensembleParams.scala:85-105 pattern).
+/** The one on-disk layout of the ensemble estimators and models
+  * (reference: ensemble/ensembleParams.scala:85-105,126-146,168-193). A
+  * save writes under its path:
+  *  - `metadata/`: the spark.ml metadata JSON plus the fields a model
+  *    passes in (counts, weights, subspaces). The learner params hold
+  *    estimators, which have no JSON encoding, so they are left out of it;
+  *    every other param is written with its value, defaults included.
+  *    Classes without learner params (the Dummy models) keep spark.ml's
+  *    own paramMap of explicitly set params.
+  *  - one directory per learner param: `learner/` for baseLearner,
+  *    `learner-i/` per element of baseLearners, and `stacker/`.
+  *  - a model's fitted sub-models under the names it gives them:
+  *    `model-i/` (or `model-i-k/` per iteration and class), `init/`,
+  *    `stack/`.
+  * A load sets the params from the metadata and each learner param from
+  * its directory; a per-class constructor builds the instance from the
+  * saved fields and sub-models.
   */
 private[graft] object GraftPersistence {
 
-  val learnerParamNames: Set[String] = Set("baseLearner", "baseLearners", "stacker")
+  /** Learner param -> its directory; baseLearners' elements go to `learner-i`. */
+  private val learnerDirs =
+    Map("baseLearner" -> "learner", "baseLearners" -> "learner", "stacker" -> "stacker")
+  val learnerParamNames: Set[String] = learnerDirs.keySet
 
-  def saveMetadata(
+  /** Written by every save before the learner backend was chosen from the
+    * input alone; a load skips it.
+    */
+  private val retiredParamNames = List("nativeTreeFastPath")
+
+  private def learnerParams(instance: Params): Seq[Param[Any]] =
+    instance.params.toSeq.filter(p => learnerParamNames(p.name)).map(_.asInstanceOf[Param[Any]])
+
+  private def saveStage(stage: Any, path: String): Unit =
+    stage.asInstanceOf[MLWritable].write.save(path)
+
+  private def loadLearner(path: String, spark: SparkSession): EnsemblePredictorType =
+    DefaultParamsReader.loadParamsInstance[EnsemblePredictorType](path, spark)
+
+  /** `models(i)` under `model-i`. */
+  def numbered(models: Array[EnsemblePredictionModelType]): Seq[(String, Params)] =
+    models.indices.map(i => s"model-$i" -> models(i))
+
+  def writer(
       instance: Params,
-      path: String,
-      spark: SparkSession,
-      extraMetadata: Option[JObject] = None): Unit = {
-    val jsonParams: JValue = render(
-      instance.extractParamMap().toSeq
-        .filterNot(p => learnerParamNames.contains(p.param.name))
-        .map { case ParamPair(p, v) =>
-          p.name -> parse(p.asInstanceOf[Param[Any]].jsonEncode(v))
+      extraMetadata: JObject = JObject(),
+      subModels: Seq[(String, Params)] = Nil): MLWriter = new MLWriter {
+    override protected def saveImpl(path: String): Unit = {
+      val learners = learnerParams(instance)
+      val jsonParams =
+        if (learners.isEmpty) None
+        else Some(render(instance.extractParamMap().toSeq
+          .filterNot(p => learnerParamNames(p.param.name))
+          .map { case ParamPair(p, v) => p.name -> parse(p.asInstanceOf[Param[Any]].jsonEncode(v)) }
+          .toList))
+      DefaultParamsWriter.saveMetadata(
+        instance, path, sparkSession, Some(extraMetadata), jsonParams)
+      learners.foreach { p =>
+        val dir = s"$path/${learnerDirs(p.name)}"
+        instance.getOrDefault(p) match {
+          case stages: Array[_] =>
+            stages.zipWithIndex.foreach { case (s, i) => saveStage(s, s"$dir-$i") }
+          case stage => saveStage(stage, dir)
         }
-        .toList)
-    DefaultParamsWriter.saveMetadata(instance, path, spark, extraMetadata, Some(jsonParams))
+      }
+      subModels.foreach { case (dir, m) => saveStage(m, s"$path/$dir") }
+    }
   }
 
-  def loadMetadata(path: String, spark: SparkSession, expectedClassName: String)
-      : DefaultParamsReader.Metadata =
-    DefaultParamsReader.loadMetadata(path, spark, expectedClassName)
+  /** What a load hands a class's constructor: the saved uid, the extra
+    * metadata fields and the sub-models.
+    */
+  final class Saved(metadata: DefaultParamsReader.Metadata, path: String, spark: SparkSession) {
+    def uid: String = metadata.uid
+    def get[V: Manifest](key: String): V =
+      (metadata.metadata \ key).extract[V](DefaultFormats, manifest)
+    def int(key: String): Int = get[Int](key)
+    def doubles(key: String): Array[Double] = get[Seq[Double]](key).toArray
+    def subspaces: Array[Array[Int]] = get[Seq[Seq[Int]]]("subspaces").map(_.toArray).toArray
+    def model(dir: String): EnsemblePredictionModelType =
+      DefaultParamsReader.loadParamsInstance[EnsemblePredictionModelType](s"$path/$dir", spark)
+    /** The `n` sub-models written by [[numbered]]. */
+    def models(n: Int): Array[EnsemblePredictionModelType] =
+      Array.tabulate(n)(i => model(s"model-$i"))
+  }
+
+  def reader[T <: Params](construct: Saved => T)(implicit cls: ClassTag[T]): MLReader[T] =
+    new MLReader[T] {
+      override def load(path: String): T = {
+        val metadata =
+          DefaultParamsReader.loadMetadata(path, sparkSession, cls.runtimeClass.getName)
+        val instance = construct(new Saved(metadata, path, sparkSession))
+        metadata.getAndSetParams(instance, Some(retiredParamNames))
+        val fs = new Path(path).getFileSystem(sparkSession.sparkContext.hadoopConfiguration)
+        learnerParams(instance).foreach { p =>
+          val dir = s"$path/${learnerDirs(p.name)}"
+          instance.set(p,
+            if (p.name != "baseLearners") loadLearner(dir, sparkSession)
+            else Iterator.from(0).map(i => s"$dir-$i").takeWhile(d => fs.exists(new Path(d)))
+              .map(loadLearner(_, sparkSession)).toArray)
+        }
+        instance
+      }
+    }
+}
+
+/** Companion of a class saved by [[GraftPersistence.writer]]. */
+private[graft] abstract class GraftReadable[T <: Params: ClassTag](
+    construct: GraftPersistence.Saved => T) extends MLReadable[T] {
+  override def read: MLReader[T] = GraftPersistence.reader(construct)
 }

@@ -7,6 +7,8 @@ import org.apache.spark.ml.regression.DecisionTreeRegressor
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.PredictorBackend
+
 class GBMLossSuite extends org.scalatest.funsuite.AnyFunSuite {
 
   private val rng = new scala.util.Random(13)
@@ -205,13 +207,13 @@ class GBMSuite extends graft.SparkSpec {
         ("huber", "gradient", true),
         ("absolute", "gradient", true))) {
       def fitWith(fast: Boolean) = new GBMRegressor()
-        .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(3).setSeed(1))
+        .setBaseLearner(
+          PredictorBackend.pin(fast, new DecisionTreeRegressor().setMaxDepth(3).setSeed(1)))
         .setMaxIter(4)
         .setLoss(l)
         .setUpdates(upd)
         .setOptimizedWeights(opt)
         .setLearningRate(0.5)
-        .setNativeTreeFastPath(fast)
         .setSeed(0L)
         .fit(regDf)
       val fast = fitWith(true)
@@ -232,11 +234,11 @@ class GBMSuite extends graft.SparkSpec {
     // weighted data, so trees must match under a non-trivial weightCol
     val weighted = regDf.withColumn("w", (col("label") * 0 + 1.0) + pmod(monotonically_increasing_id(), lit(5)).cast("double"))
     def fitWith(fast: Boolean) = new GBMRegressor()
-      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(3).setSeed(1))
+      .setBaseLearner(
+        PredictorBackend.pin(fast, new DecisionTreeRegressor().setMaxDepth(3).setSeed(1)))
       .setMaxIter(3)
       .setWeightCol("w")
       .setLearningRate(0.5)
-      .setNativeTreeFastPath(fast)
       .setSeed(0L)
       .fit(weighted)
     val fast = fitWith(true)
@@ -251,12 +253,12 @@ class GBMSuite extends graft.SparkSpec {
   test("native-tree fast path replays validation early stopping identically") {
     val withVal = regDf.withColumn("isVal", rand(7) > 0.7)
     def fitWith(fast: Boolean) = new GBMRegressor()
-      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2).setSeed(1))
+      .setBaseLearner(
+        PredictorBackend.pin(fast, new DecisionTreeRegressor().setMaxDepth(2).setSeed(1)))
       .setMaxIter(30)
       .setLearningRate(1.0)
       .setValidationIndicatorCol("isVal")
       .setNumRounds(2)
-      .setNativeTreeFastPath(fast)
       .setSeed(0L)
       .fit(withVal)
     val fast = fitWith(true)
@@ -268,13 +270,13 @@ class GBMSuite extends graft.SparkSpec {
   test("GBMClassifier native-tree fast path replays validation early stopping identically") {
     val withVal = clsDf.withColumn("isVal", rand(7) > 0.7)
     def fitWith(fast: Boolean) = new GBMClassifier()
-      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2).setSeed(1))
+      .setBaseLearner(
+        PredictorBackend.pin(fast, new DecisionTreeRegressor().setMaxDepth(2).setSeed(1)))
       .setMaxIter(30)
       .setLoss("logloss")
       .setLearningRate(1.0)
       .setValidationIndicatorCol("isVal")
       .setNumRounds(2)
-      .setNativeTreeFastPath(fast)
       .setSeed(0L)
       .fit(withVal)
     val fast = fitWith(true)
@@ -313,12 +315,12 @@ class GBMSuite extends graft.SparkSpec {
       val df = if (l == "bernoulli") clsDf.withColumn("label", (col("label") > 0).cast("double"))
         else clsDf
       def fitWith(fast: Boolean) = new GBMClassifier()
-        .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(3).setSeed(1))
+        .setBaseLearner(
+          PredictorBackend.pin(fast, new DecisionTreeRegressor().setMaxDepth(3).setSeed(1)))
         .setMaxIter(3)
         .setLoss(l)
         .setOptimizedWeights(opt)
         .setLearningRate(0.5)
-        .setNativeTreeFastPath(fast)
         .setSeed(0L)
         .fit(df)
       val fast = fitWith(true)
@@ -576,30 +578,5 @@ class GBMSuite extends graft.SparkSpec {
     }
     assert(stopped.models.length === stopAt,
       s"stopped at ${stopped.models.length}, curve $curve implies $stopAt")
-  }
-
-  test("GBM persistence round-trips") {
-    val tmp = java.nio.file.Files.createTempDirectory("gbm-io").toString
-    val m = new GBMRegressor()
-      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(3).setSeed(1))
-      .setMaxIter(3)
-      .setSeed(0L)
-      .fit(regDf)
-    m.write.overwrite().save(s"$tmp/r")
-    val loaded = GBMRegressionModel.load(s"$tmp/r")
-    val a = m.transform(regDf).select("prediction").collect().map(_.getDouble(0))
-    val b = loaded.transform(regDf).select("prediction").collect().map(_.getDouble(0))
-    assert(a.toSeq === b.toSeq)
-
-    val c = new GBMClassifier()
-      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(3).setSeed(1))
-      .setMaxIter(2)
-      .setSeed(0L)
-      .fit(clsDf)
-    c.write.overwrite().save(s"$tmp/c")
-    val cl = GBMClassificationModel.load(s"$tmp/c")
-    val ca = c.transform(clsDf).select("prediction").collect().map(_.getDouble(0))
-    val cb = cl.transform(clsDf).select("prediction").collect().map(_.getDouble(0))
-    assert(ca.toSeq === cb.toSeq)
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.ml.regression.DecisionTreeRegressor
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import graft.SparkSpec
+import graft.{PredictorBackend, SparkSpec}
 
 /** Pins the reference's `Instrumentation.instrumented` logging parity:
   * every estimator family logs its pipeline stage, params, and dataset at
@@ -114,11 +114,11 @@ class InstrumentationSuite extends SparkSpec {
       var gbm: GBMRegressionModel = null
       val gbmLogs = captureInstrumentation {
         gbm = new GBMRegressor()
-          .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2).setSeed(1))
+          .setBaseLearner(
+            PredictorBackend.pin(fast, new DecisionTreeRegressor().setMaxDepth(2).setSeed(1)))
           .setMaxIter(3)
           .setValidationIndicatorCol("isVal")
           .setNumRounds(10)
-          .setNativeTreeFastPath(fast)
           .setSeed(1)
           .fit(withVal)
       }
@@ -130,9 +130,9 @@ class InstrumentationSuite extends SparkSpec {
       var ada: BoostingClassificationModel = null
       val adaLogs = captureInstrumentation {
         ada = new BoostingClassifier()
-          .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(1).setSeed(1))
+          .setBaseLearner(
+            PredictorBackend.pin(fast, new DecisionTreeClassifier().setMaxDepth(1).setSeed(1)))
           .setNumBaseLearners(2)
-          .setNativeTreeFastPath(fast)
           .fit(clsDf)
       }
       assert(named(adaLogs, "modelWeight").map(_.toDouble) === ada.modelWeights.toSeq,

@@ -73,10 +73,9 @@ class RobustnessSuite extends SparkSpec {
     for (fast <- Seq(true, false)) {
       val before = rddDirs().map(_.getName).toSet
       val model = new BoostingRegressor()
-        .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2))
+        .setBaseLearner(PredictorBackend.pin(fast, new DecisionTreeRegressor().setMaxDepth(2)))
         .setNumBaseLearners(4)
         .setCheckpointInterval(1)
-        .setNativeTreeFastPath(fast)
         .fit(df)
       assert(model.transform(df).select("prediction").count() === 300)
       val leftover = rddDirs().map(_.getName).toSet -- before

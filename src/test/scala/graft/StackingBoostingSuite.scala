@@ -67,21 +67,6 @@ class StackingBoostingSuite extends SparkSpec {
     }
   }
 
-  test("Stacking persistence round-trips") {
-    val tmp = java.nio.file.Files.createTempDirectory("stack-io").toString
-    val model = new StackingRegressor()
-      .setBaseLearners(Array(
-        new DecisionTreeRegressor().setMaxDepth(3).setSeed(1),
-        new LinearRegression()))
-      .setStacker(new LinearRegression())
-      .fit(regDf)
-    model.write.overwrite().save(s"$tmp/m")
-    val loaded = StackingRegressionModel.load(s"$tmp/m")
-    val a = model.transform(regDf).select("prediction").collect().map(_.getDouble(0))
-    val b = loaded.transform(regDf).select("prediction").collect().map(_.getDouble(0))
-    assert(a.toSeq === b.toSeq)
-  }
-
   test("BoostingRegressor improves over baseline; median and mean voting close") {
     val median = new BoostingRegressor()
       .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(5).setSeed(1))
@@ -105,9 +90,9 @@ class StackingBoostingSuite extends SparkSpec {
     // recursion produces the same NUMBER of rounds, positive model
     // weights, and matching ensemble quality
     def fitReg(fast: Boolean) = new BoostingRegressor()
-      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(4).setSeed(9))
+      .setBaseLearner(
+        PredictorBackend.pin(fast, new DecisionTreeRegressor().setMaxDepth(4).setSeed(9)))
       .setNumBaseLearners(4)
-      .setNativeTreeFastPath(fast)
       .fit(regDf)
     val fastR = fitReg(true)
     val slowR = fitReg(false)
@@ -120,10 +105,10 @@ class StackingBoostingSuite extends SparkSpec {
     assert(rmse(fitReg(true).transform(regDf)) === rf)
 
     def fitCls(fast: Boolean) = new BoostingClassifier()
-      .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(4).setSeed(9))
+      .setBaseLearner(
+        PredictorBackend.pin(fast, new DecisionTreeClassifier().setMaxDepth(4).setSeed(9)))
       .setNumBaseLearners(4)
       .setAlgorithm("discrete")
-      .setNativeTreeFastPath(fast)
       .fit(clsDf)
     val fastC = fitCls(true)
     val slowC = fitCls(false)
@@ -138,10 +123,10 @@ class StackingBoostingSuite extends SparkSpec {
     // recursion matches the generic loop up to the fixed-vs-reweighted
     // candidate grid (same caveat as the discrete path)
     def fit(fast: Boolean) = new BoostingClassifier()
-      .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(4).setSeed(9))
+      .setBaseLearner(
+        PredictorBackend.pin(fast, new DecisionTreeClassifier().setMaxDepth(4).setSeed(9)))
       .setNumBaseLearners(4)
       .setAlgorithm("real")
-      .setNativeTreeFastPath(fast)
       .fit(clsDf)
     val fastC = fit(true)
     val slowC = fit(false)
@@ -163,10 +148,10 @@ class StackingBoostingSuite extends SparkSpec {
     }.toDF("label", "features")
     for (fast <- Seq(true, false)) {
       val model = new BoostingClassifier()
-        .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(3).setSeed(1))
+        .setBaseLearner(
+          PredictorBackend.pin(fast, new DecisionTreeClassifier().setMaxDepth(3).setSeed(1)))
         .setNumBaseLearners(10)
         .setAlgorithm("real")
-        .setNativeTreeFastPath(fast)
         .fit(sep)
       assert(model.models.length === 1, s"fast=$fast kept boosting past a perfect tree")
       assert(accuracy(model.transform(sep)) === 1.0)
@@ -179,9 +164,10 @@ class StackingBoostingSuite extends SparkSpec {
     // would make minWeightPerNode unsatisfiable and stump every tree
     def fitWith(fast: Boolean) = new BoostingRegressor()
       .setBaseLearner(
-        new DecisionTreeRegressor().setMaxDepth(4).setMinWeightFractionPerNode(0.05).setSeed(9))
+        PredictorBackend.pin(
+          fast,
+          new DecisionTreeRegressor().setMaxDepth(4).setMinWeightFractionPerNode(0.05).setSeed(9)))
       .setNumBaseLearners(3)
-      .setNativeTreeFastPath(fast)
       .fit(regDf)
     val fast = fitWith(true)
     val slow = fitWith(false)
