@@ -119,4 +119,30 @@ class BaggingSuite extends SparkSpec {
       }
     }
   }
+
+  test("Bagging persistence round-trips transforms") {
+    val tmp = java.nio.file.Files.createTempDirectory("bag-io").toString
+    val model = new BaggingRegressor()
+      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(3))
+      .setNumBaseLearners(3)
+      .setSubspaceRatio(0.7)
+      .setSeed(2L)
+      .fit(regDf)
+    model.write.overwrite().save(s"$tmp/m")
+    val loaded = BaggingRegressionModel.load(s"$tmp/m")
+    val a = model.transform(regDf).select("prediction").collect().map(_.getDouble(0))
+    val b = loaded.transform(regDf).select("prediction").collect().map(_.getDouble(0))
+    assert(a.toSeq === b.toSeq)
+
+    val cmodel = new BaggingClassifier()
+      .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(3))
+      .setNumBaseLearners(3)
+      .setSeed(2L)
+      .fit(clsDf)
+    cmodel.write.overwrite().save(s"$tmp/c")
+    val cloaded = BaggingClassificationModel.load(s"$tmp/c")
+    val ca = cmodel.transform(clsDf).select("prediction").collect().map(_.getDouble(0))
+    val cb = cloaded.transform(clsDf).select("prediction").collect().map(_.getDouble(0))
+    assert(ca.toSeq === cb.toSeq)
+  }
 }

@@ -579,4 +579,29 @@ class GBMSuite extends graft.SparkSpec {
     assert(stopped.models.length === stopAt,
       s"stopped at ${stopped.models.length}, curve $curve implies $stopAt")
   }
+
+  test("GBM persistence round-trips") {
+    val tmp = java.nio.file.Files.createTempDirectory("gbm-io").toString
+    val m = new GBMRegressor()
+      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(3).setSeed(1))
+      .setMaxIter(3)
+      .setSeed(0L)
+      .fit(regDf)
+    m.write.overwrite().save(s"$tmp/r")
+    val loaded = GBMRegressionModel.load(s"$tmp/r")
+    val a = m.transform(regDf).select("prediction").collect().map(_.getDouble(0))
+    val b = loaded.transform(regDf).select("prediction").collect().map(_.getDouble(0))
+    assert(a.toSeq === b.toSeq)
+
+    val c = new GBMClassifier()
+      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(3).setSeed(1))
+      .setMaxIter(2)
+      .setSeed(0L)
+      .fit(clsDf)
+    c.write.overwrite().save(s"$tmp/c")
+    val cl = GBMClassificationModel.load(s"$tmp/c")
+    val ca = c.transform(clsDf).select("prediction").collect().map(_.getDouble(0))
+    val cb = cl.transform(clsDf).select("prediction").collect().map(_.getDouble(0))
+    assert(ca.toSeq === cb.toSeq)
+  }
 }

@@ -67,6 +67,21 @@ class StackingBoostingSuite extends SparkSpec {
     }
   }
 
+  test("Stacking persistence round-trips") {
+    val tmp = java.nio.file.Files.createTempDirectory("stack-io").toString
+    val model = new StackingRegressor()
+      .setBaseLearners(Array(
+        new DecisionTreeRegressor().setMaxDepth(3).setSeed(1),
+        new LinearRegression()))
+      .setStacker(new LinearRegression())
+      .fit(regDf)
+    model.write.overwrite().save(s"$tmp/m")
+    val loaded = StackingRegressionModel.load(s"$tmp/m")
+    val a = model.transform(regDf).select("prediction").collect().map(_.getDouble(0))
+    val b = loaded.transform(regDf).select("prediction").collect().map(_.getDouble(0))
+    assert(a.toSeq === b.toSeq)
+  }
+
   test("BoostingRegressor improves over baseline; median and mean voting close") {
     val median = new BoostingRegressor()
       .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(5).setSeed(1))
