@@ -106,8 +106,8 @@ private[graft] final class NativeTreeBoost(
     }
   }
 
-  /** One tree on `points` (the binned table relabeled or reweighted for the
-    * round), row-sampled like the generic fit.
+  /** One tree on `points` (the binned table reweighted for the round),
+    * row-sampled like the generic fit.
     */
   def fitTree(
       points: RDD[TreePoint],

@@ -148,8 +148,9 @@ private[graft] object Learners {
     * pass, and each per-class weighted mean sum(l·w)/sum(w) accumulates
     * exactly as the standalone `DummyRegressor` fit does, so the models
     * are bit-identical to the unfused path's. Returns None for learners
-    * that cannot fuse (real trees etc.) — callers fall back to the
-    * concurrent per-class fit pool.
+    * that cannot fuse (real trees etc., and subclasses of
+    * `DummyRegressor`, whose own `train` fusing would bypass) — callers
+    * fall back to the concurrent per-class fit pool.
     */
   def fitMulti(
       learner: EnsemblePredictorType,
@@ -158,6 +159,7 @@ private[graft] object Learners {
       : Option[Array[EnsemblePredictionModelType]] = {
     import org.apache.spark.sql.functions.sum
     learner match {
+      case d: DummyRegressor if d.getClass != classOf[DummyRegressor] => None
       case d: DummyRegressor if d.getStrategy == "mean" =>
         val aggs = targets.zipWithIndex.flatMap { case ((l, w), k) =>
           Seq(sum(l * w).as(s"lw_$k"), sum(w).as(s"w_$k"))

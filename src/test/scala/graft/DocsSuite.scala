@@ -80,6 +80,22 @@ class DocsSuite extends SparkSpec {
     assert(model.transform(clf).columns.contains("prediction"))
   }
 
+  test("gbm: documented regressor config fits") {
+    val withVal = reg.withColumn("isVal", rand(7) > 0.8)
+    val model = new GBMRegressor()
+      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(5))
+      .setMaxIter(3)
+      .setLoss("logcosh")
+      .setLearningRate(0.1)
+      .setUpdates("newton")
+      .setSubsampleRatio(0.8)
+      .setValidationIndicatorCol("isVal")
+      .setNumRounds(3)
+      .fit(withVal)
+    assert(model.models.nonEmpty)
+    assert(model.transform(reg).columns.contains("prediction"))
+  }
+
   test("gbm: documented classifier config fits") {
     val model = new GBMClassifier()
       .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(3))

@@ -195,6 +195,32 @@ class GBMSuite extends graft.SparkSpec {
     assert(rmse(m.transform(regDf)) < 20)
   }
 
+  test("GBMRegressor newton floors the hessian at 1e-2 when fitting") {
+    // labels at +-100 around a constant init near 0: logcosh saturates, so
+    // every row's hessian sits at the loss's own 1e-12 floor. The fit-time
+    // floor of 1e-2 bounds each newton target -grad/hess by |grad| / 1e-2
+    // <= 100, and a leaf is a weighted mean of targets (the slack covers
+    // the rounding of that mean); without the floor the targets reach 1e12
+    val s = spark
+    import s.implicits._
+    val rng = new scala.util.Random(23)
+    val far = (0 until 200).map { _ =>
+      val x = Array.fill(2)(rng.nextDouble() * 2 - 1)
+      (if (x(0) > 0) 100.0 else -100.0, Vectors.dense(x))
+    }.toDF("label", "features")
+    val m = new GBMRegressor()
+      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2).setSeed(1))
+      .setLoss("logcosh")
+      .setUpdates("newton")
+      .setOptimizedWeights(false)
+      .setMaxIter(1)
+      .setSeed(0L)
+      .fit(far)
+    val leaves = far.collect().map(r => m.models(0).predict(r.getAs[Vector](1)))
+    assert(leaves.forall(l => math.abs(l) <= 100.0 + 1e-6),
+      s"max |leaf| ${leaves.map(math.abs).max} exceeds |grad| / 1e-2")
+  }
+
   test("native-tree fast path matches the generic loop tree-for-tree") {
     // splits depend on feature values only, so binning once and relabeling
     // must produce the same trees as re-entering DecisionTreeRegressor.fit
