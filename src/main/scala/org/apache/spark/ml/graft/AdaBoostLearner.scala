@@ -16,8 +16,8 @@ import org.apache.spark.storage.StorageLevel
   * weights normalized to sum 1 and caches, per training row, the
   * estimator's error statistic `rowError(prediction, label)`; the loop
   * then reads the aggregates its recursion needs and sets the next
-  * weights. `endRound` drops the round's cache; `close` frees everything
-  * and always runs.
+  * weights. A round's cache is dropped once the next weights no longer
+  * need it; `close` frees everything and always runs.
   */
 private[graft] trait AdaBoostLearner {
   def fit(round: Int): EnsemblePredictionModelType
@@ -28,7 +28,6 @@ private[graft] trait AdaBoostLearner {
   def reweight(factor: Double => Double): Unit
   /** Next weights: weight x `factors(class probabilities)(label)`. */
   def reweightByProbability(factors: Array[Double] => Array[Double]): Unit
-  def endRound(): Unit
   def close(): Unit
 }
 
@@ -78,10 +77,10 @@ private[graft] final class PredictorAdaBoost(
     advance(col("__bw") *
       udf((y: Double, p: Vector) => factors(p.toArray)(y.toInt)).apply(col("label"), col("__prob")))
 
-  private def advance(bw: Column): Unit =
+  private def advance(bw: Column): Unit = {
     df = loop.next(predicted.withColumn("__bw", bw).select("label", "weight", "features", "__bw"))
-
-  def endRound(): Unit = predicted.unpersist()
+    predicted.unpersist()
+  }
 
   def close(): Unit = {
     if (predicted != null) predicted.unpersist()
@@ -93,6 +92,9 @@ private[graft] final class PredictorAdaBoost(
   * [[NativeTreeBoost]] table: the boost weights are a checkpointed RDD
   * aligned with the binned points, predictions are binned leaf lookups,
   * and the reductions are partition-ordered sums (same seed, same model).
+  * The next weights are set lazily: the next round's weight sum
+  * materializes them, so the round's rows, from which SAMME and R2 derive
+  * them, stay cached until then.
   */
 private[graft] final class BinnedAdaBoost(
     instances: DataFrame,
@@ -105,22 +107,25 @@ private[graft] final class BinnedAdaBoost(
     instances, strategy, seed, checkpointInterval, sumOneWeights = true, hasVal = false)
   private val bw = new boost.State(boost.treePoints.map(_.weight))
   private var model: org.apache.spark.ml.tree.DecisionTreeModel = _
-  // (error, normalized weight, weight) per training row
+  // (error, normalized weight, weight) per training row, and its cache handle
   private var data: RDD[(Double, Double, Double)] = _
+  private var dataBlocks: RDD[_] = _
 
   def fit(round: Int): EnsemblePredictionModelType = {
     val w = bw.rdd
     val sw = NativeTreeBoost.orderedSum(w)
+    if (dataBlocks != null) dataBlocks.unpersist(blocking = false)
     val relabeled = boost.treePoints.zip(w).map { case (tp, x) =>
       new TreePoint(tp.label, tp.binnedFeatures, x / sw)
     }
     model = boost.fitTree(relabeled, 1.0, replacement = false, boost.dtSeed + round)
     val (m, splits, err) = (model, boost.bcSplits, rowError)
-    data = boost.treePoints.zip(w).map { case (tp, x) =>
+    val (rows, handle) = NativeTreeBoost.cacheBlocks(boost.treePoints.zip(w).map { case (tp, x) =>
       (err(m.rootNode.predictBinned(tp.binnedFeatures, splits.value).prediction, tp.label),
         x / sw, x)
-    }
-    data.persist(StorageLevel.MEMORY_AND_DISK)
+    })
+    data = rows
+    dataBlocks = handle
     model.asInstanceOf[EnsemblePredictionModelType]
   }
 
@@ -156,10 +161,8 @@ private[graft] final class BinnedAdaBoost(
     })
   }
 
-  def endRound(): Unit = data.unpersist(blocking = false)
-
   def close(): Unit = {
-    if (data != null) data.unpersist(blocking = false)
+    if (dataBlocks != null) dataBlocks.unpersist(blocking = false)
     boost.close()
   }
 }

@@ -121,31 +121,30 @@ private[graft] object SubBagFit {
       }
     cfg.map { case (strategy, treeSeed) =>
       val sc = instances.sparkSession.sparkContext
-      val train = instances.select("label", "weight", "features").rdd
-        .map(r => Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2)))
-      train.persist(StorageLevel.MEMORY_AND_DISK)
+      val (train, trainBlocks) = NativeTreeBoost.cacheBlocks(
+        instances.select("label", "weight", "features").rdd
+          .map(r => Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2))))
       try {
         val metadata =
           DecisionTreeMetadata.buildMetadata(train, strategy, numLearners, "all")
         val splits = GraftTreeShim.findSplits(train, metadata, treeSeed)
         val bcSplits = sc.broadcast(splits)
-        val treePoints = TreePoint.convertToTreeRDD(train, splits, metadata)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val bagged = BaggedPoint.convertToBaggedRDD(
+        val (treePoints, treeBlocks) =
+          NativeTreeBoost.cacheBlocks(TreePoint.convertToTreeRDD(train, splits, metadata))
+        val (bagged, baggedBlocks) = NativeTreeBoost.cacheBlocks(BaggedPoint.convertToBaggedRDD(
           treePoints, subsampleRatio, numLearners, replacement,
-          (tp: TreePoint) => tp.weight, seed)
-        bagged.persist(StorageLevel.MEMORY_AND_DISK)
+          (tp: TreePoint) => tp.weight, seed))
         try {
           val full = Array.range(0, metadata.numFeatures)
           RandomForest.runBagged(
               bagged, metadata, bcSplits, strategy, numLearners, "all", treeSeed, None)
             .map(m => (full, m.asInstanceOf[EnsemblePredictionModelType]))
         } finally {
-          bagged.unpersist(blocking = false)
-          treePoints.unpersist(blocking = false)
+          baggedBlocks.unpersist(blocking = false)
+          treeBlocks.unpersist(blocking = false)
           bcSplits.destroy()
         }
-      } finally train.unpersist(blocking = false)
+      } finally trainBlocks.unpersist(blocking = false)
     }
   }
 

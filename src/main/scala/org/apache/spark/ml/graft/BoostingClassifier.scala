@@ -115,7 +115,6 @@ class BoostingClassifier(override val uid: String)
           val boost = math.exp(alpha)
           learner.reweight(e => if (e > 0.0) boost else 1.0)
         }
-        learner.endRound()
         i += 1
       }
     } finally learner.close()

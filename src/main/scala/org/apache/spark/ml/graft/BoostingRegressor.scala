@@ -187,7 +187,6 @@ class BoostingRegressor(override val uid: String)
             learner.reweight(e => StrictMath.pow(beta, 1.0 - loss(e)))
           }
         }
-        learner.endRound()
         i += 1
       }
     } finally learner.close()

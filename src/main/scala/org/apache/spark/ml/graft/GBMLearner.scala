@@ -38,6 +38,9 @@ private[graft] trait GBMParams
     with HasMaxIter
     with HasSubBag
     with HasCheckpointInterval
+    // kept for API parity with the reference's treeAggregate depth; the
+    // step searches fold per-partition partials in partition order
+    // (`NativeTreeBoost.orderedAggregate`), so fits are reproducible
     with HasAggregationDepth {
 
   final val learningRate: DoubleParam = new DoubleParam(
@@ -178,35 +181,30 @@ private[graft] trait GBMParams
       rdd: RDD[(Array[Double], Array[Double], Array[Double], Double)],
       loss: GBMLoss): Array[Double] = {
     val dim = loss.dim
-    val depth = $(aggregationDepth)
     if (dim == 1) return Array(loss match {
       case SquaredLoss =>
-        val (num, den) = rdd.treeAggregate((0.0, 0.0))(
-          seqOp = { case ((accN, accD), (yenc, f, dir, w)) =>
+        val (num, den) = NativeTreeBoost.orderedAggregate(rdd, (0.0, 0.0))(
+          { case ((accN, accD), (yenc, f, dir, w)) =>
             (accN + w * dir(0) * (yenc(0) - f(0)), accD + w * dir(0) * dir(0))
           },
-          combOp = (x, y) => (x._1 + y._1, x._2 + y._2),
-          depth = depth)
+          (x, y) => (x._1 + y._1, x._2 + y._2))
         if (den <= 0 || !num.isFinite) 1.0
         else math.min(math.max(num / den, 0.0), 100.0)
       case h: HasHessian =>
         NewtonStep.search($(tol)) { step =>
-          rdd.treeAggregate((0.0, 0.0))(
-            seqOp = { case ((accG, accH), (yenc, f, dir, w)) =>
+          NativeTreeBoost.orderedAggregate(rdd, (0.0, 0.0))(
+            { case ((accG, accH), (yenc, f, dir, w)) =>
               val fa = Array(f(0) + step * dir(0))
               (accG + w * loss.gradient(yenc, fa)(0) * dir(0),
                 accH + w * h.hessian(yenc, fa)(0) * dir(0) * dir(0))
             },
-            combOp = (x, y) => (x._1 + y._1, x._2 + y._2),
-            depth = depth)
+            (x, y) => (x._1 + y._1, x._2 + y._2))
         }
       case _ =>
-        rdd.count()
         val objective = new UnivariateObjectiveFunction(a =>
-          rdd.treeAggregate(0.0)(
+          NativeTreeBoost.orderedAggregate(rdd, 0.0)(
             (acc, t) => acc + t._4 * loss.loss(t._1, Array(t._2(0) + a * t._3(0))),
-            _ + _,
-            depth))
+            _ + _))
         try {
           new BrentOptimizer($(tol), $(tol) * 1e-2)
             .optimize(
@@ -220,12 +218,11 @@ private[graft] trait GBMParams
         if (res != null) return res
       case _ => ()
     }
-    rdd.count()
     val objective = new DiffFunction[BDV[Double]] {
       override def calculate(a: BDV[Double]): (Double, BDV[Double]) = {
         val alpha = a.toArray
-        val (l, g) = rdd.treeAggregate((0.0, new Array[Double](dim)))(
-          seqOp = { case ((accL, accG), (yenc, f, dir, w)) =>
+        val (l, g) = NativeTreeBoost.orderedAggregate(rdd, (0.0, new Array[Double](dim)))(
+          { case ((accL, accG), (yenc, f, dir, w)) =>
             val fa = new Array[Double](dim)
             var j = 0
             while (j < dim) { fa(j) = f(j) + alpha(j) * dir(j); j += 1 }
@@ -234,12 +231,11 @@ private[graft] trait GBMParams
             while (j < dim) { accG(j) += w * grad(j) * dir(j); j += 1 }
             (accL + w * loss.loss(yenc, fa), accG)
           },
-          combOp = { case ((l1, g1), (l2, g2)) =>
+          { case ((l1, g1), (l2, g2)) =>
             var j = 0
             while (j < dim) { g1(j) += g2(j); j += 1 }
             (l1 + l2, g1)
-          },
-          depth = depth)
+          })
         (l, BDV(g))
       }
     }
@@ -253,7 +249,7 @@ private[graft] trait GBMParams
 
   /** Damped Newton over the full KxK hessian of
     * phi(alpha) = sum_i w_i loss(yenc_i, f_i + alpha o d_i): one
-    * treeAggregate per iteration computes phi, grad_j = sum w g_j d_j and
+    * ordered aggregate per iteration computes phi, grad_j = sum w g_j d_j and
     * H_jk = sum w (d2 loss / df_j df_k) d_j d_k together. phi is convex
     * (convex loss composed with an affine map), so the Newton direction
     * descends — but softmax logloss flattens asymptotically, so a full
@@ -272,16 +268,15 @@ private[graft] trait GBMParams
       rdd: RDD[(Array[Double], Array[Double], Array[Double], Double)],
       loss: GBMLoss with HasFullHessian,
       dim: Int): Array[Double] = {
-    val depth = $(aggregationDepth)
     var alpha = Array.fill(dim)(1.0)
     var bestAlpha: Array[Double] = null
     var bestPhi = Double.PositiveInfinity
     var it = 0
     while (it < 8) {
       val step = alpha.clone()
-      val (phi, g, h) = rdd.treeAggregate(
-        (0.0, new Array[Double](dim), new Array[Double](dim * dim)))(
-        seqOp = { case ((accL, accG, accH), (yenc, f, dir, w)) =>
+      val (phi, g, h) = NativeTreeBoost.orderedAggregate(
+        rdd, (0.0, new Array[Double](dim), new Array[Double](dim * dim)))(
+        { case ((accL, accG, accH), (yenc, f, dir, w)) =>
           val fa = new Array[Double](dim)
           var j = 0
           while (j < dim) { fa(j) = f(j) + step(j) * dir(j); j += 1 }
@@ -299,14 +294,13 @@ private[graft] trait GBMParams
           }
           (accL + w * loss.loss(yenc, fa), accG, accH)
         },
-        combOp = { case ((l1, g1, h1), (l2, g2, h2)) =>
+        { case ((l1, g1, h1), (l2, g2, h2)) =>
           var j = 0
           while (j < g1.length) { g1(j) += g2(j); j += 1 }
           j = 0
           while (j < h1.length) { h1(j) += h2(j); j += 1 }
           (l1 + l2, g1, h1)
-        },
-        depth = depth)
+        })
       var nonFinite = !phi.isFinite
       var gMax = 0.0
       var j = 0
@@ -523,7 +517,7 @@ private[graft] final class PredictorGBM(
         .select("label", "weight", "features", "__val", "__yenc", "__f"))
   }
   private var withDir: DataFrame = _
-  private var dirRows: RDD[(Array[Double], Array[Double], Array[Double], Double)] = _
+  private var dirBlocks: RDD[_] = _
 
   def absResiduals: DataFrame =
     df.filter(!col("__val")).select(abs(col("label") - element_at(col("__f"), 1)).as("__absr"))
@@ -589,15 +583,16 @@ private[graft] final class PredictorGBM(
   }
 
   def directions: RDD[(Array[Double], Array[Double], Array[Double], Double)] = {
-    dirRows = withDir.filter(!col("__val"))
+    val (rows, handle) = NativeTreeBoost.cacheBlocks(withDir.filter(!col("__val"))
       .select(col("__yenc"), col("__f"), col("__d"), col("weight"))
       .rdd.map(r => (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray,
-        r.getSeq[Double](2).toArray, r.getDouble(3)))
-    dirRows.persist(StorageLevel.MEMORY_AND_DISK)
+        r.getSeq[Double](2).toArray, r.getDouble(3))))
+    dirBlocks = handle
+    rows
   }
 
   def advance(w: Array[Double]): Unit = {
-    if (dirRows != null) { dirRows.unpersist(); dirRows = null }
+    if (dirBlocks != null) { dirBlocks.unpersist(); dirBlocks = null }
     val updateUdf = udf { (f: Seq[Double], dir: Seq[Double], ww: Seq[Double]) =>
       val out = new Array[Double](f.length)
       var j = 0
@@ -624,7 +619,7 @@ private[graft] final class PredictorGBM(
   }
 
   def close(): Unit = {
-    if (dirRows != null) dirRows.unpersist()
+    if (dirBlocks != null) dirBlocks.unpersist()
     loop.close()
   }
 }
@@ -663,7 +658,11 @@ private[graft] final class BinnedGBM(
       if (hasVal) new boost.State(boost.valid.map(inst => f0(inst.features))) else null)
   }
   private var trees: Array[DecisionTreeRegressionModel] = _
+  // the round's (yenc, f, direction, weight) rows and their cache handle;
+  // the next f is derived from them, so they stay cached until the next
+  // round's first tree-level job has materialized it
   private var data: RDD[(Array[Double], Array[Double], Array[Double], Double)] = _
+  private var dataBlocks: RDD[_] = _
 
   def absResiduals: DataFrame = {
     val absr = boost.treePoints.zip(f.rdd).map { case (tp, fr) => math.abs(tp.label - fr(0)) }
@@ -681,10 +680,9 @@ private[graft] final class BinnedGBM(
     val resid: RDD[(TreePoint, Array[Double])] = boost.treePoints.zip(f.rdd).map {
       case (tp, fr) => (tp, loss.negativeGradient(loss.encodeLabel(tp.label), fr))
     }
-    val bagged = BaggedPoint.convertToBaggedRDD(
+    val (bagged, baggedBlocks) = NativeTreeBoost.cacheBlocks(BaggedPoint.convertToBaggedRDD(
       resid, est.getSubsampleRatio, 1, est.getReplacement,
-      (t: (TreePoint, Array[Double])) => t._1.weight, sampleSeed)
-    bagged.persist(StorageLevel.MEMORY_AND_DISK)
+      (t: (TreePoint, Array[Double])) => t._1.weight, sampleSeed))
     trees =
       try {
         val futures = Array.tabulate(dim) { k =>
@@ -697,14 +695,17 @@ private[graft] final class BinnedGBM(
           }(ec)
         }
         futures.map(Await.result(_, Duration.Inf))
-      } finally bagged.unpersist(blocking = false)
+      } finally baggedBlocks.unpersist(blocking = false)
+    if (dataBlocks != null) dataBlocks.unpersist(blocking = false)
     val (ts, splits) = (trees, boost.bcSplits)
-    data = boost.treePoints.zip(f.rdd).map { case (tp, fr) =>
-      val d = Array.tabulate(ts.length)(k =>
-        NativeGBT.updatePrediction(tp, 0.0, ts(k), 1.0, splits.value))
-      (loss.encodeLabel(tp.label), fr, d, tp.weight)
-    }
-    data.persist(StorageLevel.MEMORY_AND_DISK)
+    val (rows, handle) = NativeTreeBoost.cacheBlocks(boost.treePoints.zip(f.rdd).map {
+      case (tp, fr) =>
+        val d = Array.tabulate(ts.length)(k =>
+          NativeGBT.updatePrediction(tp, 0.0, ts(k), 1.0, splits.value))
+        (loss.encodeLabel(tp.label), fr, d, tp.weight)
+    })
+    data = rows
+    dataBlocks = handle
     trees.map(_.asInstanceOf[EnsemblePredictionModelType])
   }
 
@@ -717,7 +718,6 @@ private[graft] final class BinnedGBM(
       while (j < fr.length) { out(j) = fr(j) + w(j) * d(j); j += 1 }
       out
     })
-    data.unpersist(blocking = false)
     if (hasVal) {
       val (ts, splits) = (trees, boost.bcSplits)
       valF.set(boost.valPoints.zip(valF.rdd).map { case (tp, fr) =>
@@ -733,17 +733,16 @@ private[graft] final class BinnedGBM(
   }
 
   def validationLoss(loss: GBMLoss): Option[Double] = {
-    val (lsum, wsum) = boost.valPoints.zip(valF.rdd).treeAggregate((0.0, 0.0))(
+    val (lsum, wsum) = NativeTreeBoost.orderedAggregate(boost.valPoints.zip(valF.rdd), (0.0, 0.0))(
       (acc, t) => (
         acc._1 + t._1.weight * loss.loss(loss.encodeLabel(t._1.label), t._2),
         acc._2 + t._1.weight),
-      (a, b) => (a._1 + b._1, a._2 + b._2),
-      est.getAggregationDepth)
+      (a, b) => (a._1 + b._1, a._2 + b._2))
     if (wsum > 0) Some(lsum / wsum) else None
   }
 
   def close(): Unit = {
-    if (data != null) data.unpersist(blocking = false)
+    if (dataBlocks != null) dataBlocks.unpersist(blocking = false)
     boost.close()
   }
 }

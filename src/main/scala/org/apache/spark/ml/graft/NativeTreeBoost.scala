@@ -1,6 +1,7 @@
 package org.apache.spark.ml.graft
 
 import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.feature.Instance
@@ -58,12 +59,18 @@ private[graft] final class NativeTreeBoost(
     hasVal: Boolean) {
 
   private val sc = instances.sparkSession.sparkContext
+  private val blocks = ArrayBuffer.empty[RDD[_]]
 
-  private val rows: RDD[(Instance, Boolean)] = instances
+  private def cache[T: ClassTag](rdd: RDD[T]): RDD[T] = {
+    val (rows, handle) = NativeTreeBoost.cacheBlocks(rdd)
+    blocks += handle
+    rows
+  }
+
+  private val rows: RDD[(Instance, Boolean)] = cache(instances
     .select(col("label"), col("weight"), col("features"), if (hasVal) col("__val") else lit(false))
     .rdd
-    .map(r => (Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2)), r.getBoolean(3)))
-  rows.persist(StorageLevel.MEMORY_AND_DISK)
+    .map(r => (Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2)), r.getBoolean(3))))
 
   /** Training instances on the scale the induction sees. */
   val train: RDD[Instance] = {
@@ -80,29 +87,31 @@ private[graft] final class NativeTreeBoost(
   private val metadata = DecisionTreeMetadata.buildMetadata(train, strategy, numTrees = 1, "all")
   private val splits = GraftTreeShim.findSplits(train, metadata, dtSeed)
   val bcSplits: Broadcast[Array[Array[Split]]] = sc.broadcast(splits)
-  val treePoints: RDD[TreePoint] = TreePoint.convertToTreeRDD(train, splits, metadata)
-    .persist(StorageLevel.MEMORY_AND_DISK)
+  val treePoints: RDD[TreePoint] = cache(TreePoint.convertToTreeRDD(train, splits, metadata))
   val valPoints: RDD[TreePoint] =
-    if (hasVal) TreePoint.convertToTreeRDD(valid, splits, metadata)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    else null
+    if (hasVal) cache(TreePoint.convertToTreeRDD(valid, splits, metadata)) else null
 
   private val checkpointers = ArrayBuffer.empty[PeriodicRDDCheckpointer[_]]
 
   /** Per-row loop state (boost weights, running scores) aligned with the
-    * RDD it is derived from. Every value is registered with its own
-    * checkpointer, which bounds the lineage, and materialized at once.
+    * RDD it is derived from. Every value is cached as blocks and registered
+    * with its own checkpointer, which bounds the lineage. `set` runs no
+    * job: the next job that reads `rdd` materializes the value (and
+    * checkpoints it when due), so the caller keeps the new value's parents
+    * cached until that job has run. The checkpointer keeps the last three
+    * values cached, so the value before is one of them.
     */
-  final class State[T](initial: RDD[T]) {
-    private val ck = new PeriodicRDDCheckpointer[T](checkpointInterval, sc)
+  final class State[T: ClassTag](initial: RDD[T]) {
+    private val ck = new PeriodicRDDCheckpointer[Array[T]](checkpointInterval, sc)
     checkpointers += ck
     var rdd: RDD[T] = _
     set(initial)
 
     def set(next: RDD[T]): Unit = {
-      ck.update(next)
-      next.count()
-      rdd = next
+      val (rows, handle) = NativeTreeBoost.cacheBlocks(next)
+      // already persisted, so the checkpointer keeps its storage level
+      ck.update(handle)
+      rdd = rows
     }
   }
 
@@ -114,11 +123,10 @@ private[graft] final class NativeTreeBoost(
       rate: Double,
       replacement: Boolean,
       sampleSeed: Long): DecisionTreeModel = {
-    val bagged = BaggedPoint.convertToBaggedRDD(
-      points, rate, 1, replacement, (tp: TreePoint) => tp.weight, sampleSeed)
-    bagged.persist(StorageLevel.MEMORY_AND_DISK)
+    val (bagged, handle) = NativeTreeBoost.cacheBlocks(BaggedPoint.convertToBaggedRDD(
+      points, rate, 1, replacement, (tp: TreePoint) => tp.weight, sampleSeed))
     try grow(bagged)
-    finally bagged.unpersist(blocking = false)
+    finally handle.unpersist(blocking = false)
   }
 
   /** The core induction over an already-sampled binned table. */
@@ -133,28 +141,45 @@ private[graft] final class NativeTreeBoost(
     */
   def close(): Unit = {
     checkpointers.foreach { ck => ck.unpersistDataSet(); ck.deleteAllCheckpoints() }
-    treePoints.unpersist(blocking = false)
-    if (valPoints != null) valPoints.unpersist(blocking = false)
-    rows.unpersist(blocking = false)
+    blocks.foreach(_.unpersist(blocking = false))
     bcSplits.destroy()
   }
 }
 
 private[graft] object NativeTreeBoost {
 
-  /** Deterministic distributed double sum: per-partition sums combined in
-    * PARTITION ORDER on the driver. `RDD.sum` folds partition results in
-    * task-completion order, which perturbs float sums by ulps run-to-run —
-    * enough to flip a split choice and break the backend's
-    * same-seed-same-model guarantee.
+  /** `rdd` cached as ONE array per partition at `MEMORY_AND_DISK`: returns
+    * the row view (the same rows, in the same order and partitioning) and
+    * the block RDD, the handle whose `unpersist` frees the cache. Nothing
+    * runs here; the first job that reads the view materializes the blocks.
+    * A row-wise cache is sized by Spark's `SizeTracker`, which walks a
+    * sample of the growing row vector every few rows; a block is sized
+    * once. The price: a block holds its whole partition on the heap while
+    * it is built, where the row-wise cache could stream a partition that
+    * does not fit in memory to disk.
     */
-  def orderedSum(rdd: RDD[Double]): Double =
-    rdd.mapPartitionsWithIndex { (i, it) =>
-        var s = 0.0
-        it.foreach(s += _)
-        Iterator.single((i, s))
-      }
+  def cacheBlocks[T: ClassTag](rdd: RDD[T]): (RDD[T], RDD[Array[T]]) = {
+    val blocks = rdd
+      .mapPartitions(it => Iterator.single(it.toArray), preservesPartitioning = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    (blocks.mapPartitions(_.flatMap(_.iterator), preservesPartitioning = true), blocks)
+  }
+
+  /** Deterministic distributed aggregate: per-partition partials, folded
+    * with `combOp` in PARTITION ORDER on the driver. `RDD.treeAggregate`
+    * and `RDD.sum` fold partition results in task-completion order, which
+    * perturbs float sums by ulps from run to run — enough to flip a split
+    * choice or send a line search down another path. One job, like the
+    * `treeAggregate` it replaces. Each task gets its own copy of `zero`,
+    * and the driver folds into `zero` itself, so a mutable accumulator may
+    * be updated in place.
+    */
+  def orderedAggregate[T, U: ClassTag](rdd: RDD[T], zero: U)(
+      seqOp: (U, T) => U,
+      combOp: (U, U) => U): U =
+    rdd.mapPartitions(it => Iterator.single(it.foldLeft(zero)(seqOp)))
       .collect()
-      .sortBy(_._1)
-      .foldLeft(0.0)(_ + _._2)
+      .foldLeft(zero)(combOp)
+
+  def orderedSum(rdd: RDD[Double]): Double = orderedAggregate(rdd, 0.0)(_ + _, _ + _)
 }

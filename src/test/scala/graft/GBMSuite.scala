@@ -145,6 +145,27 @@ class GBMSuite extends graft.SparkSpec {
     }
   }
 
+  test("quantile GBM refits in one JVM give bit-identical predictions") {
+    // Brent amplifies ulp noise in its objective on the piecewise-linear
+    // quantile loss, so the step search must sum in a fixed order: summed
+    // in task-completion order, the round-3 step moved from fit to fit
+    def fit() = new GBMRegressor()
+      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(3).setSeed(1))
+      .setMaxIter(4)
+      .setLearningRate(0.5)
+      .setLoss("quantile")
+      .setSeed(0L)
+      .fit(regDf)
+    val features = regDf.collect().map(_.getAs[Vector](1))
+    val fits = Seq.fill(4)(fit())
+    def bits(m: GBMRegressionModel) =
+      features.map(m.predict).map(java.lang.Double.doubleToLongBits).toSeq
+    fits.tail.foreach { m =>
+      assert(m.modelWeights.toSeq === fits.head.modelWeights.toSeq)
+      assert(bits(m) === bits(fits.head))
+    }
+  }
+
   test("logcosh/scaledlogcosh Newton line search matches Brent's step (±tol)") {
     // one boosting round, learningRate 1.0 => modelWeights(0) IS the
     // line-search step; re-derive Brent's answer on the same

@@ -9,6 +9,7 @@ import org.apache.logging.log4j.core.config.LoggerConfig
 import org.apache.spark.ml.classification.DecisionTreeClassifier
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.regression.DecisionTreeRegressor
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -142,5 +143,52 @@ class InstrumentationSuite extends SparkSpec {
         s"fast=$fast: $adaLogs")
     }
   }
-}
 
+  /** The call site of every job started while `body` runs: the name of
+    * the job's result stage, the last of its stages.
+    */
+  private def jobCallSites(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val sites = ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.synchronized { sites += e.stageInfos.maxBy(_.stageId).name }
+    }
+    sc.listenerBus.waitUntilEmpty()
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.listenerBus.waitUntilEmpty()
+    } finally sc.removeSparkListener(listener)
+    sites.synchronized(sites.toSeq)
+  }
+
+  test("a binned boosting round runs no job beyond its tree levels and aggregates") {
+    // one extra round's jobs, less the RandomForest level jobs: the round
+    // state is set without a job, and the next job that reads it
+    // materializes it
+    def roundJobs(fit: Int => Unit): (Int, Seq[String], Seq[String]) = {
+      def outside(rounds: Int) =
+        jobCallSites(fit(rounds)).filterNot(_.contains("RandomForest.scala"))
+      val (two, three) = (outside(2), outside(3))
+      (three.length - two.length, two, three)
+    }
+    val (gbm, gbm2, gbm3) = roundJobs { n =>
+      new GBMRegressor()
+        .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2).setSeed(1))
+        .setMaxIter(n)
+        .setSeed(1)
+        .fit(df)
+    }
+    assert(gbm === 1, s"GBM squared loss: the step pass only; 2 rounds $gbm2, 3 rounds $gbm3")
+    val (samme, samme2, samme3) = roundJobs { n =>
+      new BoostingClassifier()
+        .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(1).setSeed(1))
+        .setAlgorithm("real")
+        .setNumBaseLearners(n)
+        .fit(clsDf)
+    }
+    assert(samme === 2,
+      s"SAMME.R: the weight sum and the weighted error; 2 rounds $samme2, 3 rounds $samme3")
+  }
+}

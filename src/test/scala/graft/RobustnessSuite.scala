@@ -140,6 +140,44 @@ class RobustnessSuite extends SparkSpec {
       "failed GBMRegressor fit left cached RDDs")
   }
 
+  test("a successful fit frees every RDD it cached") {
+    val sc = spark.sparkContext
+    val withVal = df.withColumn("isVal", rand(3) > 0.7)
+    val cls = df.withColumn("label", (col("label") > 5).cast("double"))
+    val fits: Seq[(String, () => Any)] = Seq(
+      "GBMRegressor with validation" -> (() => new GBMRegressor()
+        .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2))
+        .setMaxIter(3)
+        .setValidationIndicatorCol("isVal")
+        .setNumRounds(10)
+        .setSeed(1L)
+        .fit(withVal)),
+      "GBMClassifier" -> (() => new GBMClassifier()
+        .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2))
+        .setMaxIter(3)
+        .setSeed(1L)
+        .fit(cls)),
+      "BoostingClassifier SAMME" -> (() => new BoostingClassifier()
+        .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(1))
+        .setNumBaseLearners(3)
+        .fit(cls)),
+      "BoostingClassifier SAMME.R" -> (() => new BoostingClassifier()
+        .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(1))
+        .setAlgorithm("real")
+        .setNumBaseLearners(3)
+        .fit(cls)),
+      "BaggingRegressor" -> (() => new BaggingRegressor()
+        .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2))
+        .setNumBaseLearners(3)
+        .setSeed(1L)
+        .fit(df)))
+    for ((name, fit) <- fits) {
+      val cached = sc.getPersistentRDDs.keySet
+      fit()
+      assert(sc.getPersistentRDDs.keySet === cached, s"$name left cached RDDs")
+    }
+  }
+
   test("instance weights steer boosting") {
     val s = spark
     import s.implicits._
