@@ -4,7 +4,6 @@ import org.apache.spark.ml.classification.ProbabilisticClassificationModel
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.tree.impl.TreePoint
-import org.apache.spark.mllib.tree.configuration.{Strategy => OldStrategy}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -97,15 +96,11 @@ private[graft] final class PredictorAdaBoost(
   * them, stay cached until then.
   */
 private[graft] final class BinnedAdaBoost(
-    instances: DataFrame,
-    strategy: OldStrategy,
-    seed: Long,
+    boost: NativeTreeBoost,
     checkpointInterval: Int,
     rowError: (Double, Double) => Double) extends AdaBoostLearner {
 
-  private val boost = new NativeTreeBoost(
-    instances, strategy, seed, checkpointInterval, sumOneWeights = true, hasVal = false)
-  private val bw = new boost.State(boost.treePoints.map(_.weight))
+  private val bw = new boost.State(boost.treePoints.map(_.weight), checkpointInterval)
   private var model: org.apache.spark.ml.tree.DecisionTreeModel = _
   // (error, normalized weight, weight) per training row, and its cache handle
   private var data: RDD[(Double, Double, Double)] = _
@@ -118,7 +113,7 @@ private[graft] final class BinnedAdaBoost(
     val relabeled = boost.treePoints.zip(w).map { case (tp, x) =>
       new TreePoint(tp.label, tp.binnedFeatures, x / sw)
     }
-    model = boost.fitTree(relabeled, 1.0, replacement = false, boost.dtSeed + round)
+    model = boost.fitTrees(relabeled, 1.0, replacement = false, boost.dtSeed + round).head
     val (m, splits, err) = (model, boost.bcSplits, rowError)
     val (rows, handle) = NativeTreeBoost.cacheBlocks(boost.treePoints.zip(w).map { case (tp, x) =>
       (err(m.rootNode.predictBinned(tp.binnedFeatures, splits.value).prediction, tp.label),

@@ -9,7 +9,6 @@ import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
 import org.apache.spark.sql.Dataset
-import org.apache.spark.storage.StorageLevel
 import org.json4s.JsonDSL._
 
 private[graft] trait BaggingClassifierParams
@@ -41,34 +40,15 @@ class BaggingClassifier(override val uid: String)
   override protected def train(dataset: Dataset[_]): BaggingClassificationModel = instrumented {
     instr =>
       GraftInstrumentation.logFit(instr, this, dataset)
-      trainImpl(dataset, instr)
-  }
-
-  private def trainImpl(dataset: Dataset[_], instr: Instrumentation): BaggingClassificationModel = {
-    val numClasses = getNumClasses(dataset)
-    if ($(votingStrategy) == "soft") {
-      require(
-        $(baseLearner).isInstanceOf[ProbabilisticClassifier[_, _, _]],
-        "soft voting requires a probabilistic base classifier")
-    }
-    val instances = SubBagFit.instances(this, dataset)
-    val handlePersist = dataset.storageLevel == StorageLevel.NONE
-    if (handlePersist) instances.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val bags = {
-        val native =
-          if ($(subspaceRatio) >= 1.0)
-            SubBagFit.runNativeTrees(
-              instances, $(baseLearner), $(numBaseLearners), $(replacement),
-              $(subsampleRatio), $(seed), Some(numClasses))
-          else None
-        native.getOrElse(SubBagFit.run(
-          instances, $(baseLearner), $(numBaseLearners), $(replacement),
-          $(subsampleRatio), $(subspaceRatio), $(seed), getExecutionContext))
+      val numClasses = getNumClasses(dataset)
+      if ($(votingStrategy) == "soft") {
+        require(
+          $(baseLearner).isInstanceOf[ProbabilisticClassifier[_, _, _]],
+          "soft voting requires a probabilistic base classifier")
       }
+      val bags = SubBagFit.fit(this, dataset, numClasses)
       new BaggingClassificationModel(uid, numClasses, bags.map(_._1), bags.map(_._2))
         .setParent(this)
-    } finally if (handlePersist) instances.unpersist()
   }
 
   override def copy(extra: ParamMap): BaggingClassifier = defaultCopy(extra)

@@ -1,6 +1,6 @@
 package org.apache.spark.ml.graft
 
-import scala.concurrent.{ExecutionContext, Future}
+import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.ml.PredictorParams
@@ -15,7 +15,6 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.util.ThreadUtils
 import org.json4s.JsonDSL._
 
 private[graft] trait BaggingParams
@@ -26,35 +25,64 @@ private[graft] trait BaggingParams
     with HasWeightCol
     with HasParallelism
 
-/** Shared bootstrap-rows x feature-subspace fit loop (reference:
-  * regression/BaggingRegressor.scala:117-172 /
-  * classification/BaggingClassifier.scala:149-207). Spark-first shape: the
-  * per-learner pipeline is `df.sample` (a Catalyst Sample node, pushed to
-  * the cached scan) -> optional vector-slice projection -> nested spark.ml
-  * fit; K fits run concurrently from a driver pool, each its own Spark
-  * jobs, so `parallelism` trades driver scheduling against cluster slots.
+/** The bootstrap-rows x feature-subspace fit of both bagging estimators
+  * (reference: regression/BaggingRegressor.scala:117-172 /
+  * classification/BaggingClassifier.scala:149-207).
   */
 private[graft] object SubBagFit {
 
-  def run(
-      instances: DataFrame,
-      learner: EnsemblePredictorType,
-      numLearners: Int,
-      replacement: Boolean,
-      subsampleRatio: Double,
-      subspaceRatio: Double,
-      seed: Long,
-      ec: ExecutionContext): Array[(Array[Int], EnsemblePredictionModelType)] = {
-    val nf = GraftUtils.numFeatures(instances, "features")
-    val futures = Array.tabulate(numLearners) { i =>
-      Future {
-        val indices = GraftUtils.subspace(subspaceRatio, nf, seed + i)
-        val prepared = sliceFeatures(
-          sample(instances, replacement, subsampleRatio, seed + i), indices, nf, "features")
-        (indices, Learners.fit(learner, prepared, "label", "features", Some("weight")))
-      }(ec)
+  /** K (feature indices, model) pairs. A Spark DecisionTree base over the
+    * full feature space takes the bin-once backend ([[NativeTreeBoost]]):
+    * the input is binned once, the K bootstrap draws live in one
+    * BaggedPoint table (one count per tree and row), and one induction
+    * grows all K trees, each split-finding job serving every tree's open
+    * nodes: Spark's RandomForest with featureSubsetStrategy "all". Feature
+    * subspacing (subspaceRatio < 1) stays generic: our contract draws the
+    * subspace per TREE, RandomForest's featureSubsetStrategy per NODE.
+    *
+    * The generic fit runs, per learner, `df.sample` (a Catalyst Sample
+    * node, pushed to the cached scan) -> optional vector-slice projection
+    * -> nested spark.ml fit, the K fits concurrently from the
+    * `parallelism` driver pool. They sample the input K times, so it is
+    * cached unless the caller cached it. `numClasses` is as in
+    * [[NativeTreeBoost.apply]].
+    */
+  def fit(
+      est: BaggingParams,
+      dataset: Dataset[_],
+      numClasses: Int): Array[(Array[Int], EnsemblePredictionModelType)] = {
+    val instances = SubBagFit.instances(est, dataset)
+    val (learner, k, seed) = (est.getBaseLearner, est.getNumBaseLearners, est.getSeed)
+    val (replacement, ratio, subspaceRatio) =
+      (est.getReplacement, est.getSubsampleRatio, est.getSubspaceRatio)
+    val native =
+      if (subspaceRatio >= 1.0) NativeTreeBoost(learner, instances, numClasses, numTrees = k)
+      else None
+    native match {
+      case Some(boost) =>
+        try boost.fitTrees(boost.treePoints, ratio, replacement, seed).map { tree =>
+          val model = tree.asInstanceOf[EnsemblePredictionModelType]
+          (Array.range(0, model.numFeatures), model)
+        } finally boost.close()
+      case None =>
+        val handlePersist = dataset.storageLevel == StorageLevel.NONE
+        if (handlePersist) instances.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val nf = GraftUtils.numFeatures(instances, "features")
+          val ec = est.getExecutionContext
+          val futures = Array.tabulate(k) { i =>
+            Future {
+              val indices = GraftUtils.subspace(subspaceRatio, nf, seed + i)
+              val prepared = sliceFeatures(
+                sample(instances, replacement, ratio, seed + i), indices, nf, "features")
+              (indices, Learners.fit(learner, prepared, "label", "features", Some("weight")))
+            }(ec)
+          }
+          // a failed fit rethrows its own exception (ThreadUtils.awaitResult
+          // would wrap it in a SparkException)
+          futures.map(Await.result(_, Duration.Inf))
+        } finally if (handlePersist) instances.unpersist()
     }
-    futures.map(ThreadUtils.awaitResult(_, Duration.Inf))
   }
 
   /** One learner's row sample; all rows at ratio 1 without replacement. */
@@ -71,82 +99,6 @@ private[graft] object SubBagFit {
       .withColumn(
         out, udf((v: Vector) => GraftUtils.sliceVector(v, indices)).apply(col("features")))
       .withMetadata(out, GraftUtils.featuresMetadata(indices.length, out))
-
-  /** Native-tree fast path: bagging K DecisionTrees over the same dataset
-    * IS one RandomForest pass — metadata, candidate splits, and the binned
-    * TreePoint table are built once, the K bootstrap draws live in one
-    * BaggedPoint RDD (one int[K] count vector per row instead of K sampled
-    * copies), and `RandomForest.runBagged(numTrees = K)` grows all K trees
-    * in shared passes over the data (each split-finding job aggregates
-    * stats for every tree's open nodes at once). The generic path pays K
-    * full binning passes plus K inductions; at 1000 executors this is the
-    * difference between ~3 and ~3K barriers. Returns None when the base
-    * learner is not a Spark DecisionTree — callers fall back to the
-    * generic loop. Feature subspacing (subspaceRatio < 1) stays generic:
-    * our contract draws the subspace per TREE, while RandomForest's
-    * featureSubsetStrategy draws per NODE — different semantics.
-    */
-  def runNativeTrees(
-      instances: DataFrame,
-      learner: EnsemblePredictorType,
-      numLearners: Int,
-      replacement: Boolean,
-      subsampleRatio: Double,
-      seed: Long,
-      numClasses: Option[Int] = None): Option[Array[(Array[Int], EnsemblePredictionModelType)]] = {
-    import org.apache.spark.ml.classification.DecisionTreeClassifier
-    import org.apache.spark.ml.feature.Instance
-    import org.apache.spark.ml.regression.DecisionTreeRegressor
-    import org.apache.spark.ml.tree.impl.{
-      BaggedPoint, DecisionTreeMetadata, GraftTreeShim, RandomForest, TreePoint
-    }
-
-    val cfg: Option[(org.apache.spark.mllib.tree.configuration.Strategy, Long)] =
-      learner match {
-        case dt: DecisionTreeRegressor => Some((dt.getOldStrategy(
-          org.apache.spark.ml.util.MetadataUtils
-            .getCategoricalFeatures(instances.schema("features"))), dt.getSeed))
-        case dt: DecisionTreeClassifier =>
-          // the caller MUST resolve numClasses (label metadata aware);
-          // deriving it here from max(label)+1 would disagree with the
-          // model's numClasses whenever metadata declares classes absent
-          // from the training rows
-          val k = numClasses.getOrElse(throw new IllegalArgumentException(
-            "runNativeTrees with a DecisionTreeClassifier requires the " +
-              "caller's metadata-resolved numClasses"))
-          Some((dt.getOldStrategy(
-            org.apache.spark.ml.util.MetadataUtils
-              .getCategoricalFeatures(instances.schema("features")), k), dt.getSeed))
-        case _ => None
-      }
-    cfg.map { case (strategy, treeSeed) =>
-      val sc = instances.sparkSession.sparkContext
-      val (train, trainBlocks) = NativeTreeBoost.cacheBlocks(
-        instances.select("label", "weight", "features").rdd
-          .map(r => Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2))))
-      try {
-        val metadata =
-          DecisionTreeMetadata.buildMetadata(train, strategy, numLearners, "all")
-        val splits = GraftTreeShim.findSplits(train, metadata, treeSeed)
-        val bcSplits = sc.broadcast(splits)
-        val (treePoints, treeBlocks) =
-          NativeTreeBoost.cacheBlocks(TreePoint.convertToTreeRDD(train, splits, metadata))
-        val (bagged, baggedBlocks) = NativeTreeBoost.cacheBlocks(BaggedPoint.convertToBaggedRDD(
-          treePoints, subsampleRatio, numLearners, replacement,
-          (tp: TreePoint) => tp.weight, seed))
-        try {
-          val full = Array.range(0, metadata.numFeatures)
-          RandomForest.runBagged(
-              bagged, metadata, bcSplits, strategy, numLearners, "all", treeSeed, None)
-            .map(m => (full, m.asInstanceOf[EnsemblePredictionModelType]))
-        } finally {
-          baggedBlocks.unpersist(blocking = false)
-          treeBlocks.unpersist(blocking = false)
-          bcSplits.destroy()
-        }
-      } finally trainBlocks.unpersist(blocking = false)
-    }
-  }
 
   /** Normalize an estimator's input dataset to hard-coded (label, weight,
     * features) columns, preserving features metadata; weight 1 when the
@@ -191,27 +143,8 @@ class BaggingRegressor(override val uid: String)
   override protected def train(dataset: Dataset[_]): BaggingRegressionModel = instrumented {
     instr =>
       GraftInstrumentation.logFit(instr, this, dataset)
-      trainImpl(dataset, instr)
-  }
-
-  private def trainImpl(dataset: Dataset[_], instr: Instrumentation): BaggingRegressionModel = {
-    val instances = SubBagFit.instances(this, dataset)
-    val handlePersist = dataset.storageLevel == StorageLevel.NONE
-    if (handlePersist) instances.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val bags = {
-        val native =
-          if ($(subspaceRatio) >= 1.0)
-            SubBagFit.runNativeTrees(
-              instances, $(baseLearner), $(numBaseLearners), $(replacement),
-              $(subsampleRatio), $(seed))
-          else None
-        native.getOrElse(SubBagFit.run(
-          instances, $(baseLearner), $(numBaseLearners), $(replacement),
-          $(subsampleRatio), $(subspaceRatio), $(seed), getExecutionContext))
-      }
+      val bags = SubBagFit.fit(this, dataset, numClasses = 0)
       new BaggingRegressionModel(uid, bags.map(_._1), bags.map(_._2)).setParent(this)
-    } finally if (handlePersist) instances.unpersist()
   }
 
   override def copy(extra: ParamMap): BaggingRegressor = defaultCopy(extra)

@@ -8,9 +8,7 @@ import org.apache.spark.ml.classification.{
 import org.apache.spark.ml.impl.Utils.EPSILON
 import org.apache.spark.ml.linalg.{DenseVector, Vector, Vectors}
 import org.apache.spark.ml.param.{Param, ParamMap, ParamValidators}
-import org.apache.spark.ml.param.shared.{
-  HasAggregationDepth, HasCheckpointInterval, HasWeightCol
-}
+import org.apache.spark.ml.param.shared.{HasCheckpointInterval, HasWeightCol}
 import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
 import org.apache.spark.sql.Dataset
@@ -21,8 +19,7 @@ private[graft] trait BoostingClassifierParams
     with HasNumBaseLearners
     with HasBaseLearner
     with HasWeightCol
-    with HasCheckpointInterval
-    with HasAggregationDepth {
+    with HasCheckpointInterval {
 
   /** discrete = SAMME (0/1 error reweighting), real = SAMME.R
     * (probability-coded reweighting) — Zhu et al. 2009 (reference:
@@ -53,7 +50,6 @@ class BoostingClassifier(override val uid: String)
   def setAlgorithm(value: String): this.type = set(algorithm, value)
   def setWeightCol(value: String): this.type = set(weightCol, value)
   def setCheckpointInterval(value: Int): this.type = set(checkpointInterval, value)
-  def setAggregationDepth(value: Int): this.type = set(aggregationDepth, value)
 
   override protected def train(dataset: Dataset[_]): BoostingClassificationModel = instrumented {
     instr =>
@@ -71,16 +67,11 @@ class BoostingClassifier(override val uid: String)
     }
     val instances = SubBagFit.instances(this, dataset)
     val mispredicted = (p: Double, y: Double) => if (p != y) 1.0 else 0.0
-    val learner: AdaBoostLearner = $(baseLearner) match {
-      case dt: org.apache.spark.ml.classification.DecisionTreeClassifier =>
-        val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
-        new BinnedAdaBoost(
-          instances, dt.getOldStrategy(categorical, numClasses), dt.getSeed,
-          $(checkpointInterval), mispredicted)
-      case base =>
-        new PredictorAdaBoost(
-          instances, base, $(checkpointInterval), mispredicted, withProbability = real)
-    }
+    val learner: AdaBoostLearner =
+      NativeTreeBoost($(baseLearner), instances, numClasses, sumOneWeights = true)
+        .map(new BinnedAdaBoost(_, $(checkpointInterval), mispredicted))
+        .getOrElse(new PredictorAdaBoost(
+          instances, $(baseLearner), $(checkpointInterval), mispredicted, withProbability = real))
     val models = ArrayBuffer.empty[EnsemblePredictionModelType]
     val modelWeights = ArrayBuffer.empty[Double]
     def keep(model: EnsemblePredictionModelType, weight: Double): Unit = {

@@ -6,9 +6,7 @@ import org.apache.spark.ml.PredictorParams
 import org.apache.spark.ml.graft.util.GraftUtils
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.param.{Param, ParamMap, ParamValidators}
-import org.apache.spark.ml.param.shared.{
-  HasAggregationDepth, HasCheckpointInterval, HasWeightCol
-}
+import org.apache.spark.ml.param.shared.{HasCheckpointInterval, HasWeightCol}
 import org.apache.spark.ml.regression.{RegressionModel, Regressor}
 import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
@@ -92,11 +90,7 @@ private[graft] trait BoostingRegressorParams
     with HasNumBaseLearners
     with HasBaseLearner
     with HasWeightCol
-    with HasCheckpointInterval
-    // kept for API parity with the reference's treeReduce/treeAggregate
-    // depth; the DataFrame aggregations here partial-aggregate map-side,
-    // which supersedes multi-level tree reduction
-    with HasAggregationDepth {
+    with HasCheckpointInterval {
 
   /** AdaBoost.R2 loss on the max-normalized absolute error (reference:
     * regression/BoostingRegressor.scala:97-106).
@@ -134,7 +128,6 @@ class BoostingRegressor(override val uid: String)
   def setVotingStrategy(value: String): this.type = set(votingStrategy, value)
   def setWeightCol(value: String): this.type = set(weightCol, value)
   def setCheckpointInterval(value: Int): this.type = set(checkpointInterval, value)
-  def setAggregationDepth(value: Int): this.type = set(aggregationDepth, value)
 
   override protected def train(dataset: Dataset[_]): BoostingRegressionModel = instrumented {
     instr =>
@@ -145,15 +138,11 @@ class BoostingRegressor(override val uid: String)
   private def trainImpl(dataset: Dataset[_], instr: Instrumentation): BoostingRegressionModel = {
     val instances = SubBagFit.instances(this, dataset)
     val absError = (p: Double, y: Double) => math.abs(p - y)
-    val learner: AdaBoostLearner = $(baseLearner) match {
-      case dt: org.apache.spark.ml.regression.DecisionTreeRegressor =>
-        val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
-        new BinnedAdaBoost(
-          instances, dt.getOldStrategy(categorical), dt.getSeed, $(checkpointInterval), absError)
-      case base =>
-        new PredictorAdaBoost(
-          instances, base, $(checkpointInterval), absError, withProbability = false)
-    }
+    val learner: AdaBoostLearner =
+      NativeTreeBoost($(baseLearner), instances, numClasses = 0, sumOneWeights = true)
+        .map(new BinnedAdaBoost(_, $(checkpointInterval), absError))
+        .getOrElse(new PredictorAdaBoost(
+          instances, $(baseLearner), $(checkpointInterval), absError, withProbability = false))
     val models = ArrayBuffer.empty[EnsemblePredictionModelType]
     val modelWeights = ArrayBuffer.empty[Double]
     def keep(model: EnsemblePredictionModelType, weight: Double): Unit = {

@@ -74,7 +74,6 @@ class GBMClassifier(override val uid: String)
   def setValidationTol(value: Double): this.type = set(validationTol, value)
   def setValidationIndicatorCol(value: String): this.type = set(validationIndicatorCol, value)
   def setCheckpointInterval(value: Int): this.type = set(checkpointInterval, value)
-  def setAggregationDepth(value: Int): this.type = set(aggregationDepth, value)
   def setTol(value: Double): this.type = set(tol, value)
   def setParallelism(value: Int): this.type = set(parallelism, value)
 

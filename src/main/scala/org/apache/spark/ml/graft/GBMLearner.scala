@@ -16,12 +16,10 @@ import org.apache.spark.ml.graft.loss._
 import org.apache.spark.ml.graft.util.GraftUtils
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.param._
-import org.apache.spark.ml.param.shared.{
-  HasAggregationDepth, HasCheckpointInterval, HasMaxIter, HasWeightCol
-}
-import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, DecisionTreeRegressor}
-import org.apache.spark.ml.tree.impl.{BaggedPoint, GradientBoostedTrees => NativeGBT, TreePoint}
-import org.apache.spark.ml.util.{Instrumentation, MetadataUtils}
+import org.apache.spark.ml.param.shared.{HasCheckpointInterval, HasMaxIter, HasWeightCol}
+import org.apache.spark.ml.regression.DecisionTreeRegressionModel
+import org.apache.spark.ml.tree.impl.{BaggedPoint, TreePoint}
+import org.apache.spark.ml.util.Instrumentation
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
@@ -37,11 +35,7 @@ private[graft] trait GBMParams
     with HasWeightCol
     with HasMaxIter
     with HasSubBag
-    with HasCheckpointInterval
-    // kept for API parity with the reference's treeAggregate depth; the
-    // step searches fold per-partition partials in partition order
-    // (`NativeTreeBoost.orderedAggregate`), so fits are reproducible
-    with HasAggregationDepth {
+    with HasCheckpointInterval {
 
   final val learningRate: DoubleParam = new DoubleParam(
     this, "learningRate", "shrinkage in (0,1]", ParamValidators.inRange(0, 1, false, true))
@@ -126,11 +120,13 @@ private[graft] trait GBMParams
       logStep: Array[Double] => Unit,
       instr: Instrumentation)
       : ArrayBuffer[(Array[EnsemblePredictionModelType], Array[Double], Array[Int])] = {
-    val learner: GBMLearner = $(baseLearner) match {
-      case dt: DecisionTreeRegressor if $(subspaceRatio) >= 1.0 && $(updates) == "gradient" =>
-        new BinnedGBM(this, instances, loss, initScore, hasValidation, dt, ec)
-      case _ => new PredictorGBM(this, instances, loss, initScore, hessFloor, nf, ec)
-    }
+    val binned =
+      if ($(subspaceRatio) >= 1.0 && $(updates) == "gradient")
+        NativeTreeBoost($(baseLearner), instances, numClasses = 0, hasVal = hasValidation)
+      else None
+    val learner: GBMLearner = binned
+      .map(new BinnedGBM(this, _, instances, loss, initScore, hasValidation, ec))
+      .getOrElse(new PredictorGBM(this, instances, loss, initScore, hessFloor, nf, ec))
     val rounds =
       ArrayBuffer.empty[(Array[EnsemblePredictionModelType], Array[Double], Array[Int])]
     val stop = new ValidationStop($(numRounds), $(validationTol))
@@ -634,28 +630,25 @@ private[graft] final class PredictorGBM(
   * subsampleRatio = 1 because candidate splits depend on feature values
   * and the constant gradient-update weights only, never on the residual
   * labels (pinned by GBMSuite). Directions and the score update predict on
-  * binned features (`GradientBoostedTrees.updatePrediction`, exact for
-  * points binned with the fitted splits) — no per-row Vector boxing.
+  * binned features (the tree's binned leaf lookup, exact for points binned
+  * with the fitted splits) — no per-row Vector boxing.
   */
 private[graft] final class BinnedGBM(
     est: GBMParams,
+    boost: NativeTreeBoost,
     instances: DataFrame,
     loss: GBMLoss,
     initScore: Vector => Array[Double],
     hasVal: Boolean,
-    dt: DecisionTreeRegressor,
     ec: ExecutionContext) extends GBMLearner {
   private val dim = loss.dim
-  private val boost = new NativeTreeBoost(
-    instances,
-    dt.getOldStrategy(MetadataUtils.getCategoricalFeatures(instances.schema("features"))),
-    dt.getSeed, est.getCheckpointInterval, sumOneWeights = false, hasVal)
   // closures take local copies: a constructor parameter referenced from a
   // task closure would pull this learner (and its DataFrames) into the task
   private val (f, valF) = {
-    val f0 = initScore
-    (new boost.State(boost.train.map(inst => f0(inst.features))),
-      if (hasVal) new boost.State(boost.valid.map(inst => f0(inst.features))) else null)
+    val (f0, interval) = (initScore, est.getCheckpointInterval)
+    (new boost.State(boost.train.map(inst => f0(inst.features)), interval),
+      if (hasVal) new boost.State(boost.valid.map(inst => f0(inst.features)), interval)
+      else null)
   }
   private var trees: Array[DecisionTreeRegressionModel] = _
   // the round's (yenc, f, direction, weight) rows and their cache handle;
@@ -691,7 +684,7 @@ private[graft] final class BinnedGBM(
               new BaggedPoint(
                 new TreePoint(bp.datum._2(k), bp.datum._1.binnedFeatures, bp.datum._1.weight),
                 bp.subsampleCounts, bp.sampleWeight)
-            }).asInstanceOf[DecisionTreeRegressionModel]
+            }).head.asInstanceOf[DecisionTreeRegressionModel]
           }(ec)
         }
         futures.map(Await.result(_, Duration.Inf))
@@ -701,7 +694,7 @@ private[graft] final class BinnedGBM(
     val (rows, handle) = NativeTreeBoost.cacheBlocks(boost.treePoints.zip(f.rdd).map {
       case (tp, fr) =>
         val d = Array.tabulate(ts.length)(k =>
-          NativeGBT.updatePrediction(tp, 0.0, ts(k), 1.0, splits.value))
+          ts(k).rootNode.predictBinned(tp.binnedFeatures, splits.value).prediction)
         (loss.encodeLabel(tp.label), fr, d, tp.weight)
     })
     data = rows
@@ -724,7 +717,8 @@ private[graft] final class BinnedGBM(
         val out = new Array[Double](fr.length)
         var j = 0
         while (j < fr.length) {
-          out(j) = fr(j) + w(j) * NativeGBT.updatePrediction(tp, 0.0, ts(j), 1.0, splits.value)
+          out(j) = fr(j) +
+            w(j) * ts(j).rootNode.predictBinned(tp.binnedFeatures, splits.value).prediction
           j += 1
         }
         out

@@ -75,7 +75,6 @@ class GBMRegressor(override val uid: String)
   def setValidationTol(value: Double): this.type = set(validationTol, value)
   def setValidationIndicatorCol(value: String): this.type = set(validationIndicatorCol, value)
   def setCheckpointInterval(value: Int): this.type = set(checkpointInterval, value)
-  def setAggregationDepth(value: Int): this.type = set(aggregationDepth, value)
   def setTol(value: Double): this.type = set(tol, value)
 
   override protected def train(dataset: Dataset[_]): GBMRegressionModel = instrumented {

@@ -4,30 +4,35 @@ import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.ml.classification.DecisionTreeClassifier
 import org.apache.spark.ml.feature.Instance
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.ml.tree.{DecisionTreeModel, Split}
+import org.apache.spark.ml.regression.DecisionTreeRegressor
+import org.apache.spark.ml.tree.{DecisionTreeModel, DecisionTreeParams, Split}
 import org.apache.spark.ml.tree.impl.{
   BaggedPoint, DecisionTreeMetadata, GraftTreeShim, RandomForest, TreePoint
 }
-import org.apache.spark.mllib.tree.configuration.{Strategy => OldStrategy}
+import org.apache.spark.ml.util.MetadataUtils
+import org.apache.spark.mllib.tree.configuration.{Algo => OldAlgo, Strategy => OldStrategy}
+import org.apache.spark.mllib.tree.impurity.{Impurity => OldImpurity}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.rdd.util.PeriodicRDDCheckpointer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.storage.StorageLevel
 
-/** Bin-once state of the DecisionTree learner backend that the GBM and
-  * AdaBoost loops share: metadata, candidate splits and the binned
-  * `TreePoint` table are built ONCE per fit (the native GBT/RandomForest
-  * trick), and each round only relabels or reweights the binned points and
-  * runs the core induction (`RandomForest.runBagged`). The other backend
-  * re-enters the base learner's own `fit` every round and so re-pays the
-  * binning per round.
+/** Bin-once state of the DecisionTree learner backend that the GBM,
+  * AdaBoost and bagging fits share: metadata, candidate splits and the
+  * binned `TreePoint` table are built ONCE per fit (the native
+  * GBT/RandomForest trick), and each boosting round only relabels or
+  * reweights the binned points and runs the core induction
+  * (`RandomForest.runBagged`); bagging runs one induction of all its trees.
+  * The other backend re-enters the base learner's own `fit` every round
+  * (every bag) and so re-pays the binning each time.
   *
-  * The estimators pick this backend from the input alone, with no option
-  * to override it: the base learner is a Spark DecisionTree and the
-  * round's binning is provably the generic fit's (any other predictor,
+  * [[NativeTreeBoost.apply]] picks this backend from the input alone, with
+  * no option to override it: the base learner is a Spark DecisionTree and
+  * the round's binning is provably the generic fit's (any other predictor,
   * including one that wraps a tree, takes the `Predictor` backend).
   * Candidate splits are quantiles of the feature values under the
   * instance weights, so they are round-invariant only while the weights
@@ -50,11 +55,11 @@ import org.apache.spark.storage.StorageLevel
   * Rows with `__val` set (GBM validation) are binned with the training
   * splits into `valPoints` and never reach the induction.
   */
-private[graft] final class NativeTreeBoost(
+private[graft] final class NativeTreeBoost private (
     instances: DataFrame,
     strategy: OldStrategy,
     val dtSeed: Long,
-    checkpointInterval: Int,
+    numTrees: Int,
     sumOneWeights: Boolean,
     hasVal: Boolean) {
 
@@ -84,7 +89,9 @@ private[graft] final class NativeTreeBoost(
   }
   val valid: RDD[Instance] = rows.filter(_._2).map(_._1)
 
-  private val metadata = DecisionTreeMetadata.buildMetadata(train, strategy, numTrees = 1, "all")
+  // built for the tree count of every induction: with `cacheNodeIds` the
+  // induction indexes per-tree state by the metadata's count
+  private val metadata = DecisionTreeMetadata.buildMetadata(train, strategy, numTrees, "all")
   private val splits = GraftTreeShim.findSplits(train, metadata, dtSeed)
   val bcSplits: Broadcast[Array[Array[Split]]] = sc.broadcast(splits)
   val treePoints: RDD[TreePoint] = cache(TreePoint.convertToTreeRDD(train, splits, metadata))
@@ -101,7 +108,7 @@ private[graft] final class NativeTreeBoost(
     * cached until that job has run. The checkpointer keeps the last three
     * values cached, so the value before is one of them.
     */
-  final class State[T: ClassTag](initial: RDD[T]) {
+  final class State[T: ClassTag](initial: RDD[T], checkpointInterval: Int) {
     private val ck = new PeriodicRDDCheckpointer[Array[T]](checkpointInterval, sc)
     checkpointers += ck
     var rdd: RDD[T] = _
@@ -115,23 +122,27 @@ private[graft] final class NativeTreeBoost(
     }
   }
 
-  /** One tree on `points` (the binned table reweighted for the round),
-    * row-sampled like the generic fit.
+  /** The induction's `numTrees` trees on `points` (the binned table,
+    * reweighted for the round), each on its own row sample drawn from one
+    * `BaggedPoint` table: one count per tree and row, with `rate` and
+    * `replacement` as the generic fit samples.
     */
-  def fitTree(
+  def fitTrees(
       points: RDD[TreePoint],
       rate: Double,
       replacement: Boolean,
-      sampleSeed: Long): DecisionTreeModel = {
+      sampleSeed: Long): Array[DecisionTreeModel] = {
     val (bagged, handle) = NativeTreeBoost.cacheBlocks(BaggedPoint.convertToBaggedRDD(
-      points, rate, 1, replacement, (tp: TreePoint) => tp.weight, sampleSeed))
+      points, rate, numTrees, replacement, (tp: TreePoint) => tp.weight, sampleSeed))
     try grow(bagged)
     finally handle.unpersist(blocking = false)
   }
 
-  /** The core induction over an already-sampled binned table. */
-  def grow(bagged: RDD[BaggedPoint[TreePoint]]): DecisionTreeModel =
-    RandomForest.runBagged(bagged, metadata, bcSplits, strategy, 1, "all", dtSeed, None).head
+  /** The core induction over an already-sampled binned table: one pass per
+    * tree level grows all `numTrees` trees.
+    */
+  def grow(bagged: RDD[BaggedPoint[TreePoint]]): Array[DecisionTreeModel] =
+    RandomForest.runBagged(bagged, metadata, bcSplits, strategy, numTrees, "all", dtSeed, None)
 
   /** Always runs (the loops call it from `finally`): frees the state caches
     * and checkpoint files, the binned tables, the instance cache and the
@@ -147,6 +158,36 @@ private[graft] final class NativeTreeBoost(
 }
 
 private[graft] object NativeTreeBoost {
+
+  /** The bin-once backend for `learner` over `instances`, or None when the
+    * learner takes the `Predictor` backend: the one place that decides.
+    * It takes a Spark DecisionTreeRegressor, and a DecisionTreeClassifier
+    * when `numClasses` > 0, the class count the caller resolved from the
+    * label metadata; callers whose labels are not classes (a regressor's
+    * targets, GBM's gradients) pass 0. The tree strategy is the one
+    * Spark's own fit of that learner builds, the seed the learner's.
+    * `numTrees` is the tree count of every induction.
+    */
+  def apply(
+      learner: EnsemblePredictorType,
+      instances: DataFrame,
+      numClasses: Int,
+      numTrees: Int = 1,
+      sumOneWeights: Boolean = false,
+      hasVal: Boolean = false): Option[NativeTreeBoost] = {
+    val tree: Option[(DecisionTreeParams, Int, OldAlgo.Algo, OldImpurity)] = learner match {
+      case dt: DecisionTreeRegressor => Some((dt, 0, OldAlgo.Regression, dt.getOldImpurity))
+      case dt: DecisionTreeClassifier if numClasses > 0 =>
+        Some((dt, numClasses, OldAlgo.Classification, dt.getOldImpurity))
+      case _ => None
+    }
+    tree.map { case (dt, k, algo, impurity) =>
+      val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
+      new NativeTreeBoost(
+        instances, dt.getOldStrategy(categorical, k, algo, impurity, 1.0), dt.getSeed,
+        numTrees, sumOneWeights, hasVal)
+    }
+  }
 
   /** `rdd` cached as ONE array per partition at `MEMORY_AND_DISK`: returns
     * the row view (the same rows, in the same order and partitioning) and

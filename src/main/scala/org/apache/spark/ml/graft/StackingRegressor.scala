@@ -1,6 +1,6 @@
 package org.apache.spark.ml.graft
 
-import scala.concurrent.{ExecutionContext, Future}
+import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.ml.{PredictionModel, Predictor, PredictorParams}
@@ -14,7 +14,6 @@ import org.apache.spark.ml.util.Instrumentation.instrumented
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.util.ThreadUtils
 import org.json4s.JsonDSL._
 
 private[graft] trait StackingParams
@@ -36,7 +35,9 @@ private[graft] object StackingFit {
     val futures = learners.map { learner =>
       Future(Learners.fit(learner, instances, "label", "features", Some("weight")))(ec)
     }
-    futures.map(ThreadUtils.awaitResult(_, Duration.Inf))
+    // a failed fit rethrows its own exception (ThreadUtils.awaitResult
+    // would wrap it in a SparkException)
+    futures.map(Await.result(_, Duration.Inf))
   }
 
   /** Meta-feature table: chain each base model's transform (executor-side

@@ -228,10 +228,12 @@ private[graft] object GraftPersistence {
     Map("baseLearner" -> "learner", "baseLearners" -> "learner", "stacker" -> "stacker")
   val learnerParamNames: Set[String] = learnerDirs.keySet
 
-  /** Written by every save before the learner backend was chosen from the
-    * input alone; a load skips it.
+  /** Params that older saves wrote and a load skips: `nativeTreeFastPath`
+    * (every save before the learner backend was chosen from the input
+    * alone) and `aggregationDepth` (the GBM and AdaBoost estimators' saves
+    * before the unread param was dropped).
     */
-  private val retiredParamNames = List("nativeTreeFastPath")
+  private val retiredParamNames = List("nativeTreeFastPath", "aggregationDepth")
 
   private def learnerParams(instance: Params): Seq[Param[Any]] =
     instance.params.toSeq.filter(p => learnerParamNames(p.name)).map(_.asInstanceOf[Param[Any]])

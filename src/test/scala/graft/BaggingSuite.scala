@@ -1,9 +1,13 @@
 package graft
 
-import org.apache.spark.ml.classification.DecisionTreeClassifier
+import org.apache.spark.ml.classification.{
+  DecisionTreeClassificationModel, DecisionTreeClassifier, RandomForestClassifier
+}
 import org.apache.spark.ml.graft._
 import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.ml.regression.DecisionTreeRegressor
+import org.apache.spark.ml.regression.{
+  DecisionTreeRegressionModel, DecisionTreeRegressor, RandomForestRegressor
+}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -86,6 +90,54 @@ class BaggingSuite extends SparkSpec {
       .select(avg(when(col("prediction") === col("label"), 1.0).otherwise(0.0)))
       .head().getDouble(0)
     assert(acc > 0.9, s"fast-path soft-vote classifier accuracy $acc")
+  }
+
+  test("bin-once bagging grows Spark's RandomForest trees, tree for tree") {
+    // the uid header line differs; the trees below it must not
+    def tree(m: Any): String = (m match {
+      case r: DecisionTreeRegressionModel => r.toDebugString
+      case c: DecisionTreeClassificationModel => c.toDebugString
+    }).linesIterator.drop(1).mkString("\n")
+    // cacheNodeIds indexes the induction's per-tree state by the tree count
+    // the metadata was built for
+    for ((replacement, ratio, cacheNodeIds) <-
+        Seq((true, 0.8, false), (false, 0.7, false), (true, 1.0, false), (true, 0.8, true))) {
+      val bag = new BaggingRegressor()
+        .setBaseLearner(
+          new DecisionTreeRegressor().setMaxDepth(5).setSeed(42).setCacheNodeIds(cacheNodeIds))
+        .setNumBaseLearners(5)
+        .setReplacement(replacement)
+        .setSubsampleRatio(ratio)
+        .setSeed(42)
+        .fit(regDf)
+      val rf = new RandomForestRegressor()
+        .setNumTrees(5)
+        .setMaxDepth(5)
+        .setFeatureSubsetStrategy("all")
+        .setSubsamplingRate(ratio)
+        .setBootstrap(replacement)
+        .setCacheNodeIds(cacheNodeIds)
+        .setSeed(42)
+        .fit(regDf)
+      assert(bag.models.map(tree).toSeq === rf.trees.map(tree).toSeq,
+        s"replacement $replacement, ratio $ratio, cacheNodeIds $cacheNodeIds")
+    }
+    val bag = new BaggingClassifier()
+      .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(5).setSeed(42))
+      .setNumBaseLearners(5)
+      .setReplacement(true)
+      .setSubsampleRatio(0.8)
+      .setSeed(42)
+      .fit(clsDf)
+    val rf = new RandomForestClassifier()
+      .setNumTrees(5)
+      .setMaxDepth(5)
+      .setFeatureSubsetStrategy("all")
+      .setSubsamplingRate(0.8)
+      .setBootstrap(true)
+      .setSeed(42)
+      .fit(clsDf)
+    assert(bag.models.map(tree).toSeq === rf.trees.map(tree).toSeq)
   }
 
   test("BaggingRegressor subspaceRatio < 1 slices features per learner") {

@@ -202,19 +202,21 @@ class PersistenceSuite extends SparkSpec {
     val path = Files.createTempDirectory("graft-retired").toString + "/gbm"
     val est = gbmReg.setLearningRate(0.5)
     est.write.save(path)
-    // every save before the param was retired wrote it into both maps
+    // every save before a param was retired wrote it into both maps
+    val retired = Seq(
+      ("nativeTreeFastPath", JBool(false), JBool(true)),
+      ("aggregationDepth", JInt(3), JInt(2)))
     val file = metadataFile(path)
     val json = parse(new String(Files.readAllBytes(file.toPath), UTF_8)).transformField {
       case ("paramMap", JObject(fs)) =>
-        ("paramMap", JObject(("nativeTreeFastPath" -> JBool(false)) :: fs))
+        ("paramMap", JObject(retired.map { case (n, set, _) => n -> set }.toList ++ fs))
       case ("defaultParamMap", JObject(fs)) =>
-        ("defaultParamMap", JObject(("nativeTreeFastPath" -> JBool(true)) :: fs))
+        ("defaultParamMap", JObject(retired.map { case (n, _, dflt) => n -> dflt }.toList ++ fs))
     }
     Files.write(file.toPath, compact(render(json)).getBytes(UTF_8))
     new File(file.getParentFile, s".${file.getName}.crc").delete()
     val loaded = GBMRegressor.load(path)
     assert(loaded.getLearningRate === 0.5)
-    assert(describe(loaded) -- Seq("nativeTreeFastPath") ===
-      describe(est) -- Seq("nativeTreeFastPath"))
+    assert(describe(loaded) -- retired.map(_._1) === describe(est) -- retired.map(_._1))
   }
 }

@@ -170,11 +170,42 @@ class RobustnessSuite extends SparkSpec {
         .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2))
         .setNumBaseLearners(3)
         .setSeed(1L)
+        .fit(df)),
+      "BaggingClassifier" -> (() => new BaggingClassifier()
+        .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(2))
+        .setNumBaseLearners(3)
+        .setSeed(1L)
+        .fit(cls)),
+      // the generic path caches its input for the K samples
+      "BaggingRegressor with subspaceRatio 0.5" -> (() => new BaggingRegressor()
+        .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2))
+        .setNumBaseLearners(3)
+        .setSubspaceRatio(0.5)
+        .setSeed(1L)
         .fit(df)))
     for ((name, fit) <- fits) {
       val cached = sc.getPersistentRDDs.keySet
       fit()
       assert(sc.getPersistentRDDs.keySet === cached, s"$name left cached RDDs")
+    }
+  }
+
+  test("a failed concurrent fit rethrows the base learner's own exception") {
+    val fits: Seq[(String, () => Any)] = Seq(
+      "BaggingRegressor" -> (() => new BaggingRegressor()
+        .setBaseLearner(new FitFails())
+        .setNumBaseLearners(3)
+        .setSubspaceRatio(0.5)
+        .setSeed(1L)
+        .fit(df)),
+      "StackingRegressor" -> (() => new StackingRegressor()
+        .setBaseLearners(Array(new DummyRegressor(), new FitFails()))
+        .setStacker(new DummyRegressor())
+        .fit(df)))
+    for ((name, fit) <- fits) {
+      val e = intercept[Exception](fit())
+      assert(e.isInstanceOf[IllegalArgumentException], s"$name threw $e")
+      assert(e.getMessage === FitFails.message, name)
     }
   }
 
@@ -373,4 +404,16 @@ class SecondFitFails(uid: String) extends DummyRegressor(uid) {
 
 object SecondFitFails {
   val fits = new java.util.concurrent.atomic.AtomicInteger()
+}
+
+/** A DummyRegressor whose every fit throws. */
+class FitFails(uid: String) extends DummyRegressor(uid) {
+  def this() = this(org.apache.spark.ml.util.Identifiable.randomUID("fitFails"))
+
+  override protected def train(dataset: org.apache.spark.sql.Dataset[_]): DummyRegressionModel =
+    throw new IllegalArgumentException(FitFails.message)
+}
+
+object FitFails {
+  val message = "the base learner rejects its input"
 }
