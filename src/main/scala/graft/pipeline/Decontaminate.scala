@@ -261,6 +261,11 @@ object Decontaminate {
     * Result is exact (equal to the full cross-corpus Jaccard report)
     * whenever banding recall is 1 at the threshold — with b bands of r
     * rows the per-pair miss probability is (1−j^r)^b.
+    *
+    * Precondition: `idCol` is unique in `docs` and `evalIdCol` in
+    * `evalDocs`. Shingle sets and their sizes are counted per id, so rows
+    * sharing an id pool their shingles, and the Jaccard reported for that
+    * id is neither row's.
     */
   def nearDupContaminationReport(
       docs: DataFrame,

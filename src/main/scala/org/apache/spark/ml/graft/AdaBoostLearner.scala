@@ -110,21 +110,24 @@ private[graft] final class BinnedAdaBoost(
     val w = bw.rdd
     val sw = NativeTreeBoost.orderedSum(w)
     if (dataBlocks != null) dataBlocks.unpersist(blocking = false)
-    val relabeled = boost.treePoints.zip(w).map { case (tp, x) =>
+    val relabeled = NativeTreeBoost.zip(boost.treePoints, w).map { case (tp, x) =>
       new TreePoint(tp.label, tp.binnedFeatures, x / sw)
     }
     model = boost.fitTrees(relabeled, 1.0, replacement = false, boost.dtSeed + round).head
     val (m, splits, err) = (model, boost.bcSplits, rowError)
-    val (rows, handle) = NativeTreeBoost.cacheBlocks(boost.treePoints.zip(w).map { case (tp, x) =>
-      (err(m.rootNode.predictBinned(tp.binnedFeatures, splits.value).prediction, tp.label),
-        x / sw, x)
-    })
+    val (rows, handle) = NativeTreeBoost.cacheBlocks(
+      NativeTreeBoost.zip(boost.treePoints, w).map { case (tp, x) =>
+        (err(m.rootNode.predictBinned(tp.binnedFeatures, splits.value).prediction, tp.label),
+          x / sw, x)
+      })
     data = rows
     dataBlocks = handle
     model.asInstanceOf[EnsemblePredictionModelType]
   }
 
-  def maxError(): Double = data.map(_._1).max()
+  def maxError(): Double =
+    NativeTreeBoost.orderedAggregate(data, Double.NegativeInfinity)(
+      (m, r) => math.max(m, r._1), math.max)
 
   def weightedError(loss: Double => Double): Double =
     NativeTreeBoost.orderedSum(data.map { case (e, bwn, _) => bwn * loss(e) })
@@ -140,7 +143,7 @@ private[graft] final class BinnedAdaBoost(
     */
   def reweightByProbability(factors: Array[Double] => Array[Double]): Unit = {
     val (m, splits) = (model, boost.bcSplits)
-    bw.set(boost.treePoints.zip(bw.rdd).mapPartitions { iter =>
+    bw.set(NativeTreeBoost.zip(boost.treePoints, bw.rdd).mapPartitions { iter =>
       val cache = new java.util.IdentityHashMap[AnyRef, Array[Double]]()
       iter.map { case (tp, x) =>
         val leaf = m.rootNode.predictBinned(tp.binnedFeatures, splits.value)

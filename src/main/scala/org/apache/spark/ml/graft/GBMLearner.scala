@@ -658,7 +658,9 @@ private[graft] final class BinnedGBM(
   private var dataBlocks: RDD[_] = _
 
   def absResiduals: DataFrame = {
-    val absr = boost.treePoints.zip(f.rdd).map { case (tp, fr) => math.abs(tp.label - fr(0)) }
+    val absr = NativeTreeBoost.zip(boost.treePoints, f.rdd).map { case (tp, fr) =>
+      math.abs(tp.label - fr(0))
+    }
     instances.sparkSession.createDataset(absr)(Encoders.scalaDouble).toDF("__absr")
   }
 
@@ -670,7 +672,7 @@ private[graft] final class BinnedGBM(
     // dimensions (the `Predictor` learner samples once and shares its
     // frame the same way — parity matters for the per-dimension fits
     // seeing identical rows)
-    val resid: RDD[(TreePoint, Array[Double])] = boost.treePoints.zip(f.rdd).map {
+    val resid: RDD[(TreePoint, Array[Double])] = NativeTreeBoost.zip(boost.treePoints, f.rdd).map {
       case (tp, fr) => (tp, loss.negativeGradient(loss.encodeLabel(tp.label), fr))
     }
     val (bagged, baggedBlocks) = NativeTreeBoost.cacheBlocks(BaggedPoint.convertToBaggedRDD(
@@ -691,12 +693,12 @@ private[graft] final class BinnedGBM(
       } finally baggedBlocks.unpersist(blocking = false)
     if (dataBlocks != null) dataBlocks.unpersist(blocking = false)
     val (ts, splits) = (trees, boost.bcSplits)
-    val (rows, handle) = NativeTreeBoost.cacheBlocks(boost.treePoints.zip(f.rdd).map {
-      case (tp, fr) =>
+    val (rows, handle) = NativeTreeBoost.cacheBlocks(
+      NativeTreeBoost.zip(boost.treePoints, f.rdd).map { case (tp, fr) =>
         val d = Array.tabulate(ts.length)(k =>
           ts(k).rootNode.predictBinned(tp.binnedFeatures, splits.value).prediction)
         (loss.encodeLabel(tp.label), fr, d, tp.weight)
-    })
+      })
     data = rows
     dataBlocks = handle
     trees.map(_.asInstanceOf[EnsemblePredictionModelType])
@@ -713,7 +715,7 @@ private[graft] final class BinnedGBM(
     })
     if (hasVal) {
       val (ts, splits) = (trees, boost.bcSplits)
-      valF.set(boost.valPoints.zip(valF.rdd).map { case (tp, fr) =>
+      valF.set(NativeTreeBoost.zip(boost.valPoints, valF.rdd).map { case (tp, fr) =>
         val out = new Array[Double](fr.length)
         var j = 0
         while (j < fr.length) {
@@ -727,7 +729,8 @@ private[graft] final class BinnedGBM(
   }
 
   def validationLoss(loss: GBMLoss): Option[Double] = {
-    val (lsum, wsum) = NativeTreeBoost.orderedAggregate(boost.valPoints.zip(valF.rdd), (0.0, 0.0))(
+    val (lsum, wsum) = NativeTreeBoost.orderedAggregate(
+        NativeTreeBoost.zip(boost.valPoints, valF.rdd), (0.0, 0.0))(
       (acc, t) => (
         acc._1 + t._1.weight * loss.loss(loss.encodeLabel(t._1.label), t._2),
         acc._2 + t._1.weight),

@@ -4,14 +4,13 @@ import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.errors.SparkCoreErrors
 import org.apache.spark.ml.classification.DecisionTreeClassifier
 import org.apache.spark.ml.feature.Instance
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.regression.DecisionTreeRegressor
 import org.apache.spark.ml.tree.{DecisionTreeModel, DecisionTreeParams, Split}
-import org.apache.spark.ml.tree.impl.{
-  BaggedPoint, DecisionTreeMetadata, GraftTreeShim, RandomForest, TreePoint
-}
+import org.apache.spark.ml.tree.impl.{BaggedPoint, DecisionTreeMetadata, GraftTreeShim, TreePoint}
 import org.apache.spark.ml.util.MetadataUtils
 import org.apache.spark.mllib.tree.configuration.{Algo => OldAlgo, Strategy => OldStrategy}
 import org.apache.spark.mllib.tree.impurity.{Impurity => OldImpurity}
@@ -25,10 +24,19 @@ import org.apache.spark.storage.StorageLevel
   * AdaBoost and bagging fits share: metadata, candidate splits and the
   * binned `TreePoint` table are built ONCE per fit (the native
   * GBT/RandomForest trick), and each boosting round only relabels or
-  * reweights the binned points and runs the core induction
-  * (`RandomForest.runBagged`); bagging runs one induction of all its trees.
-  * The other backend re-enters the base learner's own `fit` every round
-  * (every bag) and so re-pays the binning each time.
+  * reweights the binned points and runs the core induction; bagging runs
+  * one induction of all its trees. The other backend re-enters the base
+  * learner's own `fit` every round (every bag) and so re-pays the binning
+  * each time.
+  *
+  * The induction is graft's level loop, [[GraftTreeShim.grow]], with the
+  * dataflow of Spark's `RandomForest.runBagged` at featureSubsetStrategy
+  * "all": per-partition histograms merged by node on the executors, the
+  * best split chosen there, and only the chosen splits sent to the
+  * driver. Its trees are Spark's, tree for tree (BaggingSuite), at less
+  * driver work per level job. The learner's `cacheNodeIds` is ignored:
+  * the node-id cache changes how a point finds its node, not which node,
+  * so it cannot change a tree.
   *
   * [[NativeTreeBoost.apply]] picks this backend from the input alone, with
   * no option to override it: the base learner is a Spark DecisionTree and
@@ -89,8 +97,6 @@ private[graft] final class NativeTreeBoost private (
   }
   val valid: RDD[Instance] = rows.filter(_._2).map(_._1)
 
-  // built for the tree count of every induction: with `cacheNodeIds` the
-  // induction indexes per-tree state by the metadata's count
   private val metadata = DecisionTreeMetadata.buildMetadata(train, strategy, numTrees, "all")
   private val splits = GraftTreeShim.findSplits(train, metadata, dtSeed)
   val bcSplits: Broadcast[Array[Array[Split]]] = sc.broadcast(splits)
@@ -138,11 +144,12 @@ private[graft] final class NativeTreeBoost private (
     finally handle.unpersist(blocking = false)
   }
 
-  /** The core induction over an already-sampled binned table: one pass per
-    * tree level grows all `numTrees` trees.
+  /** The core induction over an already-sampled binned table: one job per
+    * group of open nodes grows all `numTrees` trees
+    * ([[GraftTreeShim.grow]], Spark's `RandomForest` dataflow).
     */
   def grow(bagged: RDD[BaggedPoint[TreePoint]]): Array[DecisionTreeModel] =
-    RandomForest.runBagged(bagged, metadata, bcSplits, strategy, numTrees, "all", dtSeed, None)
+    GraftTreeShim.grow(bagged, metadata, bcSplits, strategy, numTrees, dtSeed)
 
   /** Always runs (the loops call it from `finally`): frees the state caches
     * and checkpoint files, the binned tables, the instance cache and the
@@ -211,16 +218,35 @@ private[graft] object NativeTreeBoost {
     * and `RDD.sum` fold partition results in task-completion order, which
     * perturbs float sums by ulps from run to run — enough to flip a split
     * choice or send a line search down another path. One job, like the
-    * `treeAggregate` it replaces. Each task gets its own copy of `zero`,
+    * `treeAggregate` it replaces, through [[GraftTreeShim.runPartitions]]:
+    * Spark cleans one small closure where `collect` has it parse `RDD`'s
+    * and `SparkContext`'s bytecode. Each task gets its own copy of `zero`,
     * and the driver folds into `zero` itself, so a mutable accumulator may
     * be updated in place.
     */
   def orderedAggregate[T, U: ClassTag](rdd: RDD[T], zero: U)(
       seqOp: (U, T) => U,
       combOp: (U, U) => U): U =
-    rdd.mapPartitions(it => Iterator.single(it.foldLeft(zero)(seqOp)))
-      .collect()
-      .foldLeft(zero)(combOp)
+    GraftTreeShim.runPartitions(rdd)(_.foldLeft(zero)(seqOp)).foldLeft(zero)(combOp)
 
   def orderedSum(rdd: RDD[Double]): Double = orderedAggregate(rdd, 0.0)(_ + _, _ + _)
+
+  /** `a` and `b` row by row, as `RDD.zip` pairs them: the same partitions
+    * (which must be as many on both sides), and a partition whose two
+    * sides differ in length fails with `RDD.zip`'s exception. `RDD.zip`'s
+    * own closure lives in `RDD`, whose bytecode Spark re-parses at every
+    * call; this one lives in this small object.
+    */
+  def zip[A, B: ClassTag](a: RDD[A], b: RDD[B]): RDD[(A, B)] =
+    a.zipPartitions(b) { (ia, ib) =>
+      new Iterator[(A, B)] {
+        def hasNext: Boolean = (ia.hasNext, ib.hasNext) match {
+          case (true, true) => true
+          case (false, false) => false
+          case _ => throw SparkCoreErrors.canOnlyZipRDDsWithSamePartitionSizeError()
+        }
+        def next(): (A, B) = (ia.next(), ib.next())
+      }
+    }
+
 }

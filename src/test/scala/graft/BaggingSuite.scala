@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.ml.classification.{
   DecisionTreeClassificationModel, DecisionTreeClassifier, RandomForestClassifier
 }
+import org.apache.spark.ml.attribute.{Attribute, AttributeGroup, NominalAttribute, NumericAttribute}
 import org.apache.spark.ml.graft._
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.regression.{
@@ -33,6 +34,51 @@ class BaggingSuite extends SparkSpec {
       val label = if (x(0) + x(1) > 10) 1.0 else 0.0
       (label, Vectors.dense(x))
     }.toDF("label", "features")
+  }
+
+  /** `df` with the features in `arity` marked categorical, of those arities. */
+  private def categorical(df: DataFrame, arity: Map[Int, Int]): DataFrame = {
+    val n = df.select("features").head().getAs[Vector](0).size
+    val attrs = Array.tabulate[Attribute](n) { i =>
+      arity.get(i).fold[Attribute](NumericAttribute.defaultAttr.withIndex(i))(
+        k => NominalAttribute.defaultAttr.withIndex(i).withNumValues(k))
+    }
+    df.withColumn("features",
+      col("features").as("features", new AttributeGroup("features", attrs).toMetadata()))
+  }
+
+  /** Regression on three uniform features and a category of six values
+    * (feature 3), which a regression tree orders by mean label.
+    */
+  private lazy val catRegDf: DataFrame = {
+    val s = spark
+    import s.implicits._
+    val rng = new scala.util.Random(17)
+    val effect = Array(3.0, -4.0, 0.0, 8.0, -1.0, 5.0)
+    categorical((0 until 500).map { _ =>
+      val (x, c) = (Array.fill(3)(rng.nextDouble() * 10), rng.nextInt(6))
+      (2 * x(0) - x(1) + effect(c), Vectors.dense(x :+ c.toDouble))
+    }.toDF("label", "features"), Map(3 -> 6))
+  }
+
+  /** Three classes from a category of three values (feature 0), which a
+    * multiclass tree splits by subsets, and one threshold per category;
+    * category 1 is all class 2. A `noise` share of labels is redrawn.
+    */
+  private def catClsDf(noise: Double): DataFrame = {
+    val s = spark
+    import s.implicits._
+    val rng = new scala.util.Random(13)
+    categorical((0 until 600).map { _ =>
+      val (c, x) = (rng.nextInt(3), Array.fill(3)(rng.nextDouble() * 10))
+      val y = c match {
+        case 0 => if (x(0) > 5) 0.0 else 1.0
+        case 1 => 2.0
+        case _ => if (x(1) > 3) 1.0 else 2.0
+      }
+      (if (rng.nextDouble() < noise) rng.nextInt(3).toDouble else y,
+        Vectors.dense(c.toDouble +: x))
+    }.toDF("label", "features"), Map(0 -> 3))
   }
 
   test("BaggingRegressor fits and beats the trivial constant baseline") {
@@ -138,6 +184,50 @@ class BaggingSuite extends SparkSpec {
       .setSeed(42)
       .fit(clsDf)
     assert(bag.models.map(tree).toSeq === rf.trees.map(tree).toSeq)
+
+    // the other paths of a level step: both sides on the same tree settings
+    case class Grow(numTrees: Int, depth: Int, minInstances: Int = 1, minInfoGain: Double = 0.0,
+        maxBins: Int = 32, maxMemoryInMB: Int = 256)
+    def regression(df: DataFrame, g: Grow): (Seq[String], Seq[String]) = {
+      val bag = new BaggingRegressor()
+        .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(g.depth)
+          .setMinInstancesPerNode(g.minInstances).setMinInfoGain(g.minInfoGain)
+          .setMaxBins(g.maxBins).setMaxMemoryInMB(g.maxMemoryInMB).setSeed(42))
+        .setNumBaseLearners(g.numTrees).setSubsampleRatio(0.8).setSeed(42)
+        .fit(df)
+      val rf = new RandomForestRegressor().setNumTrees(g.numTrees).setMaxDepth(g.depth)
+        .setMinInstancesPerNode(g.minInstances).setMinInfoGain(g.minInfoGain)
+        .setMaxBins(g.maxBins).setMaxMemoryInMB(g.maxMemoryInMB)
+        .setFeatureSubsetStrategy("all").setSubsamplingRate(0.8).setBootstrap(true).setSeed(42)
+        .fit(df)
+      (bag.models.map(tree).toSeq, rf.trees.map(tree).toSeq)
+    }
+    def classification(df: DataFrame, g: Grow): (Seq[String], Seq[String]) = {
+      val bag = new BaggingClassifier()
+        .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(g.depth)
+          .setMinInstancesPerNode(g.minInstances).setMinInfoGain(g.minInfoGain)
+          .setMaxBins(g.maxBins).setMaxMemoryInMB(g.maxMemoryInMB).setSeed(42))
+        .setNumBaseLearners(g.numTrees).setSubsampleRatio(0.8).setSeed(42)
+        .fit(df)
+      val rf = new RandomForestClassifier().setNumTrees(g.numTrees).setMaxDepth(g.depth)
+        .setMinInstancesPerNode(g.minInstances).setMinInfoGain(g.minInfoGain)
+        .setMaxBins(g.maxBins).setMaxMemoryInMB(g.maxMemoryInMB)
+        .setFeatureSubsetStrategy("all").setSubsamplingRate(0.8).setBootstrap(true).setSeed(42)
+        .fit(df)
+      (bag.models.map(tree).toSeq, rf.trees.map(tree).toSeq)
+    }
+    Seq(
+      // an unordered feature: subset splits of a low-arity multiclass category
+      "unordered categorical" -> classification(catClsDf(0.1), Grow(5, 5)),
+      "ordered categorical" -> regression(catRegDf, Grow(5, 5)),
+      "minInstancesPerNode and minInfoGain stops" ->
+        regression(regDf, Grow(5, 6, minInstances = 30, minInfoGain = 0.5)),
+      "children pure before maxDepth" -> classification(catClsDf(0.0), Grow(5, 6)),
+      // a 4 x 128-bin node needs 12 KB, so a level of 30 trees is split
+      // into several groups of nodes (jobs) under 1 MB
+      "several node groups per level" ->
+        regression(regDf, Grow(30, 6, maxBins = 128, maxMemoryInMB = 1))
+    ).foreach { case (clue, (bagTrees, rfTrees)) => assert(bagTrees === rfTrees, clue) }
   }
 
   test("BaggingRegressor subspaceRatio < 1 slices features per learner") {

@@ -651,4 +651,20 @@ class GBMSuite extends graft.SparkSpec {
     val cb = cl.transform(clsDf).select("prediction").collect().map(_.getDouble(0))
     assert(ca.toSeq === cb.toSeq)
   }
+
+  test("NativeTreeBoost.zip pairs rows as RDD.zip does, and fails where it fails") {
+    val sc = spark.sparkContext
+    val (a, b) = (sc.parallelize(1 to 10, 3), sc.parallelize(11 to 20, 3).map(_.toString))
+    assert(NativeTreeBoost.zip(a, b).glom().collect().map(_.toSeq).toSeq ===
+      a.zip(b).glom().collect().map(_.toSeq).toSeq)
+    // ten rows both sides, but split 3/3/4 against 4/3/3
+    val uneven =
+      sc.parallelize(Seq(Seq(1, 2, 3, 4), Seq(5, 6, 7), Seq(8, 9, 10)), 3).flatMap(identity)
+    val expected = org.apache.spark.errors.SparkCoreErrors
+      .canOnlyZipRDDsWithSamePartitionSizeError().getMessage
+    for (zipped <- Seq(a.zip(uneven), NativeTreeBoost.zip(a, uneven))) {
+      val e = intercept[org.apache.spark.SparkException](zipped.count())
+      assert(e.getMessage.contains(expected), e.getMessage)
+    }
+  }
 }

@@ -144,15 +144,23 @@ class InstrumentationSuite extends SparkSpec {
     }
   }
 
-  /** The call site of every job started while `body` runs: the name of
-    * the job's result stage, the last of its stages.
+  /** A job started while `body` runs: its call site (the name of its
+    * result stage, the last of its stages), the call stack behind that
+    * site, and its stage count.
     */
-  private def jobCallSites(body: => Unit): Seq[String] = {
+  private case class Job(site: String, stack: String, stages: Int) {
+    // the bin-once trees' level step, whichever helper runs its job
+    def isTreeLevel: Boolean = stack.contains("GraftTreeShim$.splitGroup")
+  }
+
+  private def jobs(body: => Unit): Seq[Job] = {
     val sc = spark.sparkContext
-    val sites = ArrayBuffer.empty[String]
+    val started = ArrayBuffer.empty[Job]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        sites.synchronized { sites += e.stageInfos.maxBy(_.stageId).name }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val result = e.stageInfos.maxBy(_.stageId)
+        started.synchronized { started += Job(result.name, result.details, e.stageInfos.length) }
+      }
     }
     sc.listenerBus.waitUntilEmpty()
     sc.addSparkListener(listener)
@@ -160,16 +168,21 @@ class InstrumentationSuite extends SparkSpec {
       body
       sc.listenerBus.waitUntilEmpty()
     } finally sc.removeSparkListener(listener)
-    sites.synchronized(sites.toSeq)
+    started.synchronized(started.toSeq)
   }
 
   test("a binned boosting round runs no job beyond its tree levels and aggregates") {
-    // one extra round's jobs, less the RandomForest level jobs: the round
-    // state is set without a job, and the next job that reads it
-    // materializes it
+    // one extra round's jobs, less the tree level jobs: the round state is
+    // set without a job, and the next job that reads it materializes it.
+    // Every level job is two stages: the per-node histogram merge is a
+    // shuffle on the executors, and only the chosen splits are collected.
     def roundJobs(fit: Int => Unit): (Int, Seq[String], Seq[String]) = {
-      def outside(rounds: Int) =
-        jobCallSites(fit(rounds)).filterNot(_.contains("RandomForest.scala"))
+      def outside(rounds: Int) = {
+        val (levels, other) = jobs(fit(rounds)).partition(_.isTreeLevel)
+        assert(levels.nonEmpty, s"no tree level job among $other")
+        assert(levels.forall(_.stages == 2), s"level jobs: ${levels.map(_.stages)}")
+        other.map(_.site)
+      }
       val (two, three) = (outside(2), outside(3))
       (three.length - two.length, two, three)
     }
