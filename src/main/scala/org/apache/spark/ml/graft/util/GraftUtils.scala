@@ -2,7 +2,7 @@ package org.apache.spark.ml.graft.util
 
 import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector, Vectors}
-import org.apache.spark.sql.types.StructField
+import org.apache.spark.ml.util.MetadataUtils
 import org.apache.spark.util.random.XORShiftRandom
 
 /** Small numeric / vector helpers shared by every meta-estimator.
@@ -70,11 +70,12 @@ private[graft] object GraftUtils {
   def featuresMetadata(numFeatures: Int, featuresCol: String): org.apache.spark.sql.types.Metadata =
     new AttributeGroup(featuresCol, numFeatures).toMetadata()
 
-  /** numFeatures from column metadata when present, else from one row. */
-  def numFeatures(dataset: org.apache.spark.sql.Dataset[_], featuresCol: String): Int = {
-    val field: StructField = dataset.schema(featuresCol)
-    AttributeGroup.fromStructField(field).numAttributes.getOrElse {
+  /** numFeatures from column metadata when present (the group's size, which
+    * a group that lists its attributes, as `VectorAssembler`'s output does,
+    * carries without `numAttributes`), else from one row.
+    */
+  def numFeatures(dataset: org.apache.spark.sql.Dataset[_], featuresCol: String): Int =
+    MetadataUtils.getNumFeatures(dataset.schema(featuresCol)).getOrElse {
       dataset.select(featuresCol).head().getAs[Vector](0).size
     }
-  }
 }

@@ -25,6 +25,19 @@ class BaggingSuite extends SparkSpec {
     }.toDF("label", "features")
   }
 
+  /** `regDf`'s relation on 20,000 rows: 30 trees on it are 2.4M rows x
+    * features x trees, above the one-task bound of the bin-once induction.
+    */
+  private lazy val bigRegDf: DataFrame = {
+    val s = spark
+    import s.implicits._
+    val rng = new scala.util.Random(19)
+    (0 until 20000).map { _ =>
+      val x = Array.fill(4)(rng.nextDouble() * 10)
+      (2 * x(0) - x(1) + 0.5 * x(2), Vectors.dense(x))
+    }.toDF("label", "features")
+  }
+
   private lazy val clsDf: DataFrame = {
     val s = spark
     import s.implicits._
@@ -224,9 +237,12 @@ class BaggingSuite extends SparkSpec {
         regression(regDf, Grow(5, 6, minInstances = 30, minInfoGain = 0.5)),
       "children pure before maxDepth" -> classification(catClsDf(0.0), Grow(5, 6)),
       // a 4 x 128-bin node needs 12 KB, so a level of 30 trees is split
-      // into several groups of nodes (jobs) under 1 MB
+      // into several groups of nodes under 1 MB (in the one task here)
       "several node groups per level" ->
-        regression(regDf, Grow(30, 6, maxBins = 128, maxMemoryInMB = 1))
+        regression(regDf, Grow(30, 6, maxBins = 128, maxMemoryInMB = 1)),
+      // above the one-task bound: one job per node group
+      "several node groups per level, one job each" ->
+        regression(bigRegDf, Grow(30, 6, maxBins = 128, maxMemoryInMB = 1))
     ).foreach { case (clue, (bagTrees, rfTrees)) => assert(bagTrees === rfTrees, clue) }
   }
 

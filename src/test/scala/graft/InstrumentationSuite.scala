@@ -7,8 +7,11 @@ import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.LoggerConfig
 import org.apache.spark.ml.classification.DecisionTreeClassifier
+import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.ml.graft.util.GraftUtils
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.regression.DecisionTreeRegressor
+import org.apache.spark.ml.tree.impl.GraftTreeShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -144,13 +147,26 @@ class InstrumentationSuite extends SparkSpec {
     }
   }
 
+  /** A wide regression input: 2,500 rows x 1,000 features, whose trees
+    * grow one two-stage job per node group.
+    */
+  private lazy val wideDf: DataFrame = {
+    val s = spark
+    import s.implicits._
+    val rng = new scala.util.Random(8)
+    (0 until 2500).map { _ =>
+      val x = Array.fill(1000)(rng.nextDouble())
+      (x(0) + x(1) + rng.nextGaussian() * 0.1, Vectors.dense(x))
+    }.toDF("label", "features")
+  }
+
   /** A job started while `body` runs: its call site (the name of its
     * result stage, the last of its stages), the call stack behind that
-    * site, and its stage count.
+    * site, its stage count and its result stage's task count.
     */
-  private case class Job(site: String, stack: String, stages: Int) {
-    // the bin-once trees' level step, whichever helper runs its job
-    def isTreeLevel: Boolean = stack.contains("GraftTreeShim$.splitGroup")
+  private case class Job(site: String, stack: String, stages: Int, tasks: Int) {
+    // a bin-once induction's job, on either of its paths
+    def isTree: Boolean = stack.contains("GraftTreeShim$.grow(")
   }
 
   private def jobs(body: => Unit): Seq[Job] = {
@@ -159,7 +175,9 @@ class InstrumentationSuite extends SparkSpec {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val result = e.stageInfos.maxBy(_.stageId)
-        started.synchronized { started += Job(result.name, result.details, e.stageInfos.length) }
+        started.synchronized {
+          started += Job(result.name, result.details, e.stageInfos.length, result.numTasks)
+        }
       }
     }
     sc.listenerBus.waitUntilEmpty()
@@ -172,36 +190,61 @@ class InstrumentationSuite extends SparkSpec {
   }
 
   test("a binned boosting round runs no job beyond its tree levels and aggregates") {
-    // one extra round's jobs, less the tree level jobs: the round state is
-    // set without a job, and the next job that reads it materializes it.
-    // Every level job is two stages: the per-node histogram merge is a
-    // shuffle on the executors, and only the chosen splits are collected.
-    def roundJobs(fit: Int => Unit): (Int, Seq[String], Seq[String]) = {
+    // the inputs sit on both sides of the one-task bound
+    assert(200L * 3 <= GraftTreeShim.OneTaskCells)
+    assert(2500L * 1000 > GraftTreeShim.OneTaskCells)
+    // one extra round's jobs, less the tree jobs: the round state is set
+    // without a job, and the next job that reads it materializes it. A
+    // small input's round grows its tree in one job of one stage and one
+    // task; a large input's in one job per level, each of two stages (the
+    // per-node histogram merge is a shuffle on the executors, and only
+    // the chosen splits are collected).
+    def roundJobs(fit: Int => Unit, oneTask: Boolean): (Int, Seq[String], Seq[String]) = {
       def outside(rounds: Int) = {
-        val (levels, other) = jobs(fit(rounds)).partition(_.isTreeLevel)
-        assert(levels.nonEmpty, s"no tree level job among $other")
-        assert(levels.forall(_.stages == 2), s"level jobs: ${levels.map(_.stages)}")
+        val (trees, other) = jobs(fit(rounds)).partition(_.isTree)
+        val shapes = trees.map(j => (j.stages, j.tasks))
+        if (oneTask) {
+          assert(trees.length === rounds, s"one tree job per round: $shapes among $other")
+          assert(shapes.forall(_ == ((1, 1))), s"tree jobs (stages, tasks): $shapes")
+        } else {
+          assert(trees.length > rounds, s"level jobs: $shapes among $other")
+          assert(shapes.forall(_._1 == 2), s"level jobs (stages, tasks): $shapes")
+        }
         other.map(_.site)
       }
       val (two, three) = (outside(2), outside(3))
       (three.length - two.length, two, three)
     }
-    val (gbm, gbm2, gbm3) = roundJobs { n =>
+    def gbm(data: DataFrame)(n: Int): Unit =
       new GBMRegressor()
         .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2).setSeed(1))
         .setMaxIter(n)
         .setSeed(1)
-        .fit(df)
+        .fit(data)
+    for ((data, oneTask) <- Seq(df -> true, wideDf -> false)) {
+      val (rounds, gbm2, gbm3) = roundJobs(gbm(data), oneTask)
+      assert(rounds === 1, s"GBM squared loss (one task: $oneTask): the step pass only; " +
+        s"2 rounds $gbm2, 3 rounds $gbm3")
     }
-    assert(gbm === 1, s"GBM squared loss: the step pass only; 2 rounds $gbm2, 3 rounds $gbm3")
-    val (samme, samme2, samme3) = roundJobs { n =>
+    val (samme, samme2, samme3) = roundJobs(n =>
       new BoostingClassifier()
         .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(1).setSeed(1))
         .setAlgorithm("real")
         .setNumBaseLearners(n)
-        .fit(clsDf)
-    }
+        .fit(clsDf), oneTask = true)
     assert(samme === 2,
       s"SAMME.R: the weight sum and the weighted error; 2 rounds $samme2, 3 rounds $samme3")
+  }
+
+  test("a VectorAssembler-built features column gives its width with no Spark job") {
+    // not a local relation, whose first row Spark reads without a job
+    val assembled = new VectorAssembler()
+      .setInputCols(Array("a", "b", "c"))
+      .setOutputCol("features")
+      .transform(spark.range(2).select(Seq("a", "b", "c").map(col("id").cast("double").as(_)): _*))
+    var width = 0
+    val started = jobs { width = GraftUtils.numFeatures(assembled, "features") }
+    assert(width === 3)
+    assert(started.isEmpty, s"jobs: ${started.map(_.site)}")
   }
 }
