@@ -4,6 +4,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.ml.PredictorParams
+import org.apache.spark.ml.feature.Instance
 import org.apache.spark.ml.graft.util.GraftUtils
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.param.ParamMap
@@ -56,14 +57,19 @@ private[graft] object SubBagFit {
     val (replacement, ratio, subspaceRatio) =
       (est.getReplacement, est.getSubsampleRatio, est.getSubspaceRatio)
     val native =
-      if (subspaceRatio >= 1.0) NativeTreeBoost(learner, instances, numClasses, numTrees = k)
-      else None
+      NativeTreeBoost(learner, instances.schema("features"), numClasses, numTrees = k)
+        .filter(_ => subspaceRatio >= 1.0)
     native match {
-      case Some(boost) =>
-        try boost.fitTrees(boost.treePoints, ratio, replacement, seed).map { tree =>
-          val model = tree.asInstanceOf[EnsemblePredictionModelType]
-          (Array.range(0, model.numFeatures), model)
-        } finally boost.close()
+      case Some(induction) =>
+        val (rows, handle) = NativeTreeBoost.cacheBlocks(instances.rdd.map(r =>
+          Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2))))
+        try {
+          val boost = induction(rows)
+          try boost.fitTrees(boost.bin(rows), ratio, replacement, seed).map { tree =>
+            val model = tree.asInstanceOf[EnsemblePredictionModelType]
+            (Array.range(0, model.numFeatures), model)
+          } finally boost.bcSplits.destroy()
+        } finally handle.unpersist(blocking = false)
       case None =>
         val handlePersist = dataset.storageLevel == StorageLevel.NONE
         if (handlePersist) instances.persist(StorageLevel.MEMORY_AND_DISK)

@@ -67,11 +67,9 @@ class BoostingClassifier(override val uid: String)
     }
     val instances = SubBagFit.instances(this, dataset)
     val mispredicted = (p: Double, y: Double) => if (p != y) 1.0 else 0.0
-    val learner: AdaBoostLearner =
-      NativeTreeBoost($(baseLearner), instances, numClasses, sumOneWeights = true)
-        .map(new BinnedAdaBoost(_, $(checkpointInterval), mispredicted))
-        .getOrElse(new PredictorAdaBoost(
-          instances, $(baseLearner), $(checkpointInterval), mispredicted, withProbability = real))
+    val learner = new AdaBoostLearner(
+      BoostBackend($(baseLearner), instances, numClasses, sumOneWeights = true),
+      $(checkpointInterval), mispredicted)
     val models = ArrayBuffer.empty[EnsemblePredictionModelType]
     val modelWeights = ArrayBuffer.empty[Double]
     def keep(model: EnsemblePredictionModelType, weight: Double): Unit = {

@@ -10,80 +10,8 @@ import org.apache.spark.ml.param.shared.{HasCheckpointInterval, HasWeightCol}
 import org.apache.spark.ml.regression.{RegressionModel, Regressor}
 import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Dataset
-import org.apache.spark.storage.StorageLevel
 import org.json4s.JsonDSL._
-
-/** Iteration-state cache manager: persists the per-iteration weighted
-  * dataset, eagerly materializes it, drops the previous one, and truncates
-  * lineage every `checkpointInterval` iterations via a checkpoint —
-  * without it an N-iteration boosting loop carries O(N) plan depth
-  * (reference uses PeriodicRDDCheckpointer: regression/BoostingRegressor
-  * .scala:202-206).
-  *
-  * Checkpoint mode follows the session: when
-  * `SparkContext.setCheckpointDir` is set, iterations checkpoint RELIABLY
-  * to that directory (data survives executor loss — at 1000 executors
-  * with dynamic allocation, localCheckpoint's cached-blocks-only contract
-  * is a real failure mode), keeping the latest two checkpoints and
-  * deleting older files exactly like the reference's
-  * PeriodicRDDCheckpointer. Without a checkpoint dir it falls back to
-  * localCheckpoint (single-JVM / test mode).
-  */
-private[graft] class IterLoopCache(checkpointInterval: Int) {
-  private var prev: DataFrame = _
-  private var iter = 0
-  private val checkpointFiles = scala.collection.mutable.Queue.empty[String]
-
-  private def release(df: DataFrame): Unit = {
-    // Dataset.unpersist is a no-op on localCheckpoint blocks (they bypass
-    // the CacheManager) — free the underlying RDD cache explicitly or each
-    // checkpointed iteration's full dataset lingers in executor storage.
-    // Safe here: the successor iteration is already materialized, so the
-    // freed lineage is never re-entered (reliable checkpoint files are
-    // managed separately and outlive the cached blocks).
-    df.unpersist()
-    org.apache.spark.sql.graft.DatasetUtils.freeCheckpointBlocks(df)
-  }
-
-  def next(df: DataFrame): DataFrame = {
-    iter += 1
-    val out =
-      if (checkpointInterval > 0 && iter % checkpointInterval == 0) {
-        if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-          val cp = df.checkpoint(eager = true)
-          org.apache.spark.sql.graft.DatasetUtils.checkpointFile(cp)
-            .foreach(checkpointFiles.enqueue(_))
-          // keep the newest checkpoint plus its predecessor (persisted
-          // successor blocks may still recompute through it on loss) —
-          // the PeriodicRDDCheckpointer retention policy
-          while (checkpointFiles.size > 2) {
-            org.apache.spark.sql.graft.DatasetUtils
-              .deleteCheckpointFile(checkpointFiles.dequeue(), cp)
-          }
-          cp
-        } else df.localCheckpoint(true)
-      } else { df.persist(StorageLevel.MEMORY_AND_DISK); df.count(); df }
-    if (prev != null) release(prev)
-    prev = out
-    out
-  }
-
-  /** Callers collect every per-iteration result before closing, so both
-    * the cached blocks and any remaining reliable checkpoint files are
-    * dead weight by now — free them all.
-    */
-  def close(): Unit = if (prev != null) {
-    val last = prev
-    release(prev)
-    prev = null
-    while (checkpointFiles.nonEmpty) {
-      org.apache.spark.sql.graft.DatasetUtils
-        .deleteCheckpointFile(checkpointFiles.dequeue(), last)
-    }
-  }
-}
 
 private[graft] trait BoostingRegressorParams
     extends PredictorParams
@@ -138,11 +66,9 @@ class BoostingRegressor(override val uid: String)
   private def trainImpl(dataset: Dataset[_], instr: Instrumentation): BoostingRegressionModel = {
     val instances = SubBagFit.instances(this, dataset)
     val absError = (p: Double, y: Double) => math.abs(p - y)
-    val learner: AdaBoostLearner =
-      NativeTreeBoost($(baseLearner), instances, numClasses = 0, sumOneWeights = true)
-        .map(new BinnedAdaBoost(_, $(checkpointInterval), absError))
-        .getOrElse(new PredictorAdaBoost(
-          instances, $(baseLearner), $(checkpointInterval), absError, withProbability = false))
+    val learner = new AdaBoostLearner(
+      BoostBackend($(baseLearner), instances, numClasses = 0, sumOneWeights = true),
+      $(checkpointInterval), absError)
     val models = ArrayBuffer.empty[EnsemblePredictionModelType]
     val modelWeights = ArrayBuffer.empty[Double]
     def keep(model: EnsemblePredictionModelType, weight: Double): Unit = {

@@ -1,8 +1,7 @@
 package org.apache.spark.ml.graft
 
 import scala.collection.mutable.ArrayBuffer
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import scala.concurrent.ExecutionContext
 
 import breeze.linalg.{DenseVector => BDV}
 import breeze.optimize.{DiffFunction, LBFGSB}
@@ -17,13 +16,10 @@ import org.apache.spark.ml.graft.util.GraftUtils
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.param.shared.{HasCheckpointInterval, HasMaxIter, HasWeightCol}
-import org.apache.spark.ml.regression.DecisionTreeRegressionModel
-import org.apache.spark.ml.tree.impl.{BaggedPoint, TreePoint}
 import org.apache.spark.ml.util.Instrumentation
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Params shared by GBMRegressor / GBMClassifier (reference:
   * boosting/GBMParams.scala:29-131), and the one training loop and step
@@ -113,20 +109,19 @@ private[graft] trait GBMParams
       instances: DataFrame,
       nf: Int,
       loss: GBMLoss,
-      roundLoss: GBMLearner => GBMLoss,
+      roundLoss: GBMLearner[_] => GBMLoss,
       initScore: Vector => Array[Double],
       hessFloor: Double,
       ec: ExecutionContext,
       logStep: Array[Double] => Unit,
       instr: Instrumentation)
       : ArrayBuffer[(Array[EnsemblePredictionModelType], Array[Double], Array[Int])] = {
-    val binned =
-      if ($(subspaceRatio) >= 1.0 && $(updates) == "gradient")
-        NativeTreeBoost($(baseLearner), instances, numClasses = 0, hasVal = hasValidation)
-      else None
-    val learner: GBMLearner = binned
-      .map(new BinnedGBM(this, _, instances, loss, initScore, hasValidation, ec))
-      .getOrElse(new PredictorGBM(this, instances, loss, initScore, hessFloor, nf, ec))
+    val learner = new GBMLearner(
+      this,
+      BoostBackend(
+        $(baseLearner), instances, numClasses = 0,
+        binnable = $(subspaceRatio) >= 1.0 && $(updates) == "gradient", hasVal = hasValidation),
+      loss, initScore, hessFloor, nf, ec)
     val rounds =
       ArrayBuffer.empty[(Array[EnsemblePredictionModelType], Array[Double], Array[Int])]
     val stop = new ValidationStop($(numRounds), $(validationTol))
@@ -467,279 +462,89 @@ private[graft] object NewtonStep {
   }
 }
 
-/** The learner side of one GBM round over (encoded label, f) rows, f being
-  * the running score vector of `dim` components: `fit` fits one base
-  * regressor per model dimension to that component of the negative
-  * gradient at f (rows sampled once with `sampleSeed` for all dimensions,
-  * features restricted to `indices`) and leaves (yenc, f, direction,
-  * weight) per training row in `directions` for the step search;
-  * `advance` moves every row (train and validation) to f + w o direction.
-  * `close` always runs.
+/** The learner side of one GBM round, written once over either
+  * [[BoostBackend]]: each row (train and validation) carries its running
+  * score vector f of `dim` components in the backend's [[State]]. `fit`
+  * fits one base regressor per model dimension to that component of the
+  * negative gradient at f (rows sampled once with `sampleSeed` for all
+  * dimensions, features restricted to `indices`) and caches each row's
+  * direction; `directions` gives (yenc, f, direction, weight) per
+  * training row for the step search, and `advance` moves every row to
+  * f + w o direction, lazily: the next job that reads the state computes
+  * it. The reductions are partition-ordered. `close` always runs.
   */
-private[graft] trait GBMLearner {
-  /** |label - f| over the training rows at dim 1, as column `__absr`. */
-  def absResiduals: DataFrame
-  def fit(loss: GBMLoss, indices: Array[Int], sampleSeed: Long): Array[EnsemblePredictionModelType]
-  def directions: RDD[(Array[Double], Array[Double], Array[Double], Double)]
-  def advance(w: Array[Double]): Unit
-  /** Weighted mean loss over the validation rows; None without any. */
-  def validationLoss(loss: GBMLoss): Option[Double]
-  def close(): Unit
-}
-
-/** Any spark.ml regressor as the learner: every round re-enters its own
-  * `fit`. Model state (score vector f, encoded label) lives in array
-  * columns carried through [[IterLoopCache]] — no RDD.zip (SURVEY.md §7.0
-  * decision 3). The per-dimension fits share one sampled frame and run
-  * on `ec`, or as one fused job where the learner allows it.
-  */
-private[graft] final class PredictorGBM(
+private[graft] final class GBMLearner[R](
     est: GBMParams,
-    instances: DataFrame,
+    backend: BoostBackend[R],
     loss: GBMLoss,
     initScore: Vector => Array[Double],
     hessFloor: Double,
     nf: Int,
-    ec: ExecutionContext) extends GBMLearner {
-  private val dim = loss.dim
-  private val loop = new IterLoopCache(est.getCheckpointInterval)
-  private var df = {
-    // local copies keep this learner out of the UDF closures
-    val (lossB, f0) = (loss, initScore)
-    loop.next(
-      instances
-        .withColumn("__yenc", udf { (y: Double) => lossB.encodeLabel(y) }.apply(col("label")))
-        .withColumn("__f", udf { (x: Vector) => f0(x) }.apply(col("features")))
-        .select("label", "weight", "features", "__val", "__yenc", "__f"))
+    ec: ExecutionContext) {
+  // closures take local copies: a field referenced from a task closure
+  // would pull this learner (and its backend) into the task
+  private val state = {
+    val f0 = initScore
+    backend.start(i => f0(i.features), est.getCheckpointInterval)
   }
-  private var withDir: DataFrame = _
-  private var dirBlocks: RDD[_] = _
+  // (row, validation flag, f, direction) per row; the next f is derived
+  // from them
+  private var data: RDD[(R, Boolean, Array[Double], Array[Double])] = _
 
-  def absResiduals: DataFrame =
-    df.filter(!col("__val")).select(abs(col("label") - element_at(col("__f"), 1)).as("__absr"))
+  /** |label - f| over the training rows at dim 1, as column `__absr`. */
+  def absResiduals: DataFrame = {
+    val label = backend.label
+    backend.spark.createDataset(state.rdd.filter(!_._2).map { case (r, _, f) =>
+      math.abs(label(r) - f(0))
+    })(Encoders.scalaDouble).toDF("__absr")
+  }
 
   def fit(
       loss: GBMLoss,
       indices: Array[Int],
       sampleSeed: Long): Array[EnsemblePredictionModelType] = {
     val newton = est.getUpdates == "newton" && loss.isInstanceOf[HasHessian]
-    val floor = hessFloor
-    val residUdf = udf { (yenc: Seq[Double], f: Seq[Double]) =>
-      loss.negativeGradient(yenc.toArray, f.toArray).toSeq
-    }
+    val (label, floor) = (backend.label, hessFloor)
     // the floor keeps -grad/hess bounded where the loss flattens (the
     // reference clamps at 1e-2, regression/GBMRegressor.scala:368-385)
-    val hessUdf = udf { (yenc: Seq[Double], f: Seq[Double]) =>
-      loss.asInstanceOf[HasHessian].hessian(yenc.toArray, f.toArray).map(math.max(_, floor)).toSeq
+    val gradients = state.rdd.filter(!_._2).map { case (r, _, f) =>
+      val yenc = loss.encodeLabel(label(r))
+      (r, loss.negativeGradient(yenc, f),
+        if (newton) loss.asInstanceOf[HasHessian].hessian(yenc, f).map(math.max(_, floor))
+        else null)
     }
-    val sampled = SubBagFit.sample(
-      df.filter(!col("__val")), est.getReplacement, est.getSubsampleRatio, sampleSeed)
-    def sliced(d: DataFrame): DataFrame = SubBagFit.sliceFeatures(d, indices, nf, "__sf")
-
-    var fitBase = sampled.withColumn("__r", residUdf(col("__yenc"), col("__f")))
-    if (newton) fitBase = fitBase.withColumn("__h", hessUdf(col("__yenc"), col("__f")))
-    fitBase = sliced(fitBase)
-    val featCol = if (indices.length == nf) "features" else "__sf"
-    // fused multi-target fit first: one job for all K dimensions when the
-    // base learner's fit is a single aggregation (K separate fit actions
-    // are K job floors on a small-partition input); the same
-    // per-dimension (label, weight) expressions feed both paths
-    val targets = IndexedSeq.tabulate(dim) { k =>
-      val rk = element_at(col("__r"), k + 1)
-      if (newton) {
-        val hk = element_at(col("__h"), k + 1)
-        (rk / hk, col("weight") * hk)
-      } else (rk, col("weight"))
-    }
-    val dimModels = Learners.fitMulti(est.getBaseLearner, fitBase, targets).getOrElse {
-      fitBase.persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val futures = Array.tabulate(dim) { k =>
-          Future {
-            Learners.fit(
-              est.getBaseLearner,
-              fitBase.withColumn("__rk", targets(k)._1).withColumn("__wk", targets(k)._2),
-              "__rk", featCol, Some("__wk"), weightRequired = newton)
-          }(ec)
-        }
-        // a failed fit rethrows its own exception (ThreadUtils.awaitResult
-        // would wrap it in a SparkException)
-        futures.map(Await.result(_, Duration.Inf))
-      } finally fitBase.unpersist()
-    }
-    // directions for all rows
-    var d = sliced(df)
-    var k = 0
-    while (k < dim) {
-      d = Learners.transformOn(dimModels(k), d, featCol, s"__d_$k")
-      k += 1
-    }
-    withDir = d.withColumn("__d", array(IndexedSeq.tabulate(dim)(k => col(s"__d_$k")): _*))
-    dimModels
+    val models = backend.fitGradients(
+      gradients, loss.dim, est, nf, indices, sampleSeed, newton, ec)
+    val predict = models.map(backend.predictor(_, indices))
+    data = backend.cacheRound(state.rdd.map { case (r, v, f) =>
+      (r, v, f, predict.map(_(r)))
+    })
+    models
   }
 
   def directions: RDD[(Array[Double], Array[Double], Array[Double], Double)] = {
-    val (rows, handle) = NativeTreeBoost.cacheBlocks(withDir.filter(!col("__val"))
-      .select(col("__yenc"), col("__f"), col("__d"), col("weight"))
-      .rdd.map(r => (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray,
-        r.getSeq[Double](2).toArray, r.getDouble(3))))
-    dirBlocks = handle
-    rows
+    val (label, weight, l) = (backend.label, backend.weight, loss)
+    data.filter(!_._2).map { case (r, _, f, d) => (l.encodeLabel(label(r)), f, d, weight(r)) }
   }
 
-  def advance(w: Array[Double]): Unit = {
-    if (dirBlocks != null) { dirBlocks.unpersist(); dirBlocks = null }
-    val updateUdf = udf { (f: Seq[Double], dir: Seq[Double], ww: Seq[Double]) =>
+  def advance(w: Array[Double]): Unit =
+    state.set(data.map { case (r, v, f, d) =>
       val out = new Array[Double](f.length)
       var j = 0
-      while (j < f.length) { out(j) = f(j) + ww(j) * dir(j); j += 1 }
-      out.toSeq
-    }
-    df = loop.next(
-      withDir
-        .withColumn("__f",
-          updateUdf(col("__f"), col("__d"), array(w.toIndexedSeq.map(lit(_)): _*)))
-        .select("label", "weight", "features", "__val", "__yenc", "__f"))
-  }
-
-  def validationLoss(loss: GBMLoss): Option[Double] = {
-    val lossUdf = udf { (yenc: Seq[Double], f: Seq[Double]) =>
-      loss.loss(yenc.toArray, f.toArray)
-    }
-    val agg = df.filter(col("__val"))
-      .agg(
-        sum(col("weight") * lossUdf(col("__yenc"), col("__f"))).as("l"),
-        sum("weight").as("w"))
-      .head()
-    if (agg.isNullAt(0)) None else Some(agg.getDouble(0) / agg.getDouble(1))
-  }
-
-  def close(): Unit = {
-    if (dirBlocks != null) dirBlocks.unpersist()
-    loop.close()
-  }
-}
-
-/** A Spark DecisionTreeRegressor as the learner over the bin-once
-  * [[NativeTreeBoost]] table, shared across all rounds and the K
-  * per-dimension fits — the `Predictor` learner re-pays the binning i*K
-  * times. Per round one narrow map computes the K-dim negative gradient,
-  * one BaggedPoint pass fixes the joint subsample for all dimensions, and
-  * each dimension's fit is a relabeling map + the core induction (on
-  * `ec`). Trees are identical to the `Predictor` learner's at
-  * subsampleRatio = 1 because candidate splits depend on feature values
-  * and the constant gradient-update weights only, never on the residual
-  * labels (pinned by GBMSuite). Directions and the score update predict on
-  * binned features (the tree's binned leaf lookup, exact for points binned
-  * with the fitted splits) — no per-row Vector boxing.
-  */
-private[graft] final class BinnedGBM(
-    est: GBMParams,
-    boost: NativeTreeBoost,
-    instances: DataFrame,
-    loss: GBMLoss,
-    initScore: Vector => Array[Double],
-    hasVal: Boolean,
-    ec: ExecutionContext) extends GBMLearner {
-  private val dim = loss.dim
-  // closures take local copies: a constructor parameter referenced from a
-  // task closure would pull this learner (and its DataFrames) into the task
-  private val (f, valF) = {
-    val (f0, interval) = (initScore, est.getCheckpointInterval)
-    (new boost.State(boost.train.map(inst => f0(inst.features)), interval),
-      if (hasVal) new boost.State(boost.valid.map(inst => f0(inst.features)), interval)
-      else null)
-  }
-  private var trees: Array[DecisionTreeRegressionModel] = _
-  // the round's (yenc, f, direction, weight) rows and their cache handle;
-  // the next f is derived from them, so they stay cached until the next
-  // round's first tree-level job has materialized it
-  private var data: RDD[(Array[Double], Array[Double], Array[Double], Double)] = _
-  private var dataBlocks: RDD[_] = _
-
-  def absResiduals: DataFrame = {
-    val absr = NativeTreeBoost.zip(boost.treePoints, f.rdd).map { case (tp, fr) =>
-      math.abs(tp.label - fr(0))
-    }
-    instances.sparkSession.createDataset(absr)(Encoders.scalaDouble).toDF("__absr")
-  }
-
-  def fit(
-      loss: GBMLoss,
-      indices: Array[Int],
-      sampleSeed: Long): Array[EnsemblePredictionModelType] = {
-    // K-dim negative gradient + joint subsample, computed ONCE for all
-    // dimensions (the `Predictor` learner samples once and shares its
-    // frame the same way — parity matters for the per-dimension fits
-    // seeing identical rows)
-    val resid: RDD[(TreePoint, Array[Double])] = NativeTreeBoost.zip(boost.treePoints, f.rdd).map {
-      case (tp, fr) => (tp, loss.negativeGradient(loss.encodeLabel(tp.label), fr))
-    }
-    val (bagged, baggedBlocks) = NativeTreeBoost.cacheBlocks(BaggedPoint.convertToBaggedRDD(
-      resid, est.getSubsampleRatio, 1, est.getReplacement,
-      (t: (TreePoint, Array[Double])) => t._1.weight, sampleSeed))
-    trees =
-      try {
-        val futures = Array.tabulate(dim) { k =>
-          Future {
-            boost.grow(bagged.map { bp =>
-              new BaggedPoint(
-                new TreePoint(bp.datum._2(k), bp.datum._1.binnedFeatures, bp.datum._1.weight),
-                bp.subsampleCounts, bp.sampleWeight)
-            }).head.asInstanceOf[DecisionTreeRegressionModel]
-          }(ec)
-        }
-        futures.map(Await.result(_, Duration.Inf))
-      } finally baggedBlocks.unpersist(blocking = false)
-    if (dataBlocks != null) dataBlocks.unpersist(blocking = false)
-    val (ts, splits) = (trees, boost.bcSplits)
-    val (rows, handle) = NativeTreeBoost.cacheBlocks(
-      NativeTreeBoost.zip(boost.treePoints, f.rdd).map { case (tp, fr) =>
-        val d = Array.tabulate(ts.length)(k =>
-          ts(k).rootNode.predictBinned(tp.binnedFeatures, splits.value).prediction)
-        (loss.encodeLabel(tp.label), fr, d, tp.weight)
-      })
-    data = rows
-    dataBlocks = handle
-    trees.map(_.asInstanceOf[EnsemblePredictionModelType])
-  }
-
-  def directions: RDD[(Array[Double], Array[Double], Array[Double], Double)] = data
-
-  def advance(w: Array[Double]): Unit = {
-    f.set(data.map { case (_, fr, d, _) =>
-      val out = new Array[Double](fr.length)
-      var j = 0
-      while (j < fr.length) { out(j) = fr(j) + w(j) * d(j); j += 1 }
-      out
+      while (j < f.length) { out(j) = f(j) + w(j) * d(j); j += 1 }
+      (r, v, out)
     })
-    if (hasVal) {
-      val (ts, splits) = (trees, boost.bcSplits)
-      valF.set(NativeTreeBoost.zip(boost.valPoints, valF.rdd).map { case (tp, fr) =>
-        val out = new Array[Double](fr.length)
-        var j = 0
-        while (j < fr.length) {
-          out(j) = fr(j) +
-            w(j) * ts(j).rootNode.predictBinned(tp.binnedFeatures, splits.value).prediction
-          j += 1
-        }
-        out
-      })
-    }
-  }
 
+  /** Weighted mean loss over the validation rows; None without any. */
   def validationLoss(loss: GBMLoss): Option[Double] = {
-    val (lsum, wsum) = NativeTreeBoost.orderedAggregate(
-        NativeTreeBoost.zip(boost.valPoints, valF.rdd), (0.0, 0.0))(
-      (acc, t) => (
-        acc._1 + t._1.weight * loss.loss(loss.encodeLabel(t._1.label), t._2),
-        acc._2 + t._1.weight),
+    val (label, weight) = (backend.label, backend.weight)
+    val (lsum, wsum) = NativeTreeBoost.orderedAggregate(state.rdd.filter(_._2), (0.0, 0.0))(
+      { case ((l, s), (r, _, f)) =>
+        (l + weight(r) * loss.loss(loss.encodeLabel(label(r)), f), s + weight(r))
+      },
       (a, b) => (a._1 + b._1, a._2 + b._2))
     if (wsum > 0) Some(lsum / wsum) else None
   }
 
-  def close(): Unit = {
-    if (dataBlocks != null) dataBlocks.unpersist(blocking = false)
-    boost.close()
-  }
+  def close(): Unit = backend.close()
 }

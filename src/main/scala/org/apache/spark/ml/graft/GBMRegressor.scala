@@ -108,7 +108,7 @@ class GBMRegressor(override val uid: String)
         Learners.fit($(baseLearner), trainOnly, "label", "features", Some("weight"))
     }
     // Huber delta refresh: alpha-quantile of the current absolute residuals
-    val roundLoss: GBMLearner => GBMLoss =
+    val roundLoss: GBMLearner[_] => GBMLoss =
       if ($(loss) != "huber") _ => lossObj(0.0)
       else learner => lossObj(math.max(
         learner.absResiduals.stat.approxQuantile("__absr", Array($(alpha)), 0.001).head, 1e-6))

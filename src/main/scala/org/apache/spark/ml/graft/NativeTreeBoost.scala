@@ -1,13 +1,11 @@
 package org.apache.spark.ml.graft
 
-import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.errors.SparkCoreErrors
 import org.apache.spark.ml.classification.DecisionTreeClassifier
 import org.apache.spark.ml.feature.Instance
-import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.regression.DecisionTreeRegressor
 import org.apache.spark.ml.tree.{DecisionTreeModel, DecisionTreeParams, Split}
 import org.apache.spark.ml.tree.impl.{BaggedPoint, DecisionTreeMetadata, GraftTreeShim, TreePoint}
@@ -15,19 +13,18 @@ import org.apache.spark.ml.util.MetadataUtils
 import org.apache.spark.mllib.tree.configuration.{Algo => OldAlgo, Strategy => OldStrategy}
 import org.apache.spark.mllib.tree.impurity.{Impurity => OldImpurity}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.rdd.util.PeriodicRDDCheckpointer
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructField
 import org.apache.spark.storage.StorageLevel
 
-/** Bin-once state of the DecisionTree learner backend that the GBM,
-  * AdaBoost and bagging fits share: metadata, candidate splits and the
-  * binned `TreePoint` table are built ONCE per fit (the native
+/** The bin-once DecisionTree backend's binning and induction, which the
+  * GBM, AdaBoost and bagging fits share: metadata, candidate splits and
+  * the binned `TreePoint`s are built ONCE per fit (the native
   * GBT/RandomForest trick), and each boosting round only relabels or
   * reweights the binned points and runs the core induction; bagging runs
-  * one induction of all its trees. The other backend re-enters the base
-  * learner's own `fit` every round (every bag) and so re-pays the binning
-  * each time.
+  * one induction of all its trees. The `Predictor` backend
+  * ([[PredictorRows]]) re-enters the base learner's own `fit` every round
+  * (every bag) and so re-pays the binning each time. The rows, their loop
+  * state and their caches belong to the caller ([[BinnedRows]], bagging).
   *
   * The induction is graft's level loop, [[GraftTreeShim.grow]], with the
   * node groups, histograms and node updates of Spark's
@@ -60,81 +57,47 @@ import org.apache.spark.storage.StorageLevel
   * exact current boost weights through the `TreePoint` weights.
   *
   * Weight scale (`sumOneWeights`, AdaBoost): the instance weights are
-  * normalized to SUM 1 before metadata/split building, because
-  * `DecisionTreeMetadata` bakes `minWeightPerNode =
+  * divided by their sum ([[weightScale]]) before metadata/split building,
+  * because `DecisionTreeMetadata` bakes `minWeightPerNode =
   * minWeightFractionPerNode * weightedNumExamples` at build time and every
   * AdaBoost round trains on weights re-normalized to sum 1 — the raw scale
   * would make the fraction threshold unsatisfiable. Split candidates are
   * weighted quantiles and therefore scale-invariant, and so are all AdaBoost
   * statistics. GBM keeps the raw weights its generic fit sees.
-  *
-  * Rows with `__val` set (GBM validation) are binned with the training
-  * splits into `valPoints` and never reach the induction.
   */
 private[graft] final class NativeTreeBoost private (
-    instances: DataFrame,
+    train: RDD[Instance],
     strategy: OldStrategy,
     val dtSeed: Long,
     numTrees: Int,
-    sumOneWeights: Boolean,
-    hasVal: Boolean) {
+    sumOneWeights: Boolean) {
 
-  private val sc = instances.sparkSession.sparkContext
-  private val blocks = ArrayBuffer.empty[RDD[_]]
-
-  private def cache[T: ClassTag](rdd: RDD[T]): RDD[T] = {
-    val (rows, handle) = NativeTreeBoost.cacheBlocks(rdd)
-    blocks += handle
-    rows
-  }
-
-  private val rows: RDD[(Instance, Boolean)] = cache(instances
-    .select(col("label"), col("weight"), col("features"), if (hasVal) col("__val") else lit(false))
-    .rdd
-    .map(r => (Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2)), r.getBoolean(3))))
-
-  /** Training instances on the scale the induction sees. */
-  val train: RDD[Instance] = {
-    val fit = rows.filter(!_._2).map(_._1)
-    if (!sumOneWeights) fit
-    else {
-      val tw = NativeTreeBoost.orderedSum(fit.map(_.weight))
-      require(tw > 0.0, s"boosting needs positive total instance weight, got $tw")
-      fit.map(i => Instance(i.label, i.weight / tw, i.features))
-    }
-  }
-  val valid: RDD[Instance] = rows.filter(_._2).map(_._1)
-
-  private val metadata = DecisionTreeMetadata.buildMetadata(train, strategy, numTrees, "all")
-  private val splits = GraftTreeShim.findSplits(train, metadata, dtSeed)
-  val bcSplits: Broadcast[Array[Array[Split]]] = sc.broadcast(splits)
-  val treePoints: RDD[TreePoint] = cache(TreePoint.convertToTreeRDD(train, splits, metadata))
-  val valPoints: RDD[TreePoint] =
-    if (hasVal) cache(TreePoint.convertToTreeRDD(valid, splits, metadata)) else null
-
-  private val checkpointers = ArrayBuffer.empty[PeriodicRDDCheckpointer[_]]
-
-  /** Per-row loop state (boost weights, running scores) aligned with the
-    * RDD it is derived from. Every value is cached as blocks and registered
-    * with its own checkpointer, which bounds the lineage. `set` runs no
-    * job: the next job that reads `rdd` materializes the value (and
-    * checkpoints it when due), so the caller keeps the new value's parents
-    * cached until that job has run. The checkpointer keeps the last three
-    * values cached, so the value before is one of them.
+  /** What the instance weights are divided by before binning: their sum
+    * under `sumOneWeights`, else 1 (which leaves every weight as it is).
     */
-  final class State[T: ClassTag](initial: RDD[T], checkpointInterval: Int) {
-    private val ck = new PeriodicRDDCheckpointer[Array[T]](checkpointInterval, sc)
-    checkpointers += ck
-    var rdd: RDD[T] = _
-    set(initial)
-
-    def set(next: RDD[T]): Unit = {
-      val (rows, handle) = NativeTreeBoost.cacheBlocks(next)
-      // already persisted, so the checkpointer keeps its storage level
-      ck.update(handle)
-      rdd = rows
+  val weightScale: Double =
+    if (!sumOneWeights) 1.0
+    else {
+      val tw = NativeTreeBoost.orderedSum(train.map(_.weight))
+      require(tw > 0.0, s"boosting needs positive total instance weight, got $tw")
+      tw
     }
-  }
+
+  private val scaled =
+    if (!sumOneWeights) train
+    else {
+      val tw = weightScale
+      train.map(i => Instance(i.label, i.weight / tw, i.features))
+    }
+  private val metadata = DecisionTreeMetadata.buildMetadata(scaled, strategy, numTrees, "all")
+  private val splits = GraftTreeShim.findSplits(scaled, metadata, dtSeed)
+  val bcSplits: Broadcast[Array[Array[Split]]] = scaled.sparkContext.broadcast(splits)
+
+  /** `instances`, their weights already divided by [[weightScale]], binned
+    * with the training splits, row for row.
+    */
+  def bin(instances: RDD[Instance]): RDD[TreePoint] =
+    TreePoint.convertToTreeRDD(instances, splits, metadata)
 
   /** The induction's `numTrees` trees on `points` (the binned table,
     * reweighted for the round), each on its own row sample drawn from one
@@ -158,38 +121,27 @@ private[graft] final class NativeTreeBoost private (
     */
   def grow(bagged: RDD[BaggedPoint[TreePoint]]): Array[DecisionTreeModel] =
     GraftTreeShim.grow(bagged, metadata, bcSplits, strategy, numTrees, dtSeed)
-
-  /** Always runs (the loops call it from `finally`): frees the state caches
-    * and checkpoint files, the binned tables, the instance cache and the
-    * splits broadcast — a failed fit must not leak reliable checkpoint
-    * directories (ContextCleaner never deletes them) or corpus-sized cached
-    * RDDs into the surviving session.
-    */
-  def close(): Unit = {
-    checkpointers.foreach { ck => ck.unpersistDataSet(); ck.deleteAllCheckpoints() }
-    blocks.foreach(_.unpersist(blocking = false))
-    bcSplits.destroy()
-  }
 }
 
 private[graft] object NativeTreeBoost {
 
-  /** The bin-once backend for `learner` over `instances`, or None when the
-    * learner takes the `Predictor` backend: the one place that decides.
-    * It takes a Spark DecisionTreeRegressor, and a DecisionTreeClassifier
-    * when `numClasses` > 0, the class count the caller resolved from the
-    * label metadata; callers whose labels are not classes (a regressor's
-    * targets, GBM's gradients) pass 0. The tree strategy is the one
-    * Spark's own fit of that learner builds, the seed the learner's.
-    * `numTrees` is the tree count of every induction.
+  /** The bin-once backend for `learner`, or None when the learner takes
+    * the `Predictor` backend: the one place that decides. It takes a Spark
+    * DecisionTreeRegressor, and a DecisionTreeClassifier when `numClasses`
+    * > 0, the class count the caller resolved from the label metadata;
+    * callers whose labels are not classes (a regressor's targets, GBM's
+    * gradients) pass 0. The tree strategy is the one Spark's own fit of
+    * that learner builds over the `features` column, the seed the
+    * learner's. `numTrees` is the tree count of every induction. The
+    * result builds the binning from the training instances, which the
+    * caller caches: it reads them several times.
     */
   def apply(
       learner: EnsemblePredictorType,
-      instances: DataFrame,
+      features: StructField,
       numClasses: Int,
       numTrees: Int = 1,
-      sumOneWeights: Boolean = false,
-      hasVal: Boolean = false): Option[NativeTreeBoost] = {
+      sumOneWeights: Boolean = false): Option[RDD[Instance] => NativeTreeBoost] = {
     val tree: Option[(DecisionTreeParams, Int, OldAlgo.Algo, OldImpurity)] = learner match {
       case dt: DecisionTreeRegressor => Some((dt, 0, OldAlgo.Regression, dt.getOldImpurity))
       case dt: DecisionTreeClassifier if numClasses > 0 =>
@@ -197,10 +149,9 @@ private[graft] object NativeTreeBoost {
       case _ => None
     }
     tree.map { case (dt, k, algo, impurity) =>
-      val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
-      new NativeTreeBoost(
-        instances, dt.getOldStrategy(categorical, k, algo, impurity, 1.0), dt.getSeed,
-        numTrees, sumOneWeights, hasVal)
+      val strategy = dt.getOldStrategy(
+        MetadataUtils.getCategoricalFeatures(features), k, algo, impurity, 1.0)
+      train => new NativeTreeBoost(train, strategy, dt.getSeed, numTrees, sumOneWeights)
     }
   }
 

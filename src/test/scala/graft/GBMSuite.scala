@@ -148,21 +148,41 @@ class GBMSuite extends graft.SparkSpec {
   test("quantile GBM refits in one JVM give bit-identical predictions") {
     // Brent amplifies ulp noise in its objective on the piecewise-linear
     // quantile loss, so the step search must sum in a fixed order: summed
-    // in task-completion order, the round-3 step moved from fit to fit
-    def fit() = new GBMRegressor()
-      .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(3).setSeed(1))
-      .setMaxIter(4)
-      .setLearningRate(0.5)
-      .setLoss("quantile")
-      .setSeed(0L)
-      .fit(regDf)
+    // in task-completion order, the round-3 step moved from fit to fit.
+    // The Predictor backend's fits sum in the same fixed order: its GBM
+    // step search and validation loss, and its AdaBoost weight sums.
     val features = regDf.collect().map(_.getAs[Vector](1))
-    val fits = Seq.fill(4)(fit())
-    def bits(m: GBMRegressionModel) =
-      features.map(m.predict).map(java.lang.Double.doubleToLongBits).toSeq
-    fits.tail.foreach { m =>
-      assert(m.modelWeights.toSeq === fits.head.modelWeights.toSeq)
-      assert(bits(m) === bits(fits.head))
+    def same(fit: () => (Seq[Double], Vector => Double)): Unit = {
+      val fits = Seq.fill(4)(fit())
+      def bits(predict: Vector => Double) =
+        features.map(predict).map(java.lang.Double.doubleToLongBits).toSeq
+      fits.tail.foreach { case (weights, predict) =>
+        assert(weights === fits.head._1)
+        assert(bits(predict) === bits(fits.head._2))
+      }
+    }
+    def gbm(fast: Boolean, loss: String, withVal: Boolean) = () => {
+      val m = new GBMRegressor()
+        .setBaseLearner(
+          PredictorBackend.pin(fast, new DecisionTreeRegressor().setMaxDepth(3).setSeed(1)))
+        .setMaxIter(4)
+        .setLearningRate(0.5)
+        .setLoss(loss)
+        .setValidationIndicatorCol(if (withVal) "isVal" else "")
+        .setSeed(0L)
+        .fit(regDf.withColumn("isVal", col("label") > 12))
+      (m.modelWeights.toSeq, m.predict _)
+    }
+    same(gbm(fast = true, "quantile", withVal = false))
+    same(gbm(fast = false, "quantile", withVal = true))
+    val cls = regDf.withColumn("label", (col("label") > 7).cast("double"))
+    same { () =>
+      val m = new BoostingClassifier()
+        .setBaseLearner(
+          PredictorBackend.pin(false, new DecisionTreeClassifier().setMaxDepth(2).setSeed(1)))
+        .setNumBaseLearners(4)
+        .fit(cls)
+      (m.modelWeights.toSeq, m.predictProbability(_: Vector)(1))
     }
   }
 

@@ -12,8 +12,9 @@ import org.apache.spark.ml.graft.util.GraftUtils
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.regression.DecisionTreeRegressor
 import org.apache.spark.ml.tree.impl.GraftTreeShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.col
 
 import graft.{PredictorBackend, SparkSpec}
@@ -167,16 +168,28 @@ class InstrumentationSuite extends SparkSpec {
   private case class Job(site: String, stack: String, stages: Int, tasks: Int) {
     // a bin-once induction's job, on either of its paths
     def isTree: Boolean = stack.contains("GraftTreeShim$.grow(")
+    // a job of Spark's own tree fit
+    def isSparkFit: Boolean = stack.contains("DecisionTreeClassifier.$anonfun$train$") ||
+      stack.contains("DecisionTreeRegressor.$anonfun$train$")
   }
 
   private def jobs(body: => Unit): Seq[Job] = {
     val sc = spark.sparkContext
     val started = ArrayBuffer.empty[Job]
+    // a SQL query's jobs may start on another thread, whose stack ends at
+    // the thread pool: they take the stack of the query's action instead
+    val queries = scala.collection.mutable.Map.empty[String, String]
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case q: SparkListenerSQLExecutionStart => queries(q.executionId.toString) = q.details
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val result = e.stageInfos.maxBy(_.stageId)
+        val query = Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        val stack = query.flatMap(queries.get).getOrElse(result.details)
         started.synchronized {
-          started += Job(result.name, result.details, e.stageInfos.length, result.numTasks)
+          started += Job(result.name, stack, e.stageInfos.length, result.numTasks)
         }
       }
     }
@@ -198,42 +211,52 @@ class InstrumentationSuite extends SparkSpec {
     // small input's round grows its tree in one job of one stage and one
     // task; a large input's in one job per level, each of two stages (the
     // per-node histogram merge is a shuffle on the executors, and only
-    // the chosen splits are collected).
-    def roundJobs(fit: Int => Unit, oneTask: Boolean): (Int, Seq[String], Seq[String]) = {
+    // the chosen splits are collected). On the opaque-tree backend
+    // (`oneTask` None) the tree jobs are those of Spark's own fit.
+    def roundJobs(fit: Int => Unit, oneTask: Option[Boolean]): (Int, Seq[String], Seq[String]) = {
       def outside(rounds: Int) = {
-        val (trees, other) = jobs(fit(rounds)).partition(_.isTree)
+        val all = jobs(fit(rounds))
+        val (trees, other) = all.partition(j => if (oneTask.isEmpty) j.isSparkFit else j.isTree)
         val shapes = trees.map(j => (j.stages, j.tasks))
-        if (oneTask) {
-          assert(trees.length === rounds, s"one tree job per round: $shapes among $other")
-          assert(shapes.forall(_ == ((1, 1))), s"tree jobs (stages, tasks): $shapes")
-        } else {
-          assert(trees.length > rounds, s"level jobs: $shapes among $other")
-          assert(shapes.forall(_._1 == 2), s"level jobs (stages, tasks): $shapes")
+        oneTask match {
+          case Some(true) =>
+            assert(trees.length === rounds, s"one tree job per round: $shapes among $other")
+            assert(shapes.forall(_ == ((1, 1))), s"tree jobs (stages, tasks): $shapes")
+          case Some(false) =>
+            assert(trees.length > rounds, s"level jobs: $shapes among $other")
+            assert(shapes.forall(_._1 == 2), s"level jobs (stages, tasks): $shapes")
+          case None =>
+            assert(trees.length >= rounds, s"Spark's fit jobs: $shapes among $other")
+            assert(!all.exists(_.isTree), s"no bin-once tree job: $all")
         }
         other.map(_.site)
       }
       val (two, three) = (outside(2), outside(3))
       (three.length - two.length, two, three)
     }
-    def gbm(data: DataFrame)(n: Int): Unit =
+    def gbm(data: DataFrame, fast: Boolean)(n: Int): Unit =
       new GBMRegressor()
-        .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2).setSeed(1))
+        .setBaseLearner(
+          PredictorBackend.pin(fast, new DecisionTreeRegressor().setMaxDepth(2).setSeed(1)))
         .setMaxIter(n)
         .setSeed(1)
         .fit(data)
-    for ((data, oneTask) <- Seq(df -> true, wideDf -> false)) {
-      val (rounds, gbm2, gbm3) = roundJobs(gbm(data), oneTask)
+    for ((data, oneTask) <- Seq(df -> Some(true), wideDf -> Some(false), df -> None)) {
+      val (rounds, gbm2, gbm3) = roundJobs(gbm(data, fast = oneTask.isDefined), oneTask)
       assert(rounds === 1, s"GBM squared loss (one task: $oneTask): the step pass only; " +
         s"2 rounds $gbm2, 3 rounds $gbm3")
     }
-    val (samme, samme2, samme3) = roundJobs(n =>
-      new BoostingClassifier()
-        .setBaseLearner(new DecisionTreeClassifier().setMaxDepth(1).setSeed(1))
-        .setAlgorithm("real")
-        .setNumBaseLearners(n)
-        .fit(clsDf), oneTask = true)
-    assert(samme === 2,
-      s"SAMME.R: the weight sum and the weighted error; 2 rounds $samme2, 3 rounds $samme3")
+    for (fast <- Seq(true, false)) {
+      val (samme, samme2, samme3) = roundJobs(n =>
+        new BoostingClassifier()
+          .setBaseLearner(
+            PredictorBackend.pin(fast, new DecisionTreeClassifier().setMaxDepth(1).setSeed(1)))
+          .setAlgorithm("real")
+          .setNumBaseLearners(n)
+          .fit(clsDf), oneTask = if (fast) Some(true) else None)
+      assert(samme === 2, s"SAMME.R (fast: $fast): the weight sum and the weighted error; " +
+        s"2 rounds $samme2, 3 rounds $samme3")
+    }
   }
 
   test("a VectorAssembler-built features column gives its width with no Spark job") {

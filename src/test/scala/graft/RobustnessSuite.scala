@@ -41,35 +41,34 @@ class RobustnessSuite extends SparkSpec {
   }
 
   test("reliable checkpoint mode: loop survives cached-block loss and cleans up files") {
-    import org.apache.spark.sql.graft.DatasetUtils
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isDefined) // SparkSpec sets it session-wide
-    val ckptDir = sc.getCheckpointDir.get
-    val ckptRoot =
-      if (ckptDir.startsWith("file:")) new java.io.File(new java.net.URI(ckptDir))
-      else new java.io.File(ckptDir)
+    def file(path: String) =
+      if (path.startsWith("file:")) new java.io.File(new java.net.URI(path))
+      else new java.io.File(path)
+    val ckptRoot = file(sc.getCheckpointDir.get)
 
-    // 1) Dataset.checkpoint(true) under a checkpoint dir is RELIABLE:
-    //    wiping every cached block (the executor-storage-loss simulation —
-    //    localCheckpoint dies here by contract) must not lose the data.
-    val base = df.withColumn("wt", lit(1.0)).persist()
-    base.count()
-    val cp = base.checkpoint(eager = true)
-    val file = DatasetUtils.checkpointFile(cp)
-    assert(file.isDefined, "reliable checkpoint must report its file")
+    // 1) a boosting loop's state checkpoints RELIABLY under a checkpoint
+    //    dir: wiping every cached block (the executor-storage-loss
+    //    simulation — a local checkpoint dies here by contract) must not
+    //    lose its rows, which come back from the checkpoint files
+    val labels = df.rdd.map(_.getDouble(0))
+    val (rows, close) = LoopState.checkpointed(labels)
+    val blocks = rows.dependencies.head.rdd
+    assert(blocks.getCheckpointFile.isDefined, "the state value must be checkpointed to files")
     sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    DatasetUtils.freeCheckpointBlocks(cp)
-    assert(cp.count() === 300, "checkpointed data must recompute from files after block loss")
-    assert(cp.agg(sum("wt")).head().getDouble(0) === 300.0)
-    DatasetUtils.deleteCheckpointFile(file.get, cp)
+    assert(rows.collect().toSeq === labels.collect().toSeq,
+      "checkpointed rows must come back from files after block loss")
+    close()
+    assert(!file(blocks.getCheckpointFile.get).exists(),
+      "close must delete the state's checkpoint files")
 
     // 2) a boosting fit checkpointing EVERY iteration through the same
     //    path: fit works and close() leaves no checkpoint files behind
     def rddDirs() = Option(ckptRoot.listFiles()).getOrElse(Array.empty[java.io.File])
       .filter(_.getName.startsWith("rdd-"))
-    // both loop implementations must clean up: the native-tree fast path
-    // (PeriodicRDDCheckpointer over the boost-weight RDD) and the generic
-    // DataFrame loop (IterLoopCache)
+    // both learner backends must clean up: the native-tree fast path and
+    // the Predictor backend keep their boost weights in the same State
     for (fast <- Seq(true, false)) {
       val before = rddDirs().map(_.getName).toSet
       val model = new BoostingRegressor()
